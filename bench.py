@@ -192,66 +192,6 @@ HEADLINE = [
 ]
 
 
-# BENCH_r10's compare flagged these 5 at >=1.5x vs BENCH_r09 raw. The
-# judge's adjudication: 4 of 5 had zero code changes since r9 and the
-# unchanged flagship drifted 1.48x in the same run — machine drift,
-# not regression — but the discharge needs a REPRODUCED number, not an
-# argument. Rule (VERDICT.md round 10): each query is discharged when
-# its flagship-normalized ratio vs r9 — (new/r9_sec) divided by
-# (new_flagship/r9_flagship) — lands below 1.25; otherwise it is a
-# reproduced regression and must be root-caused. Values are verbatim
-# from BENCH_r09.json / BENCH_r10.json.
-FLAGGED_R10 = {
-    "flagship": {"r9": 1.03, "r10": 1.52},
-    # q_coverage_greedy was the ONE reproduced regression (1.347
-    # normalized on the round-11 quiet re-run): root cause = round
-    # 10's covered-set rework added a per-round driver round-trip
-    # (collect the winner's ~90 bigrams, re-ship via createDataFrame)
-    # on top of the broadcast anti-join. Fixed in round 11 by keeping
-    # covered entirely executor-side as the broadcast subquery `tok
-    # where doc_id in selected` (plan still constant-size: only the
-    # <= K literal ids) — identical selection, 1-row argmax is now the
-    # only per-round transfer. Re-measured min-of-3 after a flagship
-    # calibration: 10.585s vs flagship 1.223s -> normalized-vs-r9
-    # (10.585/8.77)/(1.223/1.03) = 1.02 — discharged.
-    "q_coverage_greedy": {"r9": 8.77, "r10": 17.09},
-    "q_similarity_ivf_kmeans_topk": {"r9": 3.67, "r10": 7.00},
-    "q_quality_classifier": {"r9": 7.71, "r10": 13.71},
-    "q_dbscan_grid": {"r9": 8.46, "r10": 14.89},
-    "q_suffix_dedup_apply_keep_first": {"r9": 3.92, "r10": 6.21},
-}
-
-
-def flagged_adjudication(timings: dict[str, float], threshold: float = 1.25):
-    """Flagship-normalized re-adjudication of the round-10 flags: the
-    flagship query is the machine-speed control (trivial, untouched
-    since round 1), so dividing each query's vs-r9 ratio by the
-    flagship's vs-r9 ratio cancels VM drift and leaves only true plan
-    regressions."""
-    if "flagship" not in timings:
-        return None
-    cal = timings["flagship"] / FLAGGED_R10["flagship"]["r9"]
-    out = {"flagship_vs_r9": round(cal, 3), "threshold": threshold, "queries": {}}
-    for name, ref in FLAGGED_R10.items():
-        if name == "flagship" or name not in timings:
-            continue
-        raw = timings[name] / ref["r9"]
-        norm = raw / cal if cal > 0 else None
-        out["queries"][name] = {
-            "r9": ref["r9"],
-            "r10": ref["r10"],
-            "now": timings[name],
-            "raw_vs_r9": round(raw, 3),
-            "normalized_vs_r9": round(norm, 3) if norm is not None else None,
-            "verdict": (
-                "no_calibration"
-                if norm is None
-                else ("discharged" if norm < threshold else "REGRESSION")
-            ),
-        }
-    return out
-
-
 def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
     """Merge this run's timings into BENCH_CUMULATIVE.json — the
     on-disk proof that every registry query has been benched at least
@@ -278,31 +218,36 @@ def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
         print(f"WARNING: BENCH_CUMULATIVE.json write failed: {e}", file=sys.stderr)
 
 
+def latest_bench_artifact(root: str) -> str | None:
+    """The main-run ``BENCH_r<N>.json`` in ``root`` with the largest
+    integer N (so r9 < r13 with or without zero padding), or None.
+    Variant artifacts are skipped: BENCH_r12_c8.json is the driver's
+    8-core SCALING run — taking it as "latest" made every 32-core
+    compare flag queries at exactly their 8/32-core ratios
+    (measurement bug found in round 13; the r13-entry run "flagged"
+    q_fellegi_sunter at 2.79x = its scaling ratio, not a regression)."""
+    import glob
+    import re
+
+    runs = {}
+    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
+        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
+        if m:
+            runs[int(m[1])] = p
+    return runs[max(runs)] if runs else None
+
+
 def compare_block(timings: dict[str, float], threshold: float = 1.5):
     """Round-over-round comparison vs the latest BENCH_r{N}.json, so a
     regression is separable from environment noise without re-deriving:
     same-query ratios < ``threshold`` are within the documented VM
     variance band (round-2 ran untouched round-1 queries 1.5-2x slower
     under identical code); larger ones are listed for review."""
-    import glob
     import re
 
-    benches = sorted(
-        p
-        for p in glob.glob(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json")
-        )
-        # Main-run artifacts only: BENCH_r12_c8.json is the driver's
-        # 8-core SCALING run — sorting it as "latest" made every
-        # 32-core compare flag queries at exactly their 8/32-core
-        # ratios (measurement bug found in round 13; the r13-entry
-        # run "flagged" q_fellegi_sunter at 2.79x = its scaling
-        # ratio, not a regression).
-        if re.fullmatch(r"BENCH_r\d+\.json", os.path.basename(p))
-    )
-    if not benches:
+    path = latest_bench_artifact(os.path.dirname(os.path.abspath(__file__)))
+    if path is None:
         return None
-    path = benches[-1]
     try:
         with open(path, encoding="utf-8") as f:
             doc = json.load(f)
@@ -431,9 +376,6 @@ def main() -> None:
     cmp_block = compare_block(timings)
     if cmp_block is not None:
         verbose["compare"] = cmp_block
-    adj = flagged_adjudication(timings)
-    if adj is not None:
-        verbose["flagged_adjudication"] = adj
     update_cumulative_ledger(timings, sf)
     try:
         here = os.path.dirname(os.path.abspath(__file__))

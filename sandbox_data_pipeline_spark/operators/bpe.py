@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS, fits_local
+
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over whitespace tokens — the one corpus-sized pass."""
@@ -144,7 +146,6 @@ def bpe_merges(
     n_merges: int = 6,
     min_count: int = 2,
     text_col: str = "text",
-    driver_vocab_max: int = 1_000_000,
 ) -> DataFrame:
     """Learn up to ``n_merges`` BPE merges from the corpus. Returns a
     DataFrame (merge_rank, sym_a, sym_b, pair_count) — the merge table
@@ -155,8 +156,8 @@ def bpe_merges(
     Execution: the corpus reduces ONCE to (distinct word, count); the
     vocabulary is a BOUNDED aggregate (word types, not corpus rows —
     ~1M for natural language at any corpus size), so when it fits
-    under ``driver_vocab_max`` the merge loop runs driver-side in
-    plain Python after a single Spark job — the architecture every
+    under local_solve's "bpe_vocab" cap the merge loop runs driver-side
+    in plain Python after a single Spark job — the architecture every
     production BPE trainer uses (distributed counting, local
     learning), and ~6x faster here than scheduling 2 Spark jobs per
     merge round on a tiny vocab frame. Vocabularies over the bound
@@ -165,16 +166,17 @@ def bpe_merges(
     whose results are identical (tests pin the equivalence)."""
     spark = docs.sparkSession
     wc = word_counts(docs, text_col=text_col)
-    if driver_vocab_max > 0:
-        head = wc.limit(driver_vocab_max + 1).collect()
-        if len(head) <= driver_vocab_max:
-            learned = _learn_merges_local(
-                [(r["word"], r["cnt"]) for r in head], n_merges, min_count
-            )
-            return spark.createDataFrame(
-                learned,
-                "merge_rank int, sym_a string, sym_b string, pair_count long",
-            )
+    cap = LOCAL_CAPS["bpe_vocab"]
+    # the probe IS the local solve's input; a zero cap skips it
+    head = wc.limit(cap + 1).collect() if cap else []
+    if fits_local("bpe_vocab", len(head)):
+        learned = _learn_merges_local(
+            [(r["word"], r["cnt"]) for r in head], n_merges, min_count
+        )
+        return spark.createDataFrame(
+            learned,
+            "merge_rank int, sym_a string, sym_b string, pair_count long",
+        )
     words = (
         wc.select("word", "cnt", _initial_symbols().alias("sym"))
         # EAGER: each merge round collects a 1-row argmax; a lazy

@@ -29,6 +29,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
 from sandbox_data_pipeline_spark.queries._envproof import stable_round
 from pyspark.sql import functions as F
 
@@ -337,12 +338,10 @@ def minhash_candidate_pairs(
     )
 
 
-# Connected-components sizing (duplicate_clusters). One task's
-# union-find budget: 4M edges is ~64 MB of int64 ids, with np.unique's
-# ~4x transient — well inside an executor task's memory. Contraction
+# Connected-components sizing (duplicate_clusters; the one-task
+# union-find budget is local_solve's "cc_edges"). Contraction
 # partitions target ~2M edges (~32 MB Arrow in flight, matching the
 # session's maxBytesPerBatch posture).
-CC_LOCAL_EDGE_CAP = 4_000_000
 CC_CONTRACT_TARGET = 2_000_000
 CC_MAX_CONTRACTIONS = 12
 
@@ -425,7 +424,6 @@ def duplicate_clusters(
     pairs: DataFrame,
     max_iter: int = 20,
     stats: dict | None = None,
-    local_cap: int = CC_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Resolve near-duplicate PAIRS into CLUSTERS (connected
     components): output (doc_id, cluster_id) where cluster_id is the
@@ -436,7 +434,8 @@ def duplicate_clusters(
     loop dominated every CC query at bench scale: ~1.5 s/round x 12
     rounds on a 1,711-node graph):
 
-    1. While the edge count exceeds ``local_cap``, run per-partition
+    1. While the edge count exceeds the "cc_edges" local-solve cap
+       (operators/local_solve.py), run per-partition
        CONTRACTION passes: partition edges by a deterministic synthetic
        key (pmod(xxhash64(a,b))) — skew-proof, retry-stable — and let
        one vectorized union-find per partition replace its edges by the
@@ -444,7 +443,7 @@ def duplicate_clusters(
        exactly; dense near-dup components collapse to (n-1) star rows,
        so real dup graphs shrink geometrically. One shuffle + one
        mapInPandas + one count per pass.
-    2. Once the survivor graph is under ``local_cap`` (~64 MB of ids),
+    2. Once the survivor graph is under the cap (~64 MB of ids),
        ONE task solves it exactly with vectorized min-label pointer
        jumping (O(E log n) numpy work, no per-round Spark jobs).
     3. If contraction stalls (matching-like graphs shrink < 25%/pass)
@@ -466,7 +465,11 @@ def duplicate_clusters(
     n_edges = edges.count()
     passes = 0
     stalled = False
-    while n_edges > local_cap and passes < CC_MAX_CONTRACTIONS:
+    while (
+        n_edges
+        and not fits_local("cc_edges", n_edges)
+        and passes < CC_MAX_CONTRACTIONS
+    ):
         n_parts = max(-(-n_edges // CC_CONTRACT_TARGET), sc.defaultParallelism)
         key = F.pmod(F.xxhash64(F.col("a"), F.col("b")), F.lit(n_parts * 64))
         contracted = (
@@ -482,7 +485,7 @@ def duplicate_clusters(
         n_edges = n_next
         if stalled:
             break
-    if n_edges > local_cap:
+    if not fits_local("cc_edges", n_edges):
         labels, rounds = _cc_propagation_loop(edges, max_iter)
         edges.unpersist()
     else:

@@ -21,17 +21,46 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# One task's numpy budget for the capped local solve (r12): identical
-# discipline to operators/dedup.CC_LOCAL_EDGE_CAP — the per-round Spark
-# overhead of the BSP loops dominates bench-scale graphs, so graphs
-# whose edge frame fits one task's memory are solved in ONE mapInPandas
-# job. Every float recursion keeps its exact per-iteration formula (only
-# partial-sum ORDER differs — the same 1e-15 drift already absorbed by
-# the cross-engine oracle rounding); integer algorithms (LPA, BFS, HITS,
-# k-core) are bit-identical. All final rounding stays in Spark
-# expressions shared with the distributed loop. Above the cap the
-# unchanged BSP loops run.
-GRAPH_LOCAL_EDGE_CAP = 4_000_000
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+
+# Capped local solve (r12; the cap is local_solve's "graph_edges"): the
+# per-round Spark overhead of the BSP loops dominates bench-scale
+# graphs, so graphs whose edge frame fits one task's memory are solved
+# in ONE mapInPandas job (_solve_local). Every float recursion keeps
+# its exact per-iteration formula (only partial-sum ORDER differs — the
+# same 1e-15 drift already absorbed by the cross-engine oracle
+# rounding); integer algorithms (LPA, BFS, HITS, k-core) are
+# bit-identical. All final rounding stays in Spark expressions shared
+# with the distributed loop. Above the cap the unchanged BSP loops run.
+
+
+def _solve_local(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    solver,
+    schema: str,
+    seeds: DataFrame | None = None,
+) -> DataFrame:
+    """The one-task branch every graph hybrid shares: rename the edge
+    columns to (a, b), append ``seeds`` (first column) as rows marked
+    m=1 when given, and run ``solver`` over everything in ONE
+    mapInPandas task, eagerly cut. ``{id}`` in ``schema`` stands for
+    the node id type."""
+    id_t = edges.schema[src].dataType.simpleString()
+    ab = [F.col(src).alias("a"), F.col(dst).alias("b")]
+    if seeds is None:
+        marked = edges.select(*ab)
+    else:
+        s = F.col(seeds.columns[0])
+        marked = edges.select(*ab, F.lit(0).alias("m")).unionByName(
+            seeds.select(s.alias("a"), s.alias("b"), F.lit(1).alias("m"))
+        )
+    return (
+        marked.repartition(1)
+        .mapInPandas(solver, schema.format(id=id_t))
+        .localCheckpoint(eager=True)
+    )
 
 
 def _gather_marked(batches):
@@ -293,7 +322,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     checkpoint_every: int = 4,
-    local_cap: int = GRAPH_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Fixed-iteration PageRank over a directed edge list (sink-node
     dangling mass redistributed uniformly). For undirected graphs,
@@ -312,16 +340,13 @@ def pagerank(
     # replay iterations+1 times. Same discipline as
     # duplicate_clusters: materialize once, iterate over the blocks.
     edges = edges.localCheckpoint(eager=False)
-    if local_cap and edges.count() <= local_cap:
-        id_t = edges.schema[src].dataType.simpleString()
-        state = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .repartition(1)
-            .mapInPandas(
-                _pagerank_local(damping, iterations),
-                f"node {id_t}, deg long, n_nodes long, rank double",
-            )
-            .localCheckpoint(eager=True)
+    if fits_local("graph_edges", edges.count()):
+        state = _solve_local(
+            edges,
+            src,
+            dst,
+            _pagerank_local(damping, iterations),
+            "node {id}, deg long, n_nodes long, rank double",
         )
         return state.select(
             "node",
@@ -399,7 +424,6 @@ def label_propagation(
     iterations: int = 4,
     src: str = "src",
     dst: str = "dst",
-    local_cap: int = GRAPH_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Fixed-iteration synchronous label propagation (Raghavan et al.
     2007) — community detection on a pair graph. Each node starts
@@ -421,15 +445,9 @@ def label_propagation(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     edges = edges.localCheckpoint(eager=False)
-    if local_cap and edges.count() <= local_cap:
-        id_t = edges.schema[src].dataType.simpleString()
-        return (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .repartition(1)
-            .mapInPandas(
-                _lpa_local(iterations), f"node {id_t}, label {id_t}"
-            )
-            .localCheckpoint(eager=True)
+    if fits_local("graph_edges", edges.count()):
+        return _solve_local(
+            edges, src, dst, _lpa_local(iterations), "node {id}, label {id}"
         )
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("node"))
     labels = (
@@ -470,7 +488,6 @@ def bfs_distances(
     max_hops: int = 4,
     src: str = "src",
     dst: str = "dst",
-    local_cap: int = GRAPH_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Bounded-hop BFS from a seed set: min-plus relaxation, one round
     per hop — dist(v) after round k is the length of the shortest
@@ -486,21 +503,9 @@ def bfs_distances(
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
     edges = edges.localCheckpoint(eager=False)
-    if local_cap and edges.count() <= local_cap:
-        id_t = edges.schema[src].dataType.simpleString()
-        marked = edges.select(
-            F.col(src).alias("a"), F.col(dst).alias("b"), F.lit(0).alias("m")
-        ).unionByName(
-            seeds.select(
-                F.col(seeds.columns[0]).alias("a"),
-                F.col(seeds.columns[0]).alias("b"),
-                F.lit(1).alias("m"),
-            )
-        )
-        return (
-            marked.repartition(1)
-            .mapInPandas(_bfs_local(max_hops), f"node {id_t}, dist int")
-            .localCheckpoint(eager=True)
+    if fits_local("graph_edges", edges.count()):
+        return _solve_local(
+            edges, src, dst, _bfs_local(max_hops), "node {id}, dist int", seeds
         )
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("node"))
     dist = seeds.select(
@@ -525,7 +530,6 @@ def hits(
     iterations: int = 3,
     src: str = "src",
     dst: str = "dst",
-    local_cap: int = GRAPH_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Fixed-iteration HITS (Kleinberg 1999) in EXACT int64 arithmetic:
     authority(i) = Σ hub(j) over in-edges, hub(i) = Σ authority(j)
@@ -543,15 +547,9 @@ def hits(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     edges = edges.localCheckpoint(eager=False)
-    if local_cap and edges.count() <= local_cap:
-        id_t = edges.schema[src].dataType.simpleString()
-        state = (
-            edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-            .repartition(1)
-            .mapInPandas(
-                _hits_local(iterations), f"node {id_t}, a long, h long"
-            )
-            .localCheckpoint(eager=True)
+    if fits_local("graph_edges", edges.count()):
+        state = _solve_local(
+            edges, src, dst, _hits_local(iterations), "node {id}, a long, h long"
         )
     else:
         nodes = (
@@ -663,7 +661,6 @@ def personalized_pagerank(
     iterations: int = 4,
     src: str = "src",
     dst: str = "dst",
-    local_cap: int = GRAPH_LOCAL_EDGE_CAP,
 ) -> DataFrame:
     """Personalized PageRank: random walk with restart onto ``seeds``
     (one column ``node``) — influence/contamination mass flowing FROM
@@ -680,23 +677,14 @@ def personalized_pagerank(
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
     edges = edges.localCheckpoint(eager=False)
-    if local_cap and edges.count() <= local_cap:
-        id_t = edges.schema[src].dataType.simpleString()
-        marked = edges.select(
-            F.col(src).alias("a"), F.col(dst).alias("b"), F.lit(0).alias("m")
-        ).unionByName(
-            seeds.select(
-                F.col("node").alias("a"), F.col("node").alias("b"),
-                F.lit(1).alias("m"),
-            )
-        )
-        state = (
-            marked.repartition(1)
-            .mapInPandas(
-                _ppr_local(damping, iterations),
-                f"node {id_t}, deg long, is_seed long, rank double",
-            )
-            .localCheckpoint(eager=True)
+    if fits_local("graph_edges", edges.count()):
+        state = _solve_local(
+            edges,
+            src,
+            dst,
+            _ppr_local(damping, iterations),
+            "node {id}, deg long, is_seed long, rank double",
+            seeds.select("node"),
         )
         return state.select(
             "node", "deg", "is_seed", F.round("rank", 6).alias("ppr")

@@ -50,6 +50,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+
 # fixed-point scale: weights and sigmoid live in units of 2^-20
 Q_SCALE = 1 << 20
 Q_HALF = 1 << 19
@@ -147,12 +149,6 @@ def _wmap(weights: list[int]):
     )
 
 
-# One task's training budget: 8M (doc_id, j, cnt, y) int64 rows is
-# ~256 MB of arrays — the same executor-task sizing discipline as
-# KMEANS_LOCAL_CELL_CAP / CC_LOCAL_EDGE_CAP.
-LR_LOCAL_ROW_CAP = 8_000_000
-
-
 def _lr_solve_local(iters: int):
     """All T gradient steps in one task, bit-identical to the
     distributed loop: every quantity is an int64 sum (association-free)
@@ -212,16 +208,15 @@ def train_quality_lr(
     feats: DataFrame,
     labels: DataFrame,
     iters: int = Q_ITERS,
-    local_cap: int = LR_LOCAL_ROW_CAP,
 ) -> list[int]:
     """T fixed preconditioned gradient steps; returns the integer
     weight vector (length Q_NFEATS, scale 2^-20).
 
     Capped local solve (r12): when the joined feature frame fits one
-    task's budget, ALL T steps run in a single mapInPandas task
-    (_lr_solve_local) — the arithmetic is integer/dyadic-exact, so the
-    weights are bit-identical to the distributed loop, enforced by a
-    both-paths test. Plan: one count + one 1-partition shuffle + one
+    task's budget (local_solve's "lr_rows"), ALL T steps run in a
+    single mapInPandas task (_lr_solve_local) — the arithmetic is
+    integer/dyadic-exact, so the weights are bit-identical to the
+    distributed loop, enforced by a both-paths test. Plan: one count + one 1-partition shuffle + one
     task + one Q_NFEATS-row collect, replacing T cache-scan jobs and
     T+1 bounded collects. Above the cap, the distributed loop below is
     unchanged: per step ONE job whose per-doc margin z is a WINDOW sum
@@ -239,7 +234,7 @@ def train_quality_lr(
         .persist()
     )
     try:
-        if base.count() <= local_cap:
+        if fits_local("lr_rows", base.count()):
             rows = (
                 base.repartition(1)
                 .mapInPandas(_lr_solve_local(iters), "j long, w long")

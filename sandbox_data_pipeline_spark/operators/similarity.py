@@ -22,6 +22,8 @@ import hashlib
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+
 
 def _dot(a: str, b: str) -> Column:
     return F.expr(
@@ -220,13 +222,6 @@ def ivf_centroids_kmeans(
     return [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
 
 
-# Local-solve budget for the exact k-means trainer (r12): quantized
-# int64 cells (n_vectors x dim) one task iterates over in numpy; 8M
-# cells is ~64 MB. Same scale-adaptive discipline as the graph/CC
-# local solves; above the cap the exploded broadcast-join loop runs.
-KMEANS_LOCAL_CELL_CAP = 8_000_000
-
-
 def _kmeans_exact_local(
     cents0: list[list[int]], n_centroids: int, n_iter: int, dim: int
 ):
@@ -315,8 +310,9 @@ def ivf_centroids_kmeans_exact(
     init = qv.orderBy("vid").limit(n_centroids).collect()
     cents: list[list[int]] = [[c * 100 for c in r["q"]] for r in init]
 
-    if qv.count() * dim <= KMEANS_LOCAL_CELL_CAP:
-        # capped local solve (r12): every Lloyd iteration in one task —
+    if fits_local("kmeans_cells", qv.count() * dim):
+        # capped local solve (r12): every Lloyd iteration in one task
+        # over the quantized int64 cells (n_vectors x dim) —
         # integer-exact, so bit-identical to the loop below. The k*dim
         # result collect is bounded metadata, same as the loop's
         # per-iteration sums collect.

@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+
 
 def global_row_number(
     df: DataFrame,
@@ -273,15 +275,15 @@ def repeated_substrings(
     and the top-k is a TakeOrdered heap, no global sort.
 
     Capped local solve (r12): same gate as duplicate_spans — when the
-    truncated position count fits SPAN_LOCAL_POS_CAP and the corpus is
-    NUL-free ASCII, ONE mapInPandas task runs the suffix sort +
+    truncated position count fits local_solve's "span_positions" cap
+    and the corpus is NUL-free ASCII, ONE mapInPandas task runs the suffix sort +
     adjacent-lcp + top-k (_sa_lcp_arrays, the byte-window sort shared
     with the span solvers, bit-identical rank order), emitting at most
     ``top_k`` rows; the trailing orderBy/limit then runs on <= top_k
     rows. Above the cap / non-ASCII, the construction below is
     unchanged."""
     n_pos, ascii_ok = _span_local_stats(docs, text_col, max_len)
-    if ascii_ok and n_pos <= SPAN_LOCAL_POS_CAP:
+    if ascii_ok and fits_local("span_positions", n_pos):
         local = (
             docs.select(
                 F.col(id_col).alias("doc_id"),
@@ -364,13 +366,6 @@ def _adjacent_lcp_pairs(
         # (measured 8x wall on the keep-first apply at sf0.1)
         .localCheckpoint(eager=False)
     )
-
-
-# One task's span-solve budget: 8M suffix positions is an 8M x max_len
-# uint8 window matrix (~1 GB at max_len=128) sorted once — the same
-# capped local-solve discipline as CC_LOCAL_EDGE_CAP; above it the
-# distributed construction below is unchanged.
-SPAN_LOCAL_POS_CAP = 8_000_000
 
 
 def _span_local_stats(docs: DataFrame, text_col: str, max_len: int):
@@ -687,7 +682,7 @@ def duplicate_spans(
     the cap (or any non-ASCII byte) the distributed construction below
     is unchanged."""
     n_pos, ascii_ok = _span_local_stats(docs, text_col, max_len)
-    if ascii_ok and n_pos <= SPAN_LOCAL_POS_CAP:
+    if ascii_ok and fits_local("span_positions", n_pos):
         return _spans_local(
             docs, min_len, max_len, False, text_col, id_col
         )
@@ -744,7 +739,7 @@ def canonical_duplicate_spans(
     from sandbox_data_pipeline_spark.operators.ids import global_cumsum
 
     n_pos, ascii_ok = _span_local_stats(docs, text_col, max_len)
-    if ascii_ok and n_pos <= SPAN_LOCAL_POS_CAP:
+    if ascii_ok and fits_local("span_positions", n_pos):
         return _spans_local(docs, min_len, max_len, True, text_col, id_col)
     pairs = _adjacent_lcp_pairs(docs, min_len, text_col, id_col, max_len)
     prev = pairs.select(

@@ -291,6 +291,9 @@ def unigram_encode(
 # 1M-char rows would waste padded cells. 16M cells keeps the matrices
 # under ~0.5 GB; above it the original pandas-slice path runs unchanged
 # (identical arithmetic — both are pinned to viterbi_py in tests).
+# Not in operators/local_solve.LOCAL_CAPS: it is read inside the Python
+# worker, where a driver-side table cannot reach it, and it picks a
+# batch kernel, not local versus distributed.
 VITERBI_DENSE_CELL_CAP = 16_000_000
 
 

@@ -2033,19 +2033,17 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     from sandbox_data_pipeline_spark.operators.graph import (
-        GRAPH_LOCAL_EDGE_CAP,
         _kcore_local,
+        _solve_local,
     )
+    from sandbox_data_pipeline_spark.operators.local_solve import fits_local
 
-    if e.count() <= GRAPH_LOCAL_EDGE_CAP:
+    if fits_local("graph_edges", e.count()):
         # capped local solve (r12): all four integer-exact peel rounds
         # in one task — the same scale-adaptive discipline as
         # operators/graph.py's BSP loops and operators/dedup.py's CC
-        return (
-            e.select(F.col("pa").alias("a"), F.col("pb").alias("b"))
-            .repartition(1)
-            .mapInPandas(_kcore_local(3, 4), "part long, degree long")
-            .localCheckpoint(eager=True)
+        return _solve_local(
+            e, "pa", "pb", _kcore_local(3, 4), "part long, degree long"
         )
     for _ in range(4):
         nodes = e.select(F.col("pa").alias("n")).unionAll(

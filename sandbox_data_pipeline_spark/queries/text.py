@@ -17,6 +17,7 @@ from sandbox_data_pipeline_spark.queries._envproof import (
     stable_round_sql,
 )
 from sandbox_data_pipeline_spark.operators.sketch import kmv_estimate_sql
+from sandbox_data_pipeline_spark.operators.local_solve import fits_local
 from sandbox_data_pipeline_spark.catalog import table
 from sandbox_data_pipeline_spark.operators.text import (
     BPE_ISH_PATTERN,
@@ -3879,12 +3880,6 @@ QUERIES["q_quantile_normalize"] = q_quantile_normalize
 
 
 COVERAGE_K = 10
-# Local-solve budget for the greedy (r12): a (doc_id, bigram) frame
-# under this many rows (~tens of MB factorized) is solved exactly by
-# ONE executor task instead of K Spark rounds — same argmax, same
-# min-doc_id tie-break, verified against the unrolled oracle. Above
-# the cap the distributed per-round loop below runs unchanged.
-COVERAGE_LOCAL_ROW_CAP = 4_000_000
 
 
 def _coverage_greedy_local(k: int):
@@ -3990,10 +3985,12 @@ def q_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.col("shingle").alias("t"))
         .persist()
     )
-    if tok.count() <= COVERAGE_LOCAL_ROW_CAP:
+    if fits_local("coverage_rows", tok.count()):
         # capped local solve (r12): the whole greedy in ONE task —
         # K Spark rounds of anti-join + groupBy + argmax collapse to
-        # one mapInPandas job; result rows come back as the frame.
+        # one mapInPandas job (same argmax, same min-doc_id
+        # tie-break); result rows come back as the frame. Above the
+        # cap the distributed per-round loop below runs unchanged.
         out = (
             tok.repartition(1)
             .mapInPandas(

@@ -27,3 +27,17 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf01_dir() -> str:
     return SF01_DIR
+
+
+@pytest.fixture
+def local_caps(monkeypatch):
+    """Set local-solve caps for one test: ``local_caps(kind=cap, ...)``
+    updates operators/local_solve.LOCAL_CAPS (0 forces the distributed
+    path); ``monkeypatch.undo()`` or teardown restores the table."""
+    from sandbox_data_pipeline_spark.operators import local_solve
+
+    def set_caps(**caps: int) -> None:
+        for kind, cap in caps.items():
+            monkeypatch.setitem(local_solve.LOCAL_CAPS, kind, cap)
+
+    return set_caps

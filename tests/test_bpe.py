@@ -146,16 +146,17 @@ def test_bpe_encode_matches_pure_python(spark):
         assert float(r["fertility"]) > 0
 
 
-def test_local_and_distributed_learners_agree(spark, sf_dir):
+def test_local_and_distributed_learners_agree(spark, sf_dir, local_caps):
     """bpe_merges has two execution paths — driver-side learning on the
     collected vocab (default, vocab fits) and the fully distributed
-    per-round loop (driver_vocab_max=0 forces it). Same corpus, same
+    per-round loop (a zero "bpe_vocab" cap forces it). Same corpus, same
     merge table, byte for byte."""
     from sandbox_data_pipeline_spark.catalog import table
 
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     local = bpe_merges(docs, n_merges=5).collect()
-    dist = bpe_merges(docs, n_merges=5, driver_vocab_max=0).collect()
+    local_caps(bpe_vocab=0)
+    dist = bpe_merges(docs, n_merges=5).collect()
     as_tuples = lambda rows: [
         (r["merge_rank"], r["sym_a"], r["sym_b"], r["pair_count"]) for r in rows
     ]

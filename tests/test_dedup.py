@@ -82,10 +82,10 @@ def test_ngram_df_cap_guard_engages_on_hot_shingle(spark):
 
 
 @pytest.mark.slow
-def test_duplicate_clusters_long_chain_pointer_jumping(spark):
+def test_duplicate_clusters_long_chain_pointer_jumping(spark, local_caps):
     """A 40-node path resolves exactly through every r12 path: the
     single-task local solve (default cap), the contraction+fallback
-    route (local_cap=1 keeps the 40-edge chain above the cap — a
+    route (a "cc_edges" cap of 1 keeps the 40-edge chain above it — a
     connected n-node component never contracts below n-1 star edges),
     and the fallback loop's convergence guard still raises on a
     too-small max_iter instead of silently returning split clusters."""
@@ -103,13 +103,14 @@ def test_duplicate_clusters_long_chain_pointer_jumping(spark):
     }
     assert set(got.values()) == {0} and len(got) == 41
     assert stats["n_nodes"] == 41
+    local_caps(cc_edges=1)
     got_fb = {
         r.doc_id: r.cluster_id
-        for r in duplicate_clusters(chain, max_iter=10, local_cap=1).collect()
+        for r in duplicate_clusters(chain, max_iter=10).collect()
     }
     assert got_fb == got
     with pytest.raises(RuntimeError, match="did not converge"):
-        duplicate_clusters(chain, max_iter=1, local_cap=1)
+        duplicate_clusters(chain, max_iter=1)
 
 
 @pytest.mark.slow

@@ -128,9 +128,10 @@ def test_link_prediction_cap_subset_on_corpus(spark, sf_dir):
 
 
 @pytest.mark.slow
-def test_local_solvers_match_distributed_loops(spark):
+def test_local_solvers_match_distributed_loops(spark, local_caps):
     """r12: every graph operator's capped local solve must reproduce
-    the distributed BSP loop row-for-row (forced via local_cap=0).
+    the distributed BSP loop row-for-row (forced via a zero
+    "graph_edges" cap).
     Floats compare exactly: same per-iteration formulas, and the
     6-dp output rounding sits far above any partial-sum-order drift."""
     from sandbox_data_pipeline_spark.operators.graph import (
@@ -145,18 +146,20 @@ def test_local_solvers_match_distributed_loops(spark):
         F.col("node") % 5 == 0
     )
     for build in (
-        lambda cap: pagerank(e, iterations=5, local_cap=cap),
-        lambda cap: label_propagation(e, iterations=4, local_cap=cap),
-        lambda cap: bfs_distances(e, seeds, max_hops=4, local_cap=cap),
-        lambda cap: hits(e, iterations=3, local_cap=cap),
-        lambda cap: personalized_pagerank(e, seeds, iterations=4, local_cap=cap),
+        lambda: pagerank(e, iterations=5),
+        lambda: label_propagation(e, iterations=4),
+        lambda: bfs_distances(e, seeds, max_hops=4),
+        lambda: hits(e, iterations=3),
+        lambda: personalized_pagerank(e, seeds, iterations=4),
     ):
-        local = sorted(map(tuple, build(10**6).collect()))
-        loop = sorted(map(tuple, build(0).collect()))
+        local_caps(graph_edges=10**6)
+        local = sorted(map(tuple, build().collect()))
+        local_caps(graph_edges=0)
+        loop = sorted(map(tuple, build().collect()))
         assert local == loop
 
 
-def test_pagerank_directed_sink_dangling_mass_local(spark):
+def test_pagerank_directed_sink_dangling_mass_local(spark, local_caps):
     """Directed graph WITH a sink node: the local solver must apply the
     same dangling-mass redistribution as the loop (has_sinks branch)."""
     from sandbox_data_pipeline_spark.operators.graph import pagerank
@@ -165,5 +168,6 @@ def test_pagerank_directed_sink_dangling_mass_local(spark):
         [(0, 1), (1, 2), (0, 2)], "src long, dst long"  # 2 is a sink
     )
     local = sorted(map(tuple, pagerank(e, iterations=5).collect()))
-    loop = sorted(map(tuple, pagerank(e, iterations=5, local_cap=0).collect()))
+    local_caps(graph_edges=0)
+    loop = sorted(map(tuple, pagerank(e, iterations=5).collect()))
     assert local == loop

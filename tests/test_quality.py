@@ -73,16 +73,17 @@ def test_classifier_training_is_partition_count_independent(spark):
     assert w1 == w13
 
 
-def test_classifier_local_solve_matches_distributed_loop(spark):
+def test_classifier_local_solve_matches_distributed_loop(spark, local_caps):
     """r12 capped local solve: the one-task numpy trainer must produce
     the BIT-IDENTICAL weight vector to the distributed window-sum loop
-    (forced via local_cap=0) — every step is integer/dyadic arithmetic,
+    (forced via a zero "lr_rows" cap) — every step is integer/dyadic arithmetic,
     so any divergence is a bug, not float noise."""
     docs = _planted_docs(spark, n_each=25)
     feats = hashed_token_features(docs)
     labels = rule_labels(docs)
     w_local = train_quality_lr(feats, labels, iters=6)
-    w_loop = train_quality_lr(feats, labels, iters=6, local_cap=0)
+    local_caps(lr_rows=0)
+    w_loop = train_quality_lr(feats, labels, iters=6)
     assert w_local == w_loop
     assert any(v != 0 for v in w_local)  # training actually moved
 

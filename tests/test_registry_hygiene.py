@@ -132,12 +132,13 @@ def test_bench_headline_names_resolve():
     assert not dups, f"duplicate HEADLINE names: {dups}"
 
 
-def test_bench_compare_baseline_skips_scaling_artifacts():
+def test_bench_compare_baseline_skips_scaling_artifacts(tmp_path):
     """r13 measurement bug: compare_block's glob sorted
     BENCH_r12_c8.json (the driver's 8-CORE scaling run) as the
     "latest" baseline, so 32-core runs flagged queries at exactly
     their 8/32-core scaling ratios. The baseline must be a main-run
-    BENCH_r<N>.json artifact."""
+    BENCH_r<N>.json artifact, and "latest" means the largest integer
+    N: a text sort puts an unpadded BENCH_r9.json after BENCH_r13.json."""
     import sys
 
     sys.path.insert(0, str(QUERY_DIR.parent.parent))
@@ -147,6 +148,11 @@ def test_bench_compare_baseline_skips_scaling_artifacts():
     assert cmp is None or __import__("re").fullmatch(
         r"BENCH_r\d+\.json", cmp["baseline"]
     ), f"scaling/variant artifact chosen as compare baseline: {cmp['baseline']}"
+
+    for name in ("BENCH_r9.json", "BENCH_r13.json", "BENCH_r13_c8.json", "BENCH_r08.json"):
+        (tmp_path / name).write_text("{}")
+    latest = bench.latest_bench_artifact(str(tmp_path))
+    assert latest == str(tmp_path / "BENCH_r13.json"), latest
 
 
 def test_bench_cumulative_ledger_complete():
@@ -434,3 +440,76 @@ def test_other_materialization_sites_are_allowlisted():
     assert dict(got_args) == {}, (
         f"unreviewed collect(*args) sites: {dict(got_args)}"
     )
+
+
+def test_local_solve_policy_is_the_only_cap_gate():
+    """One local-solve policy (operators/local_solve.py). No function
+    takes a per-call cap keyword: a default bound at def time is out of
+    reach of the table, so forcing the distributed path would silently
+    miss it. Every kind passed to fits_local is a string literal naming
+    a LOCAL_CAPS key, and every key is asked for, so forcing cannot
+    "cover" a dead cap."""
+    import ast
+
+    from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS
+
+    banned = {"local_cap", "driver_vocab_max"}
+    cap_params: list[str] = []
+    kinds: set[str] = set()
+    bad_kinds: list[str] = []
+    pkg = QUERY_DIR.parent
+    for p in sorted(pkg.rglob("*.py")):
+        rel = str(p.relative_to(pkg))
+        for n in ast.walk(ast.parse(p.read_text())):
+            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                a = n.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg in banned:
+                        cap_params.append(f"{rel}:{n.lineno} {arg.arg}")
+            if isinstance(n, ast.Call) and (
+                getattr(n.func, "id", None) == "fits_local"
+                or getattr(n.func, "attr", None) == "fits_local"
+            ):
+                k = n.args[0] if n.args else None
+                if isinstance(k, ast.Constant) and k.value in LOCAL_CAPS:
+                    kinds.add(k.value)
+                else:
+                    bad_kinds.append(f"{rel}:{n.lineno}")
+    assert not cap_params, f"per-function cap parameters: {cap_params}"
+    assert not bad_kinds, f"fits_local kinds that are not LOCAL_CAPS keys: {bad_kinds}"
+    assert kinds == set(LOCAL_CAPS), f"caps no gate reads: {set(LOCAL_CAPS) - kinds}"
+
+
+def test_replay_hot_bucket_caps_match_engine():
+    """tools/replays.py recomputes queries without importing the engine,
+    so it keeps its own copies of the hot-bucket caps. Pin each copy to
+    the engine's value, and keep the replay engine-free."""
+    import ast
+
+    def tree(path: pathlib.Path) -> ast.Module:
+        return ast.parse(path.read_text())
+
+    def consts(mod: ast.Module) -> dict:
+        return {
+            t.id: n.value.value
+            for n in mod.body
+            if isinstance(n, ast.Assign) and isinstance(n.value, ast.Constant)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+
+    replays = tree(QUERY_DIR.parent.parent / "tools" / "replays.py")
+    replay = consts(replays)
+    multimodal = consts(tree(QUERY_DIR / "multimodal.py"))
+    dedup = consts(tree(QUERY_DIR / "dedup.py"))
+    for name, engine in (
+        ("IMAGE_BAND_CAP", multimodal),
+        ("VIDEO_BAND_CAP", multimodal),
+        ("JACCARD_DF_CAP", dedup),
+        ("FUZZY_CAP", dedup),
+    ):
+        assert replay[name] == engine[name], name
+    modules = [n.module or "" for n in ast.walk(replays) if isinstance(n, ast.ImportFrom)]
+    modules += [a.name for n in ast.walk(replays) if isinstance(n, ast.Import) for a in n.names]
+    engine = [m for m in modules if m.startswith("sandbox_data_pipeline_spark")]
+    assert not engine, f"tools/replays.py imports the engine: {engine}"

@@ -343,7 +343,7 @@ def test_quantile_normalize_equalizes_distributions(spark):
     assert all(v == first for v in dists.values())
 
 
-def test_coverage_greedy_local_matches_distributed_loop(spark, monkeypatch):
+def test_coverage_greedy_local_matches_distributed_loop(spark, local_caps):
     """The r12 capped local solve (one-task vectorized greedy) must
     select the same docs with the same gains as the distributed
     per-round loop — forced via a zero row cap."""
@@ -353,7 +353,7 @@ def test_coverage_greedy_local_matches_distributed_loop(spark, monkeypatch):
         text.QUERIES["q_coverage_greedy"](spark, SF).collect(),
         key=lambda r: r["sel_order"],
     )
-    monkeypatch.setattr(text, "COVERAGE_LOCAL_ROW_CAP", 0)
+    local_caps(coverage_rows=0)
     loop = sorted(
         text.QUERIES["q_coverage_greedy"](spark, SF).collect(),
         key=lambda r: r["sel_order"],

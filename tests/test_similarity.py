@@ -339,7 +339,7 @@ def test_mmr_pandas_and_joins_paths_agree(spark, sf_dir):
     assert len(a) > 0
 
 
-def test_kmeans_exact_local_matches_loop(spark, monkeypatch):
+def test_kmeans_exact_local_matches_loop(spark, local_caps):
     """r12: the one-task integer k-means must return bit-identical
     centroids to the exploded broadcast-join loop (forced via a zero
     cell cap)."""
@@ -353,6 +353,6 @@ def test_kmeans_exact_local_matches_loop(spark, monkeypatch):
         "vec_id long, embedding array<double>",
     )
     local = sim.ivf_centroids_kmeans_exact(emb, n_centroids=4, n_iter=3, dim=8)
-    monkeypatch.setattr(sim, "KMEANS_LOCAL_CELL_CAP", 0)
+    local_caps(kmeans_cells=0)
     loop = sim.ivf_centroids_kmeans_exact(emb, n_centroids=4, n_iter=3, dim=8)
     assert local == loop

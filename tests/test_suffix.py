@@ -284,10 +284,12 @@ def test_keep_first_survives_rank_permuted_runs(spark):
 
 
 @pytest.mark.slow
-def test_span_local_solve_matches_distributed(spark, sf_dir, monkeypatch):
+def test_span_local_solve_matches_distributed(
+    spark, sf_dir, monkeypatch, local_caps
+):
     """r12 capped local solve: the one-task span solver must produce
     the IDENTICAL span set to the distributed SA construction (forced
-    via SPAN_LOCAL_POS_CAP=0), for both the plain and the keep-first
+    via a zero "span_positions" cap), for both the plain and the keep-first
     (run-grouped) variants, on the real corpus AND on the
     rank-permuting fixture."""
     import sandbox_data_pipeline_spark.operators.suffix as SX
@@ -305,7 +307,7 @@ def test_span_local_solve_matches_distributed(spark, sf_dir, monkeypatch):
             local = sorted(
                 map(tuple, fn(docs, min_len=20, max_len=128).collect())
             )
-            monkeypatch.setattr(SX, "SPAN_LOCAL_POS_CAP", 0)
+            local_caps(span_positions=0)
             dist = sorted(
                 map(tuple, fn(docs, min_len=20, max_len=128).collect())
             )
@@ -315,10 +317,12 @@ def test_span_local_solve_matches_distributed(spark, sf_dir, monkeypatch):
 
 
 @pytest.mark.slow
-def test_repeats_local_solve_matches_distributed(spark, sf_dir, monkeypatch):
+def test_repeats_local_solve_matches_distributed(
+    spark, sf_dir, monkeypatch, local_caps
+):
     """r12 capped local solve for repeated_substrings: the one-task
     top-k solver must equal the distributed SA construction (forced
-    via SPAN_LOCAL_POS_CAP=0) ROW FOR ROW IN ORDER — (lcp desc,
+    via a zero "span_positions" cap) ROW FOR ROW IN ORDER — (lcp desc,
     sa_rank) is the query's declared output order — on the real
     corpus subset and a known-repeat fixture."""
     import sandbox_data_pipeline_spark.operators.suffix as SX
@@ -338,7 +342,7 @@ def test_repeats_local_solve_matches_distributed(spark, sf_dir, monkeypatch):
                 docs, min_lcp=20, top_k=50, max_len=128
             ).collect()
         ]
-        monkeypatch.setattr(SX, "SPAN_LOCAL_POS_CAP", 0)
+        local_caps(span_positions=0)
         dist = [
             tuple(r)
             for r in SX.repeated_substrings(

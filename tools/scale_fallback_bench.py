@@ -2,19 +2,20 @@
 
 Round-12 verdict item 3: at sf0.1 every capped one-task local solve
 engages (CC <=4M edges, graph BSP <=4M, LR <=8M rows, k-means <=8M
-cells, suffix <=8M positions, coverage <=4M), so the bench only ever
-times the local branch; the above-cap distributed paths — the actual
-100 TB story — had row-for-row equivalence tests but no performance
-numbers. This tool times BOTH branches of every capped family on the
+cells, suffix <=8M positions, coverage <=4M, BPE <=1M word types),
+so the bench only ever times the local branch; the above-cap
+distributed paths — the actual 100 TB story — had row-for-row
+equivalence tests but no performance numbers. This tool times BOTH branches of every capped family on the
 10x blow-up corpus (tools/blowup_stress.py's builder: documents and
 embeddings replicated with id offsets — hot keys get exactly 10x
 hotter) and records CC round counts against the log2(N) bound.
 
-Forcing discipline: the queries call their operators with default
-caps, so "forced" mode rewrites the ``local_cap`` keyword DEFAULT on
-each operator function (inspect.signature-driven) and zeroes the
-call-time module constants (SPAN_LOCAL_POS_CAP, KMEANS_LOCAL_CELL_CAP,
-COVERAGE_LOCAL_ROW_CAP). Nothing here touches query semantics — both
+Forcing discipline: every capped hybrid asks one gate,
+``operators/local_solve.fits_local(kind, size)``, which reads the
+``LOCAL_CAPS`` table at call time and never fits a cap of 0. "forced"
+mode zeroes every entry of that table before the registry builds a
+plan, so the queries run unchanged and each gate takes its
+distributed branch. Nothing here touches query semantics — both
 branches are the exact algorithms the equivalence tests pin together.
 
 Usage:
@@ -27,7 +28,6 @@ Prints one JSON line per (query, mode); paste the table into SCALE.md.
 from __future__ import annotations
 
 import argparse
-import inspect
 import json
 import math
 import os
@@ -55,40 +55,15 @@ QUERIES = [
     "q_suffix_repeats",
     # greedy coverage
     "q_coverage_greedy",
+    # driver-side BPE learner
+    "q_bpe_merges",
 ]
 
 
-def _rebind_local_cap_default(fn, value: int) -> None:
-    """Rewrite fn's ``local_cap`` keyword default (defaults bind at def
-    time, so setattr on the module constant alone cannot reach them)."""
-    params = list(inspect.signature(fn).parameters.values())
-    pos_defaults = [p for p in params if p.default is not inspect.Parameter.empty
-                    and p.kind in (p.POSITIONAL_OR_KEYWORD,)]
-    if fn.__kwdefaults__ and "local_cap" in fn.__kwdefaults__:
-        fn.__kwdefaults__["local_cap"] = value
-        return
-    names = [p.name for p in pos_defaults]
-    if "local_cap" not in names:
-        raise ValueError(f"{fn.__name__} has no local_cap default")
-    new = tuple(value if p.name == "local_cap" else p.default for p in pos_defaults)
-    fn.__defaults__ = new
-
-
 def force_distributed() -> None:
-    from sandbox_data_pipeline_spark.operators import dedup, graph, quality, similarity, suffix
-    from sandbox_data_pipeline_spark.queries import text as qtext
+    from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS
 
-    _rebind_local_cap_default(dedup.duplicate_clusters, 0)
-    for name in ("pagerank", "label_propagation", "bfs_distances", "hits",
-                 "personalized_pagerank"):
-        _rebind_local_cap_default(getattr(graph, name), 0)
-    # k-core / textrank gate on the module constant or their own cap
-    for const in ("GRAPH_LOCAL_EDGE_CAP",):
-        setattr(graph, const, 0)
-    _rebind_local_cap_default(quality.train_quality_lr, 0)
-    similarity.KMEANS_LOCAL_CELL_CAP = 0
-    suffix.SPAN_LOCAL_POS_CAP = 0
-    qtext.COVERAGE_LOCAL_ROW_CAP = 0
+    LOCAL_CAPS.update(dict.fromkeys(LOCAL_CAPS, 0))
 
 
 def main() -> None:
@@ -152,9 +127,7 @@ def main() -> None:
         stats: dict = {}
         pairs = q_dedup_minhash_pairs(spark, out_dir)
         t0 = time.time()
-        cap = 0 if args.mode == "forced" else None
-        kw = {"stats": stats} if cap is None else {"stats": stats, "local_cap": 0}
-        duplicate_clusters(pairs, **kw).write.format("noop").mode("overwrite").save()
+        duplicate_clusters(pairs, stats=stats).write.format("noop").mode("overwrite").save()
         n = stats.get("n_nodes") or 1
         print(json.dumps({
             "query": "duplicate_clusters(stats)", "mode": args.mode,
