@@ -35,9 +35,9 @@ from sandbox_data_pipeline_spark.operators.ingest import (
     weather_variant_publish,
     weather_variant_publish_native,
 )
-from sandbox_data_pipeline_spark.schemas import COCKTAILS_SCHEMA, WEATHER_SCHEMA
-from sandbox_data_pipeline_spark.sinks.writers import SkippedWrite, publish_run, write_raw_json
-from sandbox_data_pipeline_spark.sources.json_source import docs_to_df, parse_declared
+from sandbox_data_pipeline_spark.schemas import COCKTAILS_SCHEMA, RAW_LANDING_SCHEMA, WEATHER_SCHEMA
+from sandbox_data_pipeline_spark.sinks.writers import SkippedWrite, publish_run
+from sandbox_data_pipeline_spark.sources.json_source import docs_to_df, parse_declared, read_json_declared
 
 
 @dataclass
@@ -45,8 +45,10 @@ class PipelineConfig:
     base_dir: str
     write_snowflake: bool = True  # F3 config-flag branch skip
     cities: list[str] = field(default_factory=lambda: list(fixtures.CITIES))
-    # X1 transform_callback: applied to each fetched document body
-    transform_callback: Callable[[str], str] | None = None
+    # X1 transform_callback: applied to the fetched cocktails document.
+    # The reference always repairs it (dags/sandbox_data_pipeline.py:147-149);
+    # the python-repr body parses to no drinks without it.
+    transform_callback: Callable[[str], str] | None = clean_cocktail_json
     # Variant discipline: Spark 4 native VariantType (parse_json once,
     # typed variant_get per path) is the default — the binary form is
     # parsed once instead of re-parsing JSON text per extracted path.
@@ -100,9 +102,7 @@ def run_pipeline(
     cocktails_dir = f"{cfg.base_dir}/api_data/cocktails"
     try:
         publish_run(
-            spark.createDataFrame(
-                [("cocktails", run_hr, cocktail_raw)], "entity_key string, run_hr long, json_data string"
-            ),
+            docs_to_df(spark, [("cocktails", run_hr, cocktail_raw)]).withColumnRenamed("body", "json_data"),
             cocktails_dir,
             run_hr,
             skip_if_exists=True,
@@ -119,12 +119,14 @@ def run_pipeline(
             raise RuntimeError(f"availability barrier failed: {d} run_hr={run_hr}")
 
     # --- stage (S3 declared / S4 variant) ----------------------------------
-    weather_variant = spark.read.json(f"{raw_dir}/run_hr={run_hr}").select(
-        F.col("json_data")
-    )
+    weather_variant = read_json_declared(
+        spark, f"{raw_dir}/run_hr={run_hr}", RAW_LANDING_SCHEMA
+    ).select(F.col("json_data"))
     weather_stage = parse_declared(weather_variant.withColumnRenamed("json_data", "body"), WEATHER_SCHEMA)
     cocktails_stage = parse_declared(
-        spark.read.json(f"{cocktails_dir}/run_hr={run_hr}").withColumnRenamed("json_data", "body").select("body"),
+        read_json_declared(spark, f"{cocktails_dir}/run_hr={run_hr}", RAW_LANDING_SCHEMA)
+        .withColumnRenamed("json_data", "body")
+        .select("body"),
         COCKTAILS_SCHEMA,
     )
     weather_stage.cache()  # reused by DQ + two publishes (SURVEY §4 two-phase load)

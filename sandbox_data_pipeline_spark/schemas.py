@@ -32,6 +32,10 @@ def _l(name: str) -> StructField:
     return StructField(name, LongType())
 
 
+# Raw landing (K1): one JSON line per fetched document, the run-hour
+# in the partition directory — read back without an inference scan.
+RAW_LANDING_SCHEMA = StructType([_s("entity_key"), _s("json_data")])
+
 # write_weather_to_bigquery_stage.sql:5-47
 WEATHER_SCHEMA = StructType(
     [

@@ -96,12 +96,6 @@ def publish_run(
     return dict(obs.get) if obs is not None else None
 
 
-def write_raw_json(df: DataFrame, base_path: str) -> None:
-    """K1: land raw documents as JSON text partitioned by run-hour
-    (the api_data/<feed>/{run_hr}/ layout, Hive-style)."""
-    df.write.mode("overwrite").partitionBy(RUN_HR_COL).json(base_path)
-
-
 def compact_partitions(
     spark: SparkSession,
     base_path: str,

@@ -73,8 +73,21 @@ def docs_to_df(
 ) -> DataFrame:
     """In-memory raw-document frame: (entity_key, run_hr, body) — the
     engine's equivalent of objects landed under
-    api_data/<feed>/{run_hr}/<key>.json."""
-    return spark.createDataFrame(docs, "entity_key string, run_hr long, body string")
+    api_data/<feed>/{run_hr}/<key>.json.
+
+    The documents were fetched on the driver, so they are bounded by
+    driver memory at any cluster size and one partition is the right
+    layout: every write of the frame runs one task. The rows go to the
+    JVM as one Arrow table, so no Python worker runs when the frame
+    executes (pickled rows would start one per partition)."""
+    import pyarrow as pa
+
+    cols = list(zip(*docs)) or [(), (), ()]
+    table = pa.table(
+        [pa.array(c, t) for c, t in zip(cols, (pa.string(), pa.int64(), pa.string()))],
+        names=["entity_key", "run_hr", "body"],
+    )
+    return spark.createDataFrame(table, "entity_key string, run_hr long, body string").coalesce(1)
 
 
 def parse_declared(df: DataFrame, schema: StructType, body_col: str = "body") -> DataFrame:

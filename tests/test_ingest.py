@@ -125,3 +125,21 @@ def test_corrupt_records_are_quarantined_not_fatal(spark, tmp_path):
     assert clean.where(F.col("location.name").isNull()).count() == 0
     q = sorted(r[0] for r in quarantine.collect())
     assert q == sorted(bad)  # raw bytes preserved for repair
+
+
+def test_docs_to_df_is_one_arrow_partition_in_input_order(spark):
+    """Driver-fetched documents enter as one partition with the raw
+    document DDL, in the order they were fetched; no documents still
+    give a typed empty frame."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    ddl = _parse_datatype_string("entity_key string, run_hr long, body string")
+    docs = fixtures.weather_json_docs()
+    df = docs_to_df(spark, docs)
+    assert df.rdd.getNumPartitions() == 1
+    assert df.schema == ddl
+    assert [tuple(r) for r in df.collect()] == [tuple(d) for d in docs]
+
+    empty = docs_to_df(spark, [])
+    assert empty.schema == ddl
+    assert empty.count() == 0

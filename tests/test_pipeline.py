@@ -5,6 +5,7 @@ branch skip (F3), DQ gating (D1) — SURVEY §5.2.3.
 from __future__ import annotations
 
 import hashlib
+import uuid
 
 import pytest
 
@@ -41,6 +42,38 @@ def test_pipeline_end_to_end_and_idempotent(spark, tmp_path):
     assert "land_weather_raw" in report2["skipped"]
     assert _table_hash(spark, f"{tmp_path}/prod/weather") == h1
     assert spark.read.parquet(f"{tmp_path}/prod/weather").count() == n1
+
+
+def _jobs_in_group(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"pipeline-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_default_config_fresh_hour_layout_and_job_count(spark, tmp_path):
+    """A default-config fresh hour publishes every fixture drink, writes
+    one data file per landed and published partition, and runs 8 Spark
+    jobs (a re-run 6): the raw read-backs use the declared landing
+    schema, so no inference scan runs."""
+    import glob
+
+    cfg = PipelineConfig(base_dir=str(tmp_path))
+    hr = fixtures.RUN_HRS[0]
+    assert _jobs_in_group(spark, lambda: run_pipeline(spark, cfg, hr)) == 8
+
+    n_drinks = len(fixtures.cocktails_doc()["drinks"])
+    assert spark.read.parquet(f"{tmp_path}/prod/cocktails").count() == n_drinks
+    for t in ("api_data/weather", "api_data/cocktails", "prod/weather", "prod/cocktails", "prod/weather_narrow"):
+        assert len(glob.glob(f"{tmp_path}/{t}/run_hr={hr}/part-*")) == 1, t
+
+    assert _jobs_in_group(spark, lambda: run_pipeline(spark, cfg, hr)) == 6
 
 
 def test_partition_overwrite_preserves_other_hours(spark, tmp_path):
