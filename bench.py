@@ -192,6 +192,31 @@ HEADLINE = [
 ]
 
 
+def git_sha(root: str) -> str | None:
+    """Short sha of ``root``'s checked-out commit, or None when it is
+    not a git checkout (or git is missing)."""
+    import subprocess
+
+    try:
+        out = subprocess.run(
+            ["git", "-C", root, "rev-parse", "--short", "HEAD"],
+            capture_output=True,
+            text=True,
+            timeout=30,
+        )
+    except (OSError, subprocess.SubprocessError):
+        return None
+    if out.returncode != 0:
+        return None
+    return out.stdout.strip() or None
+
+
+def ledger_label(root: str) -> str:
+    """The ``at`` label of this run's ledger entries: SPARK_GRAFT_ROUND
+    when set, else the checkout's short git sha ("local" outside git)."""
+    return os.environ.get("SPARK_GRAFT_ROUND") or git_sha(root) or "local"
+
+
 def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
     """Merge this run's timings into BENCH_CUMULATIVE.json — the
     on-disk proof that every registry query has been benched at least
@@ -206,7 +231,7 @@ def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
             ledger = json.load(f)
     except (OSError, ValueError):
         ledger = {}
-    label = os.environ.get("SPARK_GRAFT_ROUND", "r12-local")
+    label = ledger_label(here)
     for k, v in timings.items():
         ledger[k] = {"sec": round(v, 3), "at": label, "sf": sf}
     try:
@@ -370,6 +395,8 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": len(os.sched_getaffinity(0)),
+        "git_sha": git_sha(os.path.dirname(os.path.abspath(__file__))),
     }
     if errors:
         verbose["errors"] = errors

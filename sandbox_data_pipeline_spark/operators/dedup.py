@@ -53,9 +53,12 @@ def word_shingles(
 ) -> DataFrame:
     """Word n-grams per document, shuffle-free until (optional) distinct.
 
-    Array-expression shingling: tokens[i..i+n-1] for i in 0..len-n via
-    transform(sequence(...)) — evaluated row-local inside whole-stage
-    codegen. ``df_cap`` removes shingles appearing in more than that
+    Shingle i is concat_ws(' ', tokens[i..i+n-1]) for i in 0..len-n:
+    explode(sequence(...)) yields the start positions and a plain
+    projection indexes the tokens, so Generate and Project both run
+    inside whole-stage codegen (a transform() lambda would not — every
+    higher-order function is interpreted, once per token).
+    ``df_cap`` removes shingles appearing in more than that
     many documents (computed with one extra agg) before any self-join.
 
     ``distinct=False`` skips the per-doc dedup shuffle entirely — valid
@@ -69,13 +72,13 @@ def word_shingles(
         .where(F.size("_toks") >= n)
         .select(
             id_col,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(_toks) - {n}), i -> "
-                    + "concat_ws(' ', "
-                    + ", ".join(f"_toks[i + {j}]" for j in range(n))
-                    + "))"
-                )
+            "_toks",
+            F.explode(F.sequence(F.lit(0), F.size("_toks") - n)).alias("_i"),
+        )
+        .select(
+            id_col,
+            F.concat_ws(
+                " ", *[F.col("_toks")[F.col("_i") + j] for j in range(n)]
             ).alias("shingle"),
         )
     )

@@ -4,10 +4,17 @@ Brute-force cosine top-k is the exact baseline; sign-random-projection
 LSH (SimHash for vectors) is the scale path — candidates only within
 matching hash buckets, turning O(Q·N) into O(Q·N/2^planes) expected.
 
-Everything stays JVM-side: dot products are ``aggregate(zip_with(...))``
-array expressions inside whole-stage codegen — no Python, no UDFs.
-The LSH hyperplanes are deterministic (derived from md5 in the driver),
-so results are reproducible and cross-engine checkable.
+Dot products are ``aggregate(zip_with(...))`` array expressions, with
+one exception. Spark's higher-order functions never enter whole-stage
+codegen: each call is interpreted and boxes every element. Per vector
+(norms, SRP buckets) that is cheap. The broadcast top-k operators pay
+it per pair but keep it, because blocking them would shuffle a corpus
+that today streams map-side. ``knn_join`` already shuffles both sides
+by bucket, so it scores each bucket in one Arrow kernel
+(``mapInArrow``) that runs the same exact left fold over whole blocks
+in numpy; its values are bit-identical to the expression's. The LSH
+hyperplanes are deterministic (derived from md5 in the driver), so
+results are reproducible and cross-engine checkable.
 
 At 100 TB: the candidate set (query side) is small and broadcast; the
 corpus side never shuffles for brute force (map-side join + per-partition
@@ -757,6 +764,97 @@ def pq_adc_topk(
     )
 
 
+# Query rows per scoring tile in knn_join: one tile's dot block is
+# KNN_TILE_ROWS x (corpus rows in the bucket) doubles, one Arrow batch.
+KNN_TILE_ROWS = 256
+
+
+def _fold(a, b, pairwise: bool):
+    """Dot products as the exact left fold acc = 0.0; acc = acc + a_i*b_i
+    for i = 0..d-1 — the IEEE operation order of
+    aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v),
+    so every value is bit-identical to that expression. ``pairwise``
+    folds every row of ``a`` against every row of ``b``; otherwise row
+    i of ``a`` against row i of ``b``."""
+    import numpy as np
+
+    mul = np.multiply.outer if pairwise else np.multiply
+    acc = np.zeros((len(a), len(b)) if pairwise else len(a))
+    for i in range(a.shape[1]):
+        acc += mul(a[:, i], b[:, i])
+    return acc
+
+
+def _score_bucket(parts):
+    """Score one bucket's rows (side 0 = query, 1 = corpus): ``dot`` of
+    every (query, corpus) pair plus both norms sqrt(fold(v, v)). A null
+    vector or a null element gives a null norm and null dots; vectors of
+    different length give a null dot (zip_with pads the shorter with
+    nulls). Yields one Arrow batch per KNN_TILE_ROWS query rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = pa.Table.from_batches(parts).combine_chunks()
+    side = t.column("side").to_numpy()
+    qi, ci = np.flatnonzero(side == 0), np.flatnonzero(side == 1)
+    if not len(qi) or not len(ci):
+        return
+    id_type = t.schema.field("id").type
+    ids = t.column("id").to_numpy()
+    v = t.column("v").chunk(0)
+    off = v.offsets.to_numpy()
+    lens = np.diff(off)
+    ok = ~v.is_null().to_numpy(zero_copy_only=False)
+    if v.values.null_count:
+        bad = np.cumsum(~v.values.is_valid().to_numpy(zero_copy_only=False))
+        bad = np.concatenate([[0], bad])
+        ok &= bad[off[1:]] == bad[off[:-1]]
+    # Zero-padding every vector to the longest leaves each fold exact
+    # (acc + 0.0 * 0.0 == acc, and acc, starting at +0.0, is never -0.0);
+    # pairs of different length are masked below.
+    col = np.arange(lens[ok].max(initial=0))
+    filled = ok[:, None] & (col < lens[:, None])
+    m = np.zeros(filled.shape)
+    m[filled] = v.values.to_numpy(zero_copy_only=False)[(off[:-1, None] + col)[filled]]
+    norm = np.sqrt(_fold(m, m, pairwise=False))
+    for s in range(0, len(qi), KNN_TILE_ROWS):
+        tq = qi[s : s + KNN_TILE_ROWS]
+        dot = _fold(m[tq], m[ci], pairwise=True)
+        known = ok[tq, None] & ok[ci] & (lens[tq, None] == lens[ci])
+        qsel, csel = np.repeat(tq, len(ci)), np.tile(ci, len(tq))
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(ids[qsel], type=id_type),
+                pa.array(ids[csel], type=id_type),
+                pa.array(dot.ravel(), mask=~known.ravel()),
+                pa.array(norm[qsel], mask=~ok[qsel]),
+                pa.array(norm[csel], mask=~ok[csel]),
+            ],
+            names=["query_id", "cand_id", "dot", "qn", "cn"],
+        )
+
+
+def _knn_score_buckets(batches):
+    """mapInArrow kernel over rows sorted by bucket: gathers one bucket
+    at a time (a bucket may straddle input batches) and scores it."""
+    import numpy as np
+
+    part, cur = [], None
+    for batch in batches:
+        if not batch.num_rows:
+            continue
+        b = batch.column("bucket").to_numpy(zero_copy_only=False)
+        cuts = [0, *(np.flatnonzero(b[1:] != b[:-1]) + 1).tolist(), len(b)]
+        for s, e in zip(cuts, cuts[1:]):
+            if part and b[s] != cur:
+                yield from _score_bucket(part)
+                part = []
+            cur = b[s]
+            part.append(batch.slice(s, e - s))
+    if part:
+        yield from _score_bucket(part)
+
+
 def knn_join(
     queries: DataFrame,
     corpus: DataFrame,
@@ -770,15 +868,21 @@ def knn_join(
     """Distributed KNN join for LARGE query sets — neither side
     broadcasts (brute_force_topk/lsh_topk broadcast the query side,
     which caps it at driver/executor memory; a query set that is itself
-    a corpus-scale table needs a shuffle join).
+    a corpus-scale table needs a shuffle).
 
     Both sides compute their sign-random-projection bucket map-side
-    (zero shuffle, same deterministic hyperplanes as lsh_buckets); the
-    equi-join on the bucket id shuffles each side ONCE, partitioned by
-    bucket — expected occupancy N/2^planes per side, so per-bucket work
-    is bounded by design. Exact cosine re-ranks within the bucket and a
-    per-query row_number keeps k (Spark's WindowGroupLimit makes the
-    rank filter partial, before the by-query shuffle).
+    (same deterministic hyperplanes as lsh_buckets), are tagged with a
+    side flag and unioned, and ONE exchange hash-partitions the union
+    by bucket — expected occupancy N/2^planes per side, so per-bucket
+    work is bounded by design. Within each partition, sorted by bucket,
+    an Arrow kernel scores one bucket at a time: every (query, corpus)
+    dot product and both norms, as the exact left fold of
+    aggregate(zip_with(...)) run over whole blocks in numpy rather than
+    one interpreted, boxing lambda call per pair. Spark keeps the
+    self-pair filter, the division (a zero vector raises
+    DIVIDE_BY_ZERO), the rounding and a per-query row_number that keeps
+    k (WindowGroupLimit makes the rank filter partial, before the
+    by-query shuffle), so scores are bit-identical to cosine_pre's.
 
     ``multiprobe=1`` additionally probes every Hamming-1 bucket of each
     query (planes+1 probes/query) — the standard recall lever when a
@@ -786,36 +890,43 @@ def knn_join(
     so no candidate is scored twice. ``multiprobe=0`` probes only the
     query's own bucket.
     """
-    q = queries.withColumn("_v", as_double_array(vec_col)).select(
-        F.col(id_col).alias("query_id"),
-        F.col("_v").alias("qv"),
-        _norm("_v").alias("qn"),
-        _bucket_expr("_v", dim, planes).alias("bucket"),
-    )
+
+    def side(df: DataFrame, flag: int) -> DataFrame:
+        # a null id never survives the self-pair filter, so it is not scored
+        return (
+            df.where(F.col(id_col).isNotNull())
+            .withColumn("_v", as_double_array(vec_col))
+            .select(
+                F.lit(flag).alias("side"),
+                F.col(id_col).alias("id"),
+                F.col("_v").alias("v"),
+                _bucket_expr("_v", dim, planes).alias("bucket"),
+            )
+        )
+
+    q = side(queries, 0)
     if multiprobe:
         probes = F.array(
             F.col("bucket"), *[F.expr(f"bucket ^ {1 << p}") for p in range(planes)]
         )
-        q = q.select("query_id", "qv", "qn", F.explode(probes).alias("bucket"))
-    c = corpus.withColumn("_v", as_double_array(vec_col)).select(
-        F.col(id_col).alias("cand_id"),
-        F.col("_v").alias("cv"),
-        _norm("_v").alias("cn"),
-        _bucket_expr("_v", dim, planes).alias("bucket"),
-    )
-
-    from pyspark.sql import Window as W
-
+        q = q.select("side", "id", "v", F.explode(probes).alias("bucket"))
+    tagged = q.unionByName(side(corpus, 1))
+    id_t = tagged.schema["id"].dataType.simpleString()
     sims = (
-        q.join(c, "bucket")
+        tagged.repartition("bucket")
+        .sortWithinPartitions("bucket")
+        .mapInArrow(
+            _knn_score_buckets,
+            f"query_id {id_t}, cand_id {id_t}, dot double, qn double, cn double",
+        )
         .where(F.col("cand_id") != F.col("query_id"))
         .select(
             "query_id",
             "cand_id",
-            F.round(cosine_pre("qv", "cv", "qn", "cn"), 6).alias("_cos6"),
+            F.round(F.col("dot") / (F.col("qn") * F.col("cn")), 6).alias("_cos6"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("_cos6").desc(), "cand_id")
+    w = Window.partitionBy("query_id").orderBy(F.col("_cos6").desc(), "cand_id")
     return (
         sims.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)

@@ -31,6 +31,34 @@ def test_word_shingles_count(spark):
     assert sh.where("doc_id = 4").count() == 0  # shorter than n
 
 
+SHINGLE_TEXTS = [
+    BASE,
+    "double  spaced  words here",  # empty tokens between the spaces
+    " leading space and more",
+    "trailing space and more ",
+    "one two three",  # exactly 3 tokens
+    "one two three four five",  # exactly 5 tokens
+    "one two",  # fewer than 3 tokens
+    "straße café naïve 東京 日本語 テキスト",
+    "a a a a a a",  # repeated shingles
+]
+
+
+@pytest.mark.parametrize("distinct", [True, False])
+@pytest.mark.parametrize("n", [1, 3, 5])
+def test_word_shingles_match_python_reference(spark, n, distinct):
+    docs = spark.createDataFrame(list(enumerate(SHINGLE_TEXTS)), "doc_id long, text string")
+    got = [tuple(r) for r in word_shingles(docs, n=n, distinct=distinct).collect()]
+    want = []
+    for doc_id, text in enumerate(SHINGLE_TEXTS):
+        t = text.split(" ")
+        want += [(doc_id, " ".join(t[i : i + n])) for i in range(len(t) - n + 1)]
+    if distinct:
+        assert sorted(got) == sorted(set(want))
+    else:
+        assert got == want  # same shingles in document and position order
+
+
 def test_exact_dedup(spark):
     stats = exact_dedup_stats(_docs(spark)).first()
     assert stats.n_docs == 5

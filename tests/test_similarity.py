@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.catalog import table
@@ -145,21 +146,25 @@ def test_knn_join_no_broadcast_and_recall(spark):
     emb = table(spark, "/root/testdata/sf0.001", "embeddings")
     queries = emb.where(F.col("vec_id") % 10 == 0)
     got = knn_join(queries, emb, dim=64, planes=8, k=5, multiprobe=1)
-    # the point of knn_join: no broadcast HINT — with the auto-broadcast
-    # threshold off (emulating corpus-scale sides) the join must plan as
-    # a shuffle join. (With AQE on and tiny test data, broadcast is the
-    # CORRECT adaptive choice, so assert against the forced-large plan.)
+    # the point of knn_join: no broadcast — not at the default threshold
+    # and not with it off (emulating corpus-scale sides). Both sides
+    # meet in ONE hash exchange on the bucket, which the Arrow scoring
+    # node reads (through its within-partition sort).
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        plan = (
-            knn_join(queries, emb, dim=64, planes=8, k=5, multiprobe=1)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "BroadcastHashJoin" not in plan
-        assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+        for threshold in (prev, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            plan = (
+                knn_join(queries, emb, dim=64, planes=8, k=5, multiprobe=1)
+                ._jdf.queryExecution()
+                .executedPlan()
+                .toString()
+            )
+            assert "BroadcastExchange" not in plan, threshold
+            lines = plan.splitlines()
+            i = next(i for i, line in enumerate(lines) if "MapInArrow" in line)
+            assert "Sort [bucket" in lines[i + 1], lines[i : i + 3]
+            assert "Exchange hashpartitioning(bucket" in lines[i + 2], lines[i : i + 3]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
@@ -194,6 +199,148 @@ def test_knn_join_multiprobe_beats_single_probe(spark):
         return len(pairs & exact) / len(exact)
 
     assert rec(1) >= rec(0)
+
+
+def _knn_edge_vectors(spark):
+    rows = [
+        (1, [1.0, 0.0, 0.0, 0.0]),
+        (2, [0.9, 0.1, 0.0, 0.0]),
+        (3, None),
+        (4, [1.0, None, 0.0, 0.0]),
+        (5, [1.0, 0.0, 0.0]),  # 3-long: zip_with pads it with a null
+        (6, [0.9, 0.1, 0.0, 0.0]),
+    ]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_knn_join_null_and_ragged_vectors(spark):
+    from sandbox_data_pipeline_spark.operators.similarity import knn_join
+
+    emb = _knn_edge_vectors(spark)
+    got = [
+        tuple(r)
+        for r in knn_join(emb, emb, dim=4, planes=2, k=6, multiprobe=1)
+        .orderBy("query_id", "rank")
+        .collect()
+    ]
+    near = (0.9939, 0.993884)
+    null = (None, None)
+    # only 1, 2 and 6 score; 1->2 and 1->6 tie and break on cand_id;
+    # every pair with a null vector, a null element or a length
+    # mismatch has a null score and ranks last, in cand_id order
+    assert got == [
+        (1, 1, 2, *near), (1, 2, 6, *near), (1, 3, 3, *null), (1, 4, 4, *null), (1, 5, 5, *null),
+        (2, 1, 6, 1.0, 1.0), (2, 2, 1, *near), (2, 3, 3, *null), (2, 4, 4, *null), (2, 5, 5, *null),
+        (3, 1, 1, *null), (3, 2, 2, *null), (3, 3, 4, *null), (3, 4, 5, *null), (3, 5, 6, *null),
+        (4, 1, 1, *null), (4, 2, 2, *null), (4, 3, 3, *null), (4, 4, 5, *null), (4, 5, 6, *null),
+        (5, 1, 1, *null), (5, 2, 2, *null), (5, 3, 3, *null), (5, 4, 4, *null), (5, 5, 6, *null),
+        (6, 1, 2, 1.0, 1.0), (6, 2, 1, *near), (6, 3, 3, *null), (6, 4, 4, *null), (6, 5, 5, *null),
+    ]
+
+
+def test_knn_join_zero_vector_divides_by_zero(spark):
+    from sandbox_data_pipeline_spark.operators.similarity import knn_join
+
+    rows = [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0, 0.0]), (3, [0.9, 0.1, 0.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        knn_join(emb, emb, dim=4, planes=1, k=2, multiprobe=1).collect()
+
+
+def test_knn_join_hot_bucket_matches_pair_join(spark):
+    """A bucket holding more than KNN_TILE_ROWS query rows (planes=1
+    with multiprobe puts every query in both buckets) scores exactly
+    like the explicit bucket join with cosine_pre."""
+    import random
+
+    from pyspark.sql import Window
+
+    from sandbox_data_pipeline_spark.operators.similarity import (
+        KNN_TILE_ROWS,
+        _bucket_expr,
+        _norm,
+        as_double_array,
+        cosine_pre,
+        knn_join,
+    )
+
+    rng = random.Random(7)
+    n, dim = KNN_TILE_ROWS + 300, 8
+    rows = [(i, [round(rng.uniform(-1, 1), 3) for _ in range(dim)]) for i in range(n)]
+    rows[5] = (5, None)
+    rows[300] = (300, [0.5] * (dim - 1))
+    rows[301] = (301, [0.25, None] + [0.5] * (dim - 2))
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+    def side(name, vec, norm):
+        return emb.withColumn("_v", as_double_array("embedding")).select(
+            F.col("vec_id").alias(name),
+            F.col("_v").alias(vec),
+            _norm("_v").alias(norm),
+            _bucket_expr("_v", dim, 1).alias("bucket"),
+        )
+
+    q = side("query_id", "qv", "qn")
+    q = q.select("query_id", "qv", "qn", F.explode(F.array("bucket", F.col("bucket").bitwiseXOR(1))).alias("bucket"))
+    sims = (
+        q.join(side("cand_id", "cv", "cn"), "bucket")
+        .where(F.col("cand_id") != F.col("query_id"))
+        .select("query_id", "cand_id", F.round(cosine_pre("qv", "cv", "qn", "cn"), 6).alias("cos6"))
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("cos6").desc(), "cand_id")
+    ref = (
+        sims.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= 7)
+        .select("query_id", "rank", "cand_id", F.round("cos6", 4).alias("cos_sim"), "cos6")
+    )
+    got = knn_join(emb, emb, dim=dim, planes=1, k=7, multiprobe=1)
+    assert got.groupBy("query_id").count().where("count != 7").count() == 0
+    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, ref.collect()))
+
+
+def test_knn_kernel_folds_exactly_across_batch_boundaries():
+    """The Arrow kernel alone (no Spark): a bucket split over several
+    input batches, an empty batch included, scores the same pairs as
+    one batch, and every dot is the Python left fold acc + x * y."""
+    import pyarrow as pa
+
+    from sandbox_data_pipeline_spark.operators.similarity import _knn_score_buckets
+
+    rows = [  # (side, id, v, bucket), sorted by bucket
+        (0, 1, [0.1, 0.7, -0.3], 0),
+        (1, 2, [0.3, -0.2, 0.9], 0),
+        (0, 3, [1e-8, 0.5, 0.25], 0),
+        (1, 4, None, 0),
+        (1, 1, [0.1, 0.7, -0.3], 0),
+        (0, 5, [0.6, 0.6, 0.6], 3),
+        (1, 6, [0.2, 0.4], 3),
+        (1, 7, [-0.6, 0.1, 0.6], 3),
+    ]
+    schema = pa.schema(
+        [("side", pa.int32()), ("id", pa.int64()), ("v", pa.list_(pa.float64())), ("bucket", pa.int32())]
+    )
+    whole = pa.RecordBatch.from_pylist([dict(zip(schema.names, r)) for r in rows], schema=schema)
+
+    def scored(batches):
+        out = pa.Table.from_batches(list(_knn_score_buckets(iter(batches))))
+        return sorted(zip(*(out.column(c).to_pylist() for c in out.column_names)))
+
+    def fold(a, b):
+        if a is None or b is None or len(a) != len(b):
+            return None
+        acc = 0.0
+        for x, y in zip(a, b):
+            acc = acc + x * y
+        return acc
+
+    want = sorted(
+        (q[1], c[1], fold(q[2], c[2]), math.sqrt(fold(q[2], q[2])), None if c[2] is None else math.sqrt(fold(c[2], c[2])))
+        for q in rows
+        for c in rows
+        if q[0] == 0 and c[0] == 1 and q[3] == c[3]
+    )
+    assert scored([whole]) == want
+    assert scored([whole.slice(0, 2), whole.slice(2, 0), whole.slice(2, 4), whole.slice(6)]) == want
 
 
 def test_semantic_dedup_keep_first_within_cluster(spark):

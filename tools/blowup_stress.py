@@ -5,7 +5,7 @@ The three quadratic-blowup guards — IMAGE_BAND_CAP / VIDEO_BAND_CAP
 (operators/dedup.py: word_shingles) — were sized from sf0.1
 measurements. This tool PROVES them at 10x instead of arguing them:
 
-1. Builds a 10x synthetic blow-up of sf0.1 under /tmp: documents and
+1. Builds a 10x synthetic blow-up of sf0.1 in the temp dir: documents and
    embeddings replicated with id offsets (texts unchanged, so hot
    shingles get exactly 10x hotter — the adversarial direction; media
    payloads derive from doc_id, so new ids extend the closed-form
@@ -17,11 +17,17 @@ measurements. This tool PROVES them at 10x instead of arguing them:
    per-bucket candidate-pair count (must be <= CAP*(CAP-1)/2).
 3. Runs tools/skew_stress.py's salted/AQE join matrix against the
    blown-up dir for the join-layer evidence.
+4. Runs q_lof_outliers (``knn_lof``): the replicated embeddings put
+   factor x the rows of each side in every SRP bucket, so knn_join's
+   per-bucket scoring block holds ~factor^2 the pairs, all exact
+   duplicates and ties. Reports wall time, peak RSS and the output's
+   value hash, which must match across versions of the kernel.
 
 Prints one JSON line; paste the numbers into SCALE.md's
 measured-evidence table.
 
 Usage: python tools/blowup_stress.py [--factor 10] [--src /root/testdata/sf0.1]
+``--only knn_lof`` (comma-separated stage names) runs only those stages.
 """
 
 from __future__ import annotations
@@ -30,6 +36,7 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, ".")
@@ -40,7 +47,7 @@ FACTOR = 10
 
 
 def build_blowup(spark, src: str, factor: int) -> str:
-    out = f"/tmp/blowup{factor}x"
+    out = os.path.join(tempfile.gettempdir(), f"blowup{factor}x")
     if os.path.isdir(out):
         shutil.rmtree(out)
     os.makedirs(out)
@@ -319,6 +326,67 @@ def cc_stress(spark, sf_dir: str) -> dict:
     }
 
 
+def _vm_hwm_mb(pid: int) -> float | None:
+    try:
+        with open(f"/proc/{pid}/status") as f:
+            for line in f:
+                if line.startswith("VmHWM:"):
+                    return int(line.split()[1]) / 1024
+    except OSError:
+        pass
+    return None
+
+
+def _descendants(pid: int) -> list[int]:
+    out, todo = [], [pid]
+    while todo:
+        try:
+            tasks = [t.path for t in os.scandir(f"/proc/{todo.pop()}/task")]
+        except OSError:  # the process has exited
+            continue
+        for task in tasks:
+            try:
+                with open(os.path.join(task, "children")) as f:
+                    kids = [int(k) for k in f.read().split()]
+            except OSError:
+                continue
+            out += kids
+            todo += kids
+    return out
+
+
+def knn_lof_stress(spark, sf_dir: str) -> dict:
+    """q_lof_outliers at the blown-up corpus: wall time, peak RSS of
+    the driver JVM over this stage (its high-water mark is reset first
+    where the kernel allows it) and of the largest Python worker, and
+    the output's value hash."""
+    sys.path.insert(0, "tools")
+    from _normalize import value_hash
+
+    from sandbox_data_pipeline_spark.queries.similarity import q_lof_outliers
+
+    pid = int(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid())
+    try:
+        with open(f"/proc/{pid}/clear_refs", "w") as f:
+            f.write("5")  # reset VmHWM to the current RSS
+        hwm_reset = True
+    except OSError:
+        hwm_reset = False
+    t0 = time.time()
+    df = q_lof_outliers(spark, sf_dir)
+    rows = [tuple(r) for r in df.collect()]
+    wall = time.time() - t0
+    workers = [_vm_hwm_mb(k) for k in _descendants(pid)]
+    return {
+        "query_sec": round(wall, 2),
+        "result_rows": len(rows),
+        "value_hash": value_hash(df.columns, rows),
+        "driver_peak_rss_mb": round(_vm_hwm_mb(pid) or 0),
+        "driver_hwm_reset": hwm_reset,
+        "python_worker_peak_rss_mb": round(max(filter(None, workers), default=0)),
+    }
+
+
 def main() -> None:
     factor = FACTOR
     src = "/root/testdata/sf0.1"
@@ -356,6 +424,7 @@ def main() -> None:
         ("shingle_df_cap", shingle_stress),
         ("join_family", join_stress),
         ("connected_components", cc_stress),
+        ("knn_lof", knn_lof_stress),
     ):
         if only is not None and name not in only:
             continue
