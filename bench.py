@@ -18,14 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# Headline set — ROTATED per round like DRIVER_PRIORITY. Round 12:
-# (1) the 20-query continuity set (r11's slowest + the manifest twins
-#     + the canary), run FIRST on the freshly-warmed JVM, anchors the
-#     round-over-round compare;
-# (2) the 142 ledger entries whose BENCH_CUMULATIVE timing still dates
-#     from r07/r08/r09 — one pass here makes every ledger row at most
-#     two rounds old (round-11 verdict item 3). Mostly sub-second.
-# Names must exist in queries().
+# Fixed set, so two bench.py records compare like for like. Names must exist in queries().
 HEADLINE = [
     "q_coverage_greedy",
     "q_similarity_ivf_kmeans_topk",
@@ -212,9 +205,9 @@ def git_sha(root: str) -> str | None:
 
 
 def ledger_label(root: str) -> str:
-    """The ``at`` label of this run's ledger entries: SPARK_GRAFT_ROUND
-    when set, else the checkout's short git sha ("local" outside git)."""
-    return os.environ.get("SPARK_GRAFT_ROUND") or git_sha(root) or "local"
+    """The ``at`` label of this run's ledger entries: the checkout's
+    short git sha ("local" outside git)."""
+    return git_sha(root) or "local"
 
 
 def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
@@ -241,81 +234,6 @@ def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
         # The ledger is pitched as the on-disk completeness proof —
         # a silent write failure would quietly stale it.
         print(f"WARNING: BENCH_CUMULATIVE.json write failed: {e}", file=sys.stderr)
-
-
-def latest_bench_artifact(root: str) -> str | None:
-    """The main-run ``BENCH_r<N>.json`` in ``root`` with the largest
-    integer N (so r9 < r13 with or without zero padding), or None.
-    Variant artifacts are skipped: BENCH_r12_c8.json is the driver's
-    8-core SCALING run — taking it as "latest" made every 32-core
-    compare flag queries at exactly their 8/32-core ratios
-    (measurement bug found in round 13; the r13-entry run "flagged"
-    q_fellegi_sunter at 2.79x = its scaling ratio, not a regression)."""
-    import glob
-    import re
-
-    runs = {}
-    for p in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(p))
-        if m:
-            runs[int(m[1])] = p
-    return runs[max(runs)] if runs else None
-
-
-def compare_block(timings: dict[str, float], threshold: float = 1.5):
-    """Round-over-round comparison vs the latest BENCH_r{N}.json, so a
-    regression is separable from environment noise without re-deriving:
-    same-query ratios < ``threshold`` are within the documented VM
-    variance band (round-2 ran untouched round-1 queries 1.5-2x slower
-    under identical code); larger ones are listed for review."""
-    import re
-
-    path = latest_bench_artifact(os.path.dirname(os.path.abspath(__file__)))
-    if path is None:
-        return None
-    try:
-        with open(path, encoding="utf-8") as f:
-            doc = json.load(f)
-        # Merge every available source: the parsed final line carries a
-        # BUDGETED per-query subset (slowest-first), while the raw tail
-        # may hold extra pairs from the full first line — regex the
-        # tail, then let parsed values win.
-        old = {
-            k: float(v)
-            for k, v in re.findall(
-                r'"(q_\w+|flagship)":\s?([0-9.]+)', doc.get("tail", "")
-            )
-        }
-        if isinstance(doc.get("parsed"), dict):
-            old.update(doc["parsed"].get("queries") or {})
-        if "queries" in doc:
-            old.update(doc["queries"])
-        if not old:
-            return None
-    except Exception:
-        return None
-    shared = sorted(set(old) & set(timings))
-    t_old = sum(old[k] for k in shared)
-    t_new = sum(timings[k] for k in shared)
-    flagged = {
-        k: {"old": old[k], "new": timings[k], "ratio": round(timings[k] / old[k], 2)}
-        for k in shared
-        if old[k] > 0 and timings[k] / old[k] >= threshold
-    }
-    return {
-        "baseline": re.sub(r".*/", "", path),
-        "shared_queries": len(shared),
-        "shared_total_old_sec": round(t_old, 3),
-        "shared_total_new_sec": round(t_new, 3),
-        "shared_total_ratio": round(t_new / t_old, 3) if t_old else None,
-        "env_noise_threshold": threshold,
-        "flagged_over_threshold": flagged,
-        "note": (
-            "same-query deltas under the threshold are environment noise "
-            "(documented 1.5-2x VM speed variance between rounds); flagged "
-            "entries need a reproduced regression before they count"
-        ),
-    }
 
 
 def main() -> None:
@@ -379,7 +297,7 @@ def main() -> None:
             run(name, lambda n=name: queries[n](spark, sf_dir))
 
     total = round(sum(timings.values()), 3)
-    # Verbose record (full precision + round-over-round compare) goes
+    # Verbose record (full precision, cpus, git sha) goes
     # to a file; stdout's LAST line is the formal artifact. The driver
     # records only the LAST 2000 characters of stdout and parses the
     # final line — r04-r06 all came back "parsed": null because the
@@ -400,9 +318,6 @@ def main() -> None:
     }
     if errors:
         verbose["errors"] = errors
-    cmp_block = compare_block(timings)
-    if cmp_block is not None:
-        verbose["compare"] = cmp_block
     update_cumulative_ledger(timings, sf)
     try:
         here = os.path.dirname(os.path.abspath(__file__))

@@ -20,235 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
-# The driver's CORRECTNESS run grades the FIRST ~50 entries of this
-# tuple each round (r4-r6 samples were exactly positions 1-50).
-# Rotation policy: the graded window is the scarce resource — after an
-# all-green round, holding long-green slots in it wastes the round, so
-# the head is always the canary + the never-driver-sampled queries
-# (after a red round, the reds rotate back in first instead). Round 10:
-# CORRECTNESS_r09 was 50/50 green, so the head is the 21 round-9
-# additions that were never driver-sampled, the 3 round-10
-# fingerprint-manifest queries, the 4 queries whose plans CHANGED this
-# round (rholoss + zipf two-phase ranks, coverage-greedy broadcast
-# anti-join, image-dhash hot-band cap — a changed query needs a fresh
-# grade even if its last one was green), and 21 refreshers whose only
-# formal grade is round 1. This closes
-# formal coverage: after r10 every registry query has a green row.
-# tests/test_registry_hygiene.py encodes this policy so it survives
-# context loss between rounds.
-DRIVER_PRIORITY = (
-    # Diagnostic canary: constant row of every fragile dtype — keeps
-    # slot 1 every round (a canary regression means the comparator
-    # environment moved again, not the queries).
-    "q_hash_canary",
-    # Round 11: the one new query (incremental media-fingerprint MV —
-    # never driver-sampled) and the one changed plan (coverage-greedy
-    # covered-set rework) lead the graded head; everything else was
-    # green in r10's all-green window and the cumulative ledger.
-    "q_media_manifest_ivm",
-    # Never driver-sampled: the 21 round-9 wave-2 additions plus the
-    # 3 round-10 fingerprint-manifest queries.
-    "q_hill_tail",
-    "q_eb_shrinkage",
-    "q_ips_eval",
-    "q_item_cooccurrence",
-    "q_rbo_rankings",
-    "q_holt_winters",
-    "q_phrase_search",
-    "q_quantile_normalize",
-    "q_diff_in_diff",
-    "q_sprt_ab",
-    "q_map_mrr_eval",
-    "q_kruskal_wallis",
-    "q_cramers_v",
-    "q_wordpiece_encode",
-    "q_regression_discontinuity",
-    "q_covariate_balance",
-    "q_mutual_information",
-    "q_hodges_lehmann",
-    "q_sequence_mining",
-    "q_power_analysis",
-    "q_srm_check",
-    "q_media_fingerprint_manifest",
-    "q_image_dhash_from_manifest",
-    "q_video_near_dup_from_manifest",
-    # Changed this round (re-grade even though green before):
-    "q_rholoss_select",
-    "q_coverage_greedy",
-    "q_image_dhash_dedup",
-    "q_zipf_fit",
-    # Refreshers: oldest formal grades in the ledger (round 1).
-    "q_agg_basic",
-    "q_agg_cube",
-    "q_agg_distinct",
-    "q_agg_maxby",
-    "q_agg_rollup",
-    "q_array_funcs",
-    "q_date_funcs",
-    "q_exists_correlated",
-    "q_explode",
-    "q_funnel",
-    "q_gap_fill",
-    "q_histogram",
-    "q_join_anti",
-    "q_join_asof",
-    "q_join_broadcast",
-    "q_join_multi",
-    "q_join_range",
-    "q_join_salted",
-    "q_json_funcs",
-    "q_latest_per_key",
-    "q_map_funcs",
-    # ---- the driver's graded window cuts at ~50 ----
-    "q_nested_struct",
-    "q_outliers",
-    "q_t_closeness",
-    "q_feature_hashing",
-    "q_group_ttest",
-    "q_lof_outliers",
-    "q_link_prediction",
-    "q_ndcg_at_k",
-    "q_event_trigrams",
-    "q_kaplan_meier",
-    "q_suffix_dedup_apply",
-    "q_suffix_dedup_apply_keep_first",
-    "q_column_mapping",
-    "q_cohen_kappa",
-    "q_class_f1",
-    "q_token_entropy",
-    "q_burstiness",
-    "q_textrank_keywords",
-    "q_autocorrelation",
-    "q_jackknife_ci",
-    "q_ppr_influence",
-    "q_theilsen_trend",
-    "q_rolling_median",
-    "q_assortativity",
-    "q_matryoshka_recall",
-    "q_heaps_law",
-    "q_bigram_perplexity",
-    "q_conformal_interval",
-    "q_pair_bleu",
-    "q_update_where",
-    "q_runs_test",
-    "q_unigram_segment_cost",
-    "q_lakehouse_lifecycle",
-    "q_brier_score",
-    "q_mase_forecast_eval",
-    "q_quality_classifier",
-    "q_doremi_weights",
-    "q_isotonic_calibration",
-    "q_mannwhitney_u",
-    "q_pca_power",
-    "q_holt_smooth",
-    "q_wasserstein_drift",
-    "q_cuped_adjust",
-    "q_fellegi_sunter",
-    "q_dbscan_grid",
-    "q_kneser_ney_bits",
-    "q_naive_bayes",
-    "q_sinkhorn_ot",
-    "q_shapley_attribution",
-    "q_orc_interchange",
-    "q_suffix_repeats",
-    "q_suffix_dedup_spans",
-    "q_lpa_communities",
-    "q_graph_bfs",
-    "q_ks_drift",
-    "q_skyline",
-    "q_l_diversity",
-    "q_auc_score",
-    "q_calibration_bins",
-    "q_activity_heatmap",
-    "q_bloom_prefilter",
-    "q_budget_select",
-    "q_click_attribution",
-    "q_curation_pipeline",
-    "q_dataset_card",
-    "q_domain_blocklist",
-    "q_entity_matches",
-    "q_event_funnel",
-    "q_ewma_smooth",
-    "q_filter_cascade",
-    "q_group_quantiles",
-    "q_hash_split",
-    "q_histogram_equidepth",
-    "q_join_cardinality_audit",
-    "q_mad_anomalies",
-    "q_mixture_sample",
-    "q_pack_efficiency",
-    "q_pack_manifest",
-    "q_pii_scrub",
-    "q_profile_orders",
-    "q_rag_index_pipeline",
-    "q_repetition",
-    "q_seasonal_index",
-    "q_source_quota",
-    "q_source_stats",
-    "q_stratified_sample",
-    "q_temperature_mixture",
-    "q_timeseries_decompose",
-    "q_token_quantiles",
-    "q_url_canonical",
-    "q_url_dedup",
-    "q_cusum_changepoints",
-    "q_association_rules",
-    "q_target_encode",
-    "q_best_split",
-    "q_pr_curve",
-    "q_chi2_terms",
-    "q_kcore_peel",
-    "q_partition_evolution",
-    "q_hidden_partitioning",
-    "q_bloom_index",
-    "q_merge_conditional",
-    "q_schema_evolution",
-    "q_check_constraint",
-    "q_position_delete",
-    "q_table_branch",
-    "q_csv_interchange",
-    "q_ingest_quarantine",
-    "q_sketch_ivm",
-    "q_join_ivm",
-    "q_masked_export",
-    "q_jpeg_decode_stats",
-    "q_video_keyframes",
-    "q_gif_keyframes",
-    "q_audio_onsets",
-    "q_video_near_dup",
-    "q_audio_near_dup",
-    "q_media_resolution_filter",
-    "q_bm25_topk",
-    "q_hybrid_rrf",
-    "q_embedding_gram",
-    "q_numeric_corr",
-    "q_linear_fit",
-    "q_bpe_encode",
-    "q_fuzzy_match",
-    "q_entity_resolution",
-    "q_dd_quantiles",
-    "q_anchored_dup_spans",
-    "q_winnow_fingerprints",
-    "q_crosslingual_dups",
-    "q_embedding_dup_clusters",
-    "q_dup_triangles",
-    "q_dup_degree_dist",
-    "q_dup_rate_by_source",
-    "q_leakage_safe_split",
-    "q_passage_dup_ratio",
-    "q_similarity_ivf_lists",
-    "q_similarity_ivf_topk",
-    "q_ann_index",
-    "q_ann_index_drift",
-    "q_pq_codes",
-    "q_embedding_quantize",
-    "q_embedding_centroids",
-    "q_inverted_index",
-    "q_ngram_freq",
-    "q_lang_confusion",
-)
-
-
 def _envproof_wrap(fn: QueryFn) -> QueryFn:
     """Pin session confs on whatever SparkSession the driver passes,
     run the query, and stabilize fragile output dtypes (ltz → ntz,
@@ -284,13 +55,6 @@ def registry(raw: bool = False) -> tuple[dict[str, QueryFn], dict[str, str]]:
         txlog,
     )
 
-    # Families are INTERLEAVED round-robin — any truncation window
-    # then covers a sample of EVERY family instead of the first few
-    # families whole. Within each family the declared order stands,
-    # except known-expensive-oracle queries (multi-probe KNN,
-    # batch-vs-corpus MinHash) which each module lists last, so a
-    # time-capped window isn't burned early. The relational tier is
-    # fully driver-green from round 1, so it rotates in last.
     mods = (
         canary,
         reference_parity,
@@ -309,39 +73,19 @@ def registry(raw: bool = False) -> tuple[dict[str, QueryFn], dict[str, str]]:
     )
     queries: dict[str, QueryFn] = {}
     oracle: dict[str, str] = {}
-    iters = [iter(m.QUERIES.items()) for m in mods]
-    by_mod_oracle = [m.ORACLE for m in mods]
-    live = list(range(len(mods)))
-    while live:
-        still = []
-        for i in live:
-            try:
-                name, fn = next(iters[i])
-            except StopIteration:
-                continue
+    for m in mods:
+        for name, fn in m.QUERIES.items():
             if name in queries:
                 raise ValueError(f"duplicate query name: {name}")
             queries[name] = fn
-            if name in by_mod_oracle[i]:
-                oracle[name] = by_mod_oracle[i][name]
-            still.append(i)
-        live = still
-    for m in mods:
-        missing = m.ORACLE.keys() - queries.keys()
+        missing = m.ORACLE.keys() - m.QUERIES.keys()
         if missing:
             raise ValueError(f"oracle without query: {missing}")
-    unknown = [n for n in DRIVER_PRIORITY if n not in queries]
-    if unknown:
-        raise ValueError(f"DRIVER_PRIORITY names not in registry: {unknown}")
-    head = set(DRIVER_PRIORITY)
-    ordered = list(DRIVER_PRIORITY) + [n for n in queries if n not in head]
+        oracle.update(m.ORACLE)
     if raw:
-        return (
-            {n: queries[n] for n in ordered},
-            {n: oracle[n] for n in ordered if n in oracle},
-        )
-    queries = {n: _envproof_wrap(queries[n]) for n in ordered}
-    oracle = {n: _stabilized_oracle(n, oracle[n]) for n in ordered if n in oracle}
+        return queries, oracle
+    queries = {n: _envproof_wrap(fn) for n, fn in queries.items()}
+    oracle = {n: _stabilized_oracle(n, sql) for n, sql in oracle.items()}
     return queries, oracle
 
 

@@ -1,4 +1,4 @@
-"""Round-7 regression tests for the ADVICE.md findings:
+"""Transactional-table and audio-onset regression tests:
 
 1. merge() conditional path must classify rows by side PRESENCE, not
    key nullness — a NULL-key target row is target-only, never

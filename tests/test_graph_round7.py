@@ -1,4 +1,4 @@
-"""Round-7 graph operators: label propagation + bounded-hop BFS."""
+"""Graph operators: label propagation + bounded-hop BFS."""
 
 from __future__ import annotations
 

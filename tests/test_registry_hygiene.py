@@ -46,72 +46,24 @@ def test_no_shadowed_query_registrations():
         assert not dups, f"{path.name}: shadowed registrations {dups}"
 
 
-def test_priority_names_resolve_and_registry_loads():
-    from sandbox_data_pipeline_spark.queries import DRIVER_PRIORITY, registry
+def test_registry_is_module_declared_order():
+    """registry() lists each family module's QUERIES in declared order,
+    module after module — no interleave and no priority head."""
+    import inspect
+
+    import sandbox_data_pipeline_spark.queries as pkg
+    from sandbox_data_pipeline_spark.queries import registry
 
     q, o = registry()
     assert set(o) <= set(q)
-    assert set(DRIVER_PRIORITY) <= set(q)
-    # every priority name must appear first, in order
-    assert list(q)[: len(DRIVER_PRIORITY)] == list(DRIVER_PRIORITY)
-
-
-def _driver_samples() -> tuple[dict, set[str]]:
-    """Latest-round verdict per query + the set of every query ever
-    driver-sampled, from the committed CORRECTNESS_r*.json artifacts."""
-    import glob
-    import json
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    latest: dict = {}
-    seen: set[str] = set()
-    for p in sorted(glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p, encoding="utf-8") as f:
-                d = json.load(f)
-        except (OSError, ValueError):
-            continue
-        if isinstance(d, dict):
-            seen |= set(d)
-            latest = d
-    return latest, seen
-
-
-def test_rotation_policy_head_grades_never_sampled_first():
-    """ROTATION POLICY (encoded so it survives builder context loss):
-    the driver grades roughly the first 50 DRIVER_PRIORITY entries per
-    round. When the latest CORRECTNESS artifact is all-green, holding
-    long-green queries in that window wastes the round — the head must
-    lead with never-sampled coverage (canary excepted: it keeps slot 1
-    as the comparator-environment tripwire). If this fails after a
-    round with reds, rotate the red slots back into the head instead.
-    """
-    from sandbox_data_pipeline_spark.queries import DRIVER_PRIORITY, registry
-
-    latest, seen = _driver_samples()
-    if not latest:
-        return  # no artifacts yet (fresh clone)
-    assert DRIVER_PRIORITY[0] == "q_hash_canary"
-    q, _ = registry()
-    never = set(q) - seen
-    if not never:
-        return  # everything has been graded at least once
-    all_green = all(
-        (v.get("hash_match") or (v.get("rows_match") and v.get("err") is None))
-        for v in latest.values()
-        if isinstance(v, dict)
+    mods = next(
+        node.value.elts
+        for node in ast.walk(ast.parse(inspect.getsource(registry)))
+        if isinstance(node, ast.Assign) and getattr(node.targets[0], "id", None) == "mods"
     )
-    if not all_green:
-        return  # red rounds re-prove reds first; rotation resumes after
-    head = [n for n in DRIVER_PRIORITY[:50] if n != "q_hash_canary"]
-    n_never_in_head = sum(1 for n in head if n in never)
-    want = min(len(never), 45)
-    assert n_never_in_head >= want, (
-        f"graded head holds {n_never_in_head} never-sampled queries, "
-        f"needs >= {want}: {len(never)} queries have never been "
-        "driver-graded — rotate them into DRIVER_PRIORITY[:50]"
-    )
+    expected = [n for m in mods for n in getattr(pkg, m.id).QUERIES]
+    assert list(q) == expected
+    assert list(registry(raw=True)[0]) == expected
 
 
 def test_bench_headline_names_resolve():
@@ -132,41 +84,16 @@ def test_bench_headline_names_resolve():
     assert not dups, f"duplicate HEADLINE names: {dups}"
 
 
-def test_bench_compare_baseline_skips_scaling_artifacts(tmp_path):
-    """r13 measurement bug: compare_block's glob sorted
-    BENCH_r12_c8.json (the driver's 8-CORE scaling run) as the
-    "latest" baseline, so 32-core runs flagged queries at exactly
-    their 8/32-core scaling ratios. The baseline must be a main-run
-    BENCH_r<N>.json artifact, and "latest" means the largest integer
-    N: a text sort puts an unpadded BENCH_r9.json after BENCH_r13.json."""
-    import sys
-
-    sys.path.insert(0, str(QUERY_DIR.parent.parent))
-    import bench
-
-    cmp = bench.compare_block({"flagship": 1.0})
-    assert cmp is None or __import__("re").fullmatch(
-        r"BENCH_r\d+\.json", cmp["baseline"]
-    ), f"scaling/variant artifact chosen as compare baseline: {cmp['baseline']}"
-
-    for name in ("BENCH_r9.json", "BENCH_r13.json", "BENCH_r13_c8.json", "BENCH_r08.json"):
-        (tmp_path / name).write_text("{}")
-    latest = bench.latest_bench_artifact(str(tmp_path))
-    assert latest == str(tmp_path / "BENCH_r13.json"), latest
-
-
-def test_bench_ledger_label_is_the_checkout_sha(tmp_path, monkeypatch):
-    """The ledger's ``at`` label names the run: SPARK_GRAFT_ROUND when
-    set, else the short sha of the checkout bench.py runs from — not a
-    fixed round string. Exercised on a throwaway repository, so no
-    tracked file is written."""
+def test_bench_ledger_label_is_the_checkout_sha(tmp_path):
+    """The ledger's ``at`` label names the run: the short sha of the
+    checkout bench.py runs from — not a fixed round string. Exercised
+    on a throwaway repository, so no tracked file is written."""
     import subprocess
     import sys
 
     sys.path.insert(0, str(QUERY_DIR.parent.parent))
     import bench
 
-    monkeypatch.delenv("SPARK_GRAFT_ROUND", raising=False)
     assert bench.git_sha(str(tmp_path)) is None
     assert bench.ledger_label(str(tmp_path)) == "local"
 
@@ -183,8 +110,67 @@ def test_bench_ledger_label_is_the_checkout_sha(tmp_path, monkeypatch):
     sha = git("rev-parse", "--short", "HEAD")
     assert bench.git_sha(str(tmp_path)) == sha
     assert bench.ledger_label(str(tmp_path)) == sha
-    monkeypatch.setenv("SPARK_GRAFT_ROUND", "r14")
-    assert bench.ledger_label(str(tmp_path)) == "r14"
+
+
+def test_bench_compare_reads_envelopes_and_refuses_cpu_mismatch(tmp_path, monkeypatch):
+    """tools/bench_compare.py loads every record shape on disk: an
+    envelope whose ``parsed`` is null (only the stdout tail survived),
+    an envelope with a parsed final line, and a bench.py record. Two
+    records taken on different cpu counts are refused."""
+    import json
+    import sys
+
+    sys.path.insert(0, str(QUERY_DIR.parent.parent))
+    from tools import bench_compare
+
+    tail_only = tmp_path / "tail_only.json"
+    tail_only.write_text(json.dumps({
+        "n": 4, "rc": 0, "cpus": 32, "sf": 0.1, "parsed": None,
+        "tail": 'ueries":{"flagship":0.5,"q_a":1.25,"q_b": 2.0},"metric":"x"}\n',
+    }))
+    parsed = tmp_path / "parsed.json"
+    parsed.write_text(json.dumps({
+        "cpus": 32, "tail": '"q_a":9.0,"q_c":3.0}', "parsed": {"queries": {"q_a": 1.5}},
+    }))
+    record = tmp_path / "record.json"
+    record.write_text(json.dumps({"metric": "x", "queries": {"q_a": 1.0}, "cpus": 4}))
+
+    assert bench_compare.load(str(tail_only)) == (
+        {"flagship": 0.5, "q_a": 1.25, "q_b": 2.0}, 32
+    )
+    assert bench_compare.load(str(parsed)) == ({"q_a": 1.5, "q_c": 3.0}, 32)
+    assert bench_compare.load(str(record)) == ({"q_a": 1.0}, 4)
+
+    def run(old, new):
+        monkeypatch.setattr(sys, "argv", ["bench_compare.py", str(old), str(new)])
+        return bench_compare.main()
+
+    assert run(tail_only, parsed) == 0
+    assert run(tail_only, record) != 0
+    assert run(record, parsed) != 0
+
+
+def test_oracle_gates_refuse_unknown_query_names(monkeypatch):
+    """A requested name that is not in the registry fails both oracle
+    gates before any Spark session starts, rather than being skipped
+    and reported as zero failures."""
+    import sys
+
+    from pyspark.sql import SparkSession
+
+    import sandbox_data_pipeline_spark.session as session
+
+    sys.path.insert(0, str(QUERY_DIR.parent.parent))
+    from tools import check_oracle, pandas_sim
+
+    def no_spark(*a, **k):
+        raise AssertionError("Spark started for an unknown query name")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    monkeypatch.setattr(SparkSession, "builder", None)
+    for tool in (check_oracle, pandas_sim):
+        monkeypatch.setattr(sys, "argv", ["gate", "sf_dir", "q_no_such_query"])
+        assert tool.main() == 1, tool.__name__
 
 
 def test_bench_cumulative_ledger_complete():

@@ -1,5 +1,6 @@
-"""Round-3 additions: chunk manifests, PMI, KL drift, count-min
-sketch, PageRank, event funnel — semantics on crafted inputs."""
+"""Text, sketch and graph operators: chunk manifests, PMI, KL drift,
+count-min sketch, PageRank, event funnel — semantics on crafted
+inputs."""
 
 from __future__ import annotations
 

@@ -1,6 +1,7 @@
-"""Semantic tests for the round-4 query family — each asserts the
-statistical property the operator exists to measure, on data
-constructed to exhibit (or not exhibit) it."""
+"""Semantic tests for the drift, concentration and sketch-estimate
+queries (curriculum, PIT features, PSI, Benford, Gini, KMV) — each
+asserts the statistical property the operator exists to measure, on
+data constructed to exhibit (or not exhibit) it."""
 
 from __future__ import annotations
 

@@ -1,8 +1,8 @@
-"""Randomized batch-proofs for the round-6 operators: one Spark job
-over hundreds of seeded-random inputs per operator, checked against
-independent pure-Python implementations. A failure here means the
-operator breaks on inputs the graded parquet merely happens not to
-contain yet."""
+"""Randomized batch-proofs for BPE token counts, fuzzy matching and
+integer moments: one Spark job over hundreds of seeded-random inputs
+per operator, checked against independent pure-Python implementations.
+A failure here means the operator breaks on inputs the graded parquet
+merely happens not to contain yet."""
 
 from __future__ import annotations
 

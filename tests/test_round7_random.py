@@ -1,4 +1,4 @@
-"""Seeded-random differential tests for the round-7 operators:
+"""Seeded-random differential tests for graph, span and AUC operators:
 LPA / BFS vs pure-Python references on random graphs, duplicate_spans
 vs a brute-force interval scan, and AUC vs a direct pair count."""
 

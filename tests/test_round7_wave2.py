@@ -1,8 +1,8 @@
-"""Differential tests for the round-7 second-wave queries: CUSUM's
-window-function closed form vs the textbook recursion, k-core peeling
-vs a pure-Python peel (plus the bounded-unroll convergence claim),
-association rules / stump split / PR curve vs brute-force references
-on seeded random data."""
+"""Differential tests for the change-point, k-core and rule-mining
+queries: CUSUM's window-function closed form vs the textbook
+recursion, k-core peeling vs a pure-Python peel (plus the
+bounded-unroll convergence claim), association rules / stump split /
+PR curve vs brute-force references on seeded random data."""
 
 from __future__ import annotations
 

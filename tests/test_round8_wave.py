@@ -1,6 +1,6 @@
-"""Round-8 wave: pinned-value unit tests on tiny fixtures for the
-classifier-QA / diversity / time-series / resampling queries (the
-DuckDB oracle gate covers the corpus; these pin the math itself)."""
+"""Classifier-QA, diversity, time-series and resampling queries:
+pinned-value unit tests on tiny fixtures (the DuckDB oracle gate
+covers the corpus; these pin the math itself)."""
 
 from __future__ import annotations
 

@@ -1,4 +1,5 @@
-"""Semantic (non-oracle) properties of the round-9 wave-2 operators.
+"""Semantic (non-oracle) properties of the estimator, ranking-eval and
+clustering operators (shrinkage, causal effects, DBSCAN, coverage).
 
 The DuckDB oracle gate proves Spark == SQL replay; these tests pin the
 *algorithmic* guarantees that the replay alone would not catch if both

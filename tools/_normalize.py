@@ -56,8 +56,10 @@ def value_hash(cols: list[str], rows: list[tuple]) -> str:
 
 
 def diff_sample(scols, srows, dcols, drows, k: int = 3):
-    sset = row_lines(scols, srows)
-    dset = row_lines(dcols, drows)
-    sonly = [x for x in sset if x not in set(dset)][:k]
-    donly = [x for x in dset if x not in set(sset)][:k]
+    """Up to ``k`` normalized rows found only on each side."""
+    slines = row_lines(scols, srows)
+    dlines = row_lines(dcols, drows)
+    sset, dset = set(slines), set(dlines)
+    sonly = [x for x in slines if x not in dset][:k]
+    donly = [x for x in dlines if x not in sset][:k]
     return sonly, donly

@@ -2,11 +2,13 @@
 
 Usage: python tools/bench_compare.py OLD.json NEW.json [threshold]
 
-Accepts either the raw one-line bench output or the driver's
-BENCH_r{N}.json envelope (which nests it under ["parsed"]). Prints the
+Accepts the raw one-line bench output, a bench.py ``BENCH_LOCAL.json``
+record, or a ``BENCH_r{N}.json`` envelope (stdout ``tail`` plus the
+parsed final line under ["parsed"], which may be null). Prints the
 shared-set totals and every query whose ratio new/old exceeds the
-threshold (default 1.5), plus entries present on only one side — the
-regression diff to read before trusting a round's headline number.
+threshold (default 1.5), plus entries present on only one side.
+Refuses (exit 2) two records whose ``cpus`` are both set and differ:
+per-query times do not carry across core counts.
 Timings swing with machine load; compare mins from bench.py's
 min-of-3, and treat <1.5x as noise unless it reproduces.
 """
@@ -14,21 +16,34 @@ min-of-3, and treat <1.5x as noise unless it reproduces.
 from __future__ import annotations
 
 import json
+import re
 import sys
 
 
-def load(path: str) -> dict[str, float]:
+def load(path: str) -> tuple[dict[str, float], int | None]:
+    """Per-query seconds and the record's cpu count (None if unset).
+    Every source is merged: pairs regexed from the envelope's stdout
+    tail, then the parsed final line (budgeted slowest-first, so a
+    subset), then the top-level ``queries``; later sources win."""
     with open(path, encoding="utf-8") as f:
         doc = json.load(f)
-    if "queries" not in doc and "parsed" in doc:
-        doc = doc["parsed"]
-    return doc["queries"]
+    times = {
+        k: float(v)
+        for k, v in re.findall(r'"(q_\w+|flagship)":\s?([0-9.]+)', doc.get("tail") or "")
+    }
+    if isinstance(doc.get("parsed"), dict):
+        times.update(doc["parsed"].get("queries") or {})
+    times.update(doc.get("queries") or {})
+    return times, doc.get("cpus")
 
 
-def main() -> None:
+def main() -> int:
     if len(sys.argv) < 3:
         sys.exit(__doc__)
-    old, new = load(sys.argv[1]), load(sys.argv[2])
+    (old, old_cpus), (new, new_cpus) = load(sys.argv[1]), load(sys.argv[2])
+    if old_cpus and new_cpus and old_cpus != new_cpus:
+        print(f"refusing to compare: cpus {old_cpus} vs {new_cpus}", file=sys.stderr)
+        return 2
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     shared = sorted(set(old) & set(new))
     t_old = sum(old[k] for k in shared)
@@ -48,7 +63,8 @@ def main() -> None:
         print(f"  new-only  {k}: {new[k]:.3f}")
     for k in sorted(set(old) - set(new)):
         print(f"  dropped   {k}: {old[k]:.3f}")
+    return 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())

@@ -15,8 +15,7 @@ import time
 
 sys.path.insert(0, ".")
 
-from tools._normalize import norm as _norm  # noqa: E402
-from tools._normalize import value_hash  # noqa: E402
+from tools._normalize import diff_sample, value_hash  # noqa: E402
 
 
 def main() -> int:
@@ -28,13 +27,17 @@ def main() -> int:
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracle = queries(), oracle_sql()
+    unknown = sorted(only - qs.keys())
+    if unknown:
+        print(f"not in registry: {unknown}", file=sys.stderr)
+        return 1
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracle = queries(), oracle_sql()
     failed = []
     for name, fn in qs.items():
         if only and name not in only:
@@ -70,12 +73,7 @@ def main() -> int:
             failed.append(name)
             print(f"FAIL  {name}: {'; '.join(problems)}")
             if "value-hash mismatch" in problems:
-                order = sorted(range(len(scols)), key=lambda i: scols[i])
-                sset = sorted("|".join(_norm(r[i]) for i in order) for r in srows)
-                dorder = sorted(range(len(dcols)), key=lambda i: dcols[i])
-                dset = sorted("|".join(_norm(r[i]) for i in dorder) for r in drows)
-                sonly = [x for x in sset if x not in set(dset)][:3]
-                donly = [x for x in dset if x not in set(sset)][:3]
+                sonly, donly = diff_sample(scols, srows, dcols, drows)
                 for x in sonly:
                     print(f"        spark-only: {x[:200]}")
                 for x in donly:

@@ -17,7 +17,7 @@ import sys
 
 sys.path.insert(0, ".")
 
-from tools.check_oracle import value_hash  # noqa: E402
+from tools._normalize import value_hash  # noqa: E402
 
 
 def run_pass(sf_dir: str, names, shuffle_partitions: int, max_split: str) -> dict:

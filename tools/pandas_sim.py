@@ -1,30 +1,29 @@
-"""Pandas-path driver simulator.
+"""Pandas-path oracle gate.
 
-Round-5 forensics (ADVICE.md + CORRECTNESS_r05.json canary traceback)
-proved the grading driver canonicalizes BOTH result sets as *pandas
-DataFrames*: Spark via ``df.toPandas()`` and DuckDB via ``.df()``,
-then ``sort_values`` over all columns and a value hash. That path has
-dtype semantics the tuple-collect path does not:
+Compares every registry query with its DuckDB oracle the way a pandas
+consumer sees them: Spark via ``df.toPandas()`` on a vanilla session,
+DuckDB via ``.df()``, both canonicalized (columns by name, rows sorted
+on every column) and compared per cell by ``str()``. That path has
+dtype semantics the tuple-collect path of tools/check_oracle.py does
+not, e.g.:
 
 * DuckDB DECIMAL  -> float64        (so Spark Decimal('25.5000') vs 25.5)
 * DuckDB DATE     -> datetime64[ns] (Spark DATE -> object datetime.date)
 * NULL BIGINT     -> float64 NaN on both sides (usually consistent)
 
-This tool runs every graded query through BOTH collection paths and
-compares the canonicalized frames several ways, so we can (a) validate
-which comparator reproduces the driver's r05 verdicts exactly and
-(b) iterate until every query is green under that comparator.
+Prints one line per query (``ok``, ``ok*`` rows-only, ``MISM`` or
+``ERR``) and exits 1 on any mismatch, Spark or DuckDB error, or a
+requested name that is not in the registry (checked before Spark
+starts). ``driver_verdict`` is the comparator the contract tests reuse.
 
 Usage: python tools/pandas_sim.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, ".")
@@ -37,23 +36,6 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     if len(df.columns):
         df = df.sort_values(by=list(df.columns), kind="mergesort")
     return df.reset_index(drop=True)
-
-
-def cell_repr(v) -> str:
-    """Stable scalar repr used for the string-level comparator."""
-    if v is None or (isinstance(v, float) and np.isnan(v)):
-        return "<NULL>"
-    if isinstance(v, float):
-        return repr(v)
-    if isinstance(v, np.floating):
-        return repr(float(v))
-    if isinstance(v, (np.integer,)):
-        return repr(int(v))
-    return repr(v)
-
-
-def frame_strings(df: pd.DataFrame) -> list[str]:
-    return ["|".join(cell_repr(v) for v in row) for row in df.itertuples(index=False)]
 
 
 def driver_verdict(spdf: pd.DataFrame, dkdf: pd.DataFrame) -> tuple[str, str]:
@@ -88,61 +70,6 @@ def driver_verdict(spdf: pd.DataFrame, dkdf: pd.DataFrame) -> tuple[str, str]:
     return "PASS", ""
 
 
-def compare(spdf: pd.DataFrame, dkdf: pd.DataFrame) -> dict:
-    """Compare canonicalized frames on every axis the driver could
-    plausibly hash on. Returns dict of axis -> problem description
-    (empty dict == identical on all axes)."""
-    out: dict[str, str] = {}
-    if sorted(spdf.columns) != sorted(dkdf.columns):
-        out["cols"] = f"{sorted(spdf.columns)} vs {sorted(dkdf.columns)}"
-        return out
-    try:
-        s = canon(spdf)
-        d = canon(dkdf)
-    except Exception as e:  # e.g. unhashable ndarray in sort_values
-        out["canon_crash"] = f"{type(e).__name__}: {e}"
-        return out
-    if len(s) != len(d):
-        out["rows"] = f"{len(s)} vs {len(d)}"
-        return out
-    # dtype axis
-    dt_mismatch = {
-        c: f"{s[c].dtype} vs {d[c].dtype}" for c in s.columns if s[c].dtype != d[c].dtype
-    }
-    if dt_mismatch:
-        out["dtype"] = str(dt_mismatch)
-    # exact-value axis (column-wise, dtype-agnostic via python objects)
-    bad_cols = {}
-    for c in s.columns:
-        sv = s[c].tolist()
-        dv = d[c].tolist()
-        ncell = 0
-        example = None
-        for a, b in zip(sv, dv):
-            a_null = a is None or (isinstance(a, float) and np.isnan(a)) or a is pd.NaT
-            b_null = b is None or (isinstance(b, float) and np.isnan(b)) or b is pd.NaT
-            if a_null and b_null:
-                continue
-            same_val = (a == b)
-            same_type = type(a).__name__ == type(b).__name__
-            same_str = cell_repr(a) == cell_repr(b)
-            if not (same_val and same_str):
-                ncell += 1
-                if example is None:
-                    example = f"{cell_repr(a)!s} vs {cell_repr(b)!s} (types {type(a).__name__}/{type(b).__name__})"
-            elif not same_type and "pytype" not in out:
-                # same repr, different python type (e.g. int vs np.int64) — note once
-                pass
-        if ncell:
-            bad_cols[c] = f"{ncell} cells, e.g. {example}"
-    if bad_cols:
-        out["value"] = str(bad_cols)[:600]
-    # string-hash axis
-    if frame_strings(s) != frame_strings(d):
-        out.setdefault("strhash", "repr-level mismatch")
-    return out
-
-
 def main() -> int:
     import duckdb
 
@@ -150,9 +77,14 @@ def main() -> int:
     from sandbox_data_pipeline_spark.catalog import TABLES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = [a for a in sys.argv[2:]]
+    qs, oracle = queries(), oracle_sql()
+    names = sys.argv[2:] or list(qs)
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        print(f"not in registry: {unknown}", file=sys.stderr)
+        return 1
 
-    # Vanilla session — what the driver builds, not session.py's.
+    # Vanilla session, not session.py's tuned one.
     from pyspark.sql import SparkSession
 
     spark = (
@@ -165,24 +97,12 @@ def main() -> int:
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    qs, oracle = queries(), oracle_sql()
-    r05 = {}
-    try:
-        r05 = json.load(open("CORRECTNESS_r05.json"))
-    except Exception:
-        pass
-
-    names = only or list(qs)
-    agree = disagree = 0
-    verdicts = {}
+    failed = []
     for name in names:
-        if name not in qs:
-            print(f"??    {name}: not in registry")
-            continue
         try:
             spdf = qs[name](spark, sf_dir).toPandas()
         except Exception as e:
-            verdicts[name] = {"spark_err": f"{type(e).__name__}: {str(e)[:300]}"}
+            failed.append(name)
             print(f"ERR   {name}: spark {type(e).__name__}: {str(e)[:200]}")
             continue
         if name not in oracle:
@@ -191,32 +111,18 @@ def main() -> int:
         try:
             dkdf = con.execute(oracle[name]).df()
         except Exception as e:
-            verdicts[name] = {"duck_err": f"{type(e).__name__}: {str(e)[:300]}"}
+            failed.append(name)
             print(f"ERR   {name}: duck {type(e).__name__}: {str(e)[:200]}")
             continue
-        sim_s, detail = driver_verdict(spdf, dkdf)
-        verdicts[name] = (sim_s, detail)
-        drv = r05.get(name)
-        drv_s = None
-        if drv is not None:
-            drv_s = (
-                "ERR" if drv.get("err") else ("PASS" if drv["hash_match"] else "FAIL")
-            )
-        tag = "ok   " if sim_s == "PASS" else ("ERR  " if sim_s == "ERR" else "MISM ")
-        cmp_note = ""
-        if drv_s is not None:
-            mark = "AGREE" if sim_s == drv_s else "**DISAGREE**"
-            if sim_s == drv_s:
-                agree += 1
-            else:
-                disagree += 1
-            cmp_note = f"  [driver={drv_s} sim={sim_s} {mark}]"
-        print(f"{tag} {name}{cmp_note}")
+        verdict, detail = driver_verdict(spdf, dkdf)
+        if verdict != "PASS":
+            failed.append(name)
+        tag = "ok   " if verdict == "PASS" else ("ERR  " if verdict == "ERR" else "MISM ")
+        print(f"{tag} {name}")
         if detail:
             print(f"        {detail[:500]}")
-    if r05:
-        print(f"\ndriver-vs-sim: {agree} agree, {disagree} disagree")
-    return 0
+    print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":

@@ -15,7 +15,7 @@ python -m pytest tests/ -x -q -m slow
 echo "== 2/8 hourly end to end (prod rows, re-run hashes, stream sink vs DuckDB) =="
 python3 perfbench/run.py --workload hourly --smoke --trace 0
 
-echo "== 3/8 pandas-path gate (THE grading model) @ ${SF_GRADE} =="
+echo "== 3/8 pandas-path gate (toPandas vs DuckDB .df, per-cell str) @ ${SF_GRADE} =="
 python tools/pandas_sim.py "${SF_GRADE}"
 
 echo "== 4/8 strict tuple-path gate @ ${SF_GRADE} =="
