@@ -52,7 +52,37 @@ SCALE_CONFS: dict[str, str] = {
     # in flight, thin rows still fill the 10k-row default.
     "spark.sql.execution.arrow.maxRecordsPerBatch": "10000",
     "spark.sql.execution.arrow.maxBytesPerBatch": "33554432",
+    # Generated code stays compiled. Every whole-stage pipeline and
+    # projection is a Java class, compiled by Janino and then again by
+    # HotSpot's JIT, and kept in a per-JVM cache of this many entries
+    # (Spark's default is 100; the cache is split into 4 LRU segments).
+    # Measured on 4 cpus, pyspark 4.1.2, counting Janino compiles with
+    # CodegenMetrics.METRIC_COMPILATION_TIME: one pass of the six
+    # perfbench curation queries compiles 173 classes (215 with stage
+    # ids in class names, below). A second pass compiled 213 of them
+    # again at 100, 36 at 200 and 0 at 250 (also when the first pass
+    # ran at sf0.001 and the second at sf0.01). Metaspace after two
+    # passes (MemoryPoolMXBean): 168.3 MB at 100 (432 compiles),
+    # 168.4 MB at 250 (173 compiles). This is a STATIC conf: it takes
+    # effect when the JVM's first session is built, and a reused
+    # session keeps the size it was built with.
+    "spark.sql.codegen.cache.maxEntries": "250",
+    # The cache key is the generated source, and by default the class
+    # name carries the whole-stage codegen id. AQE numbers stages in
+    # the order it creates them, which follows which stage finished
+    # first, so the same pipeline under another id was a new class:
+    # with ids, q_lof_outliers recompiled 4-12 classes on repeat runs
+    # and one curation pass compiled 215 classes instead of 173.
+    "spark.sql.codegen.useIdInClassName": "false",
 }
+
+
+def local_cpus() -> int:
+    """Cores for local mode: ``$SPARK_GRAFT_CPUS`` when set, else the
+    cpus this process may run on (its affinity mask, which a cpuset or
+    ``taskset`` narrows below the host's core count)."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -63,15 +93,14 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for local work;
+    ``master`` defaults to ``local[local_cpus()]`` for local work;
     on a real cluster pass ``None`` after setting ``--master`` in
     spark-submit (an existing session is reused as-is, confs applied
     where runtime-settable).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and not os.environ.get("SPARK_MASTER"):
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cpus()}]"
     if master:
         builder = builder.master(master)
     # Local-mode heap: Spark's default driver memory is 1g, which in
@@ -85,7 +114,7 @@ def get_spark(
         # Local mode: one shuffle partition per core keeps every stage
         # fully parallel without tiny-task overhead. On a cluster this
         # should be ~2-3x total cores; AQE coalesces the excess.
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = local_cpus()
     confs = dict(SCALE_CONFS)
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_conf:

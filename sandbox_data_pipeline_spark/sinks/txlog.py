@@ -1076,26 +1076,28 @@ class TxTable:
             if pcol not in f.stats
             or not (f.stats[pcol]["max"] < lo or f.stats[pcol]["min"] > hi)
         ]
-        if not touched:
-            return {"version": rv, "n_deleted": 0, "files_touched": 0}
-        matches = (
-            self._scan_adds(
-                touched,
-                self.schema_at(rv),
-                with_meta=True,
-                mapping=self.column_mapping_at(rv),
+        pdel: list[str] = []
+        n = 0
+        if touched:
+            matches = (
+                self._scan_adds(
+                    touched,
+                    self.schema_at(rv),
+                    with_meta=True,
+                    mapping=self.column_mapping_at(rv),
+                )
+                .where(F.col(col).between(F.lit(lo), F.lit(hi)))
+                .select(F.col("__fp").alias("fp"), F.col("__ri").alias("ri"))
             )
-            .where(F.col(col).between(F.lit(lo), F.lit(hi)))
-            .select(F.col("__fp").alias("fp"), F.col("__ri").alias("ri"))
-        )
-        sub = f"pdel/v{rv + 1}-{uuid.uuid4().hex[:8]}"
-        abs_dir = os.path.join(self.path, sub)
-        matches.write.mode("error").parquet(abs_dir)
-        n = self.spark.read.parquet(abs_dir).count()
+            sub = f"pdel/v{rv + 1}-{uuid.uuid4().hex[:8]}"
+            abs_dir = os.path.join(self.path, sub)
+            matches.write.mode("error").parquet(abs_dir)
+            n = self.spark.read.parquet(abs_dir).count()
+            pdel = [sub]
         v = self._commit(
             "pdelete", [], [], rv,
             keys_touched={"col": col, "lo": str(lo), "hi": str(hi)},
-            txn=txn, pdel=[sub], pdel_files=[f.path for f in touched],
+            txn=txn, pdel=pdel, pdel_files=[f.path for f in touched],
         )
         return {"version": v, "n_deleted": int(n), "files_touched": len(touched)}
 
@@ -1121,22 +1123,22 @@ class TxTable:
             if pcol not in f.stats
             or not (f.stats[pcol]["max"] < lo or f.stats[pcol]["min"] > hi)
         ]
-        if not touched:
-            return {"version": rv, "files_rewritten": 0, "files_total": len(snap)}
-        # read through the DV layer: rewriting a file that carries
-        # position deletes must NOT resurrect its deleted rows (the
-        # rewrite then supersedes the file and the markers go inert)
-        with_meta = bool(self._pdel_dirs_at(rv))
-        survivors = self._apply_pdels(
-            self._scan_adds(
-                touched,
-                self.schema_at(rv),
-                with_meta=with_meta,
-                mapping=self.column_mapping_at(rv),
-            ),
-            rv,
-        ).where(~F.col(col).between(F.lit(lo), F.lit(hi)))
-        adds = self._write_data(survivors, rv + 1)
+        adds: list[AddFile] = []
+        if touched:
+            # read through the DV layer: rewriting a file that carries
+            # position deletes must NOT resurrect its deleted rows (the
+            # rewrite then supersedes the file and the markers go inert)
+            with_meta = bool(self._pdel_dirs_at(rv))
+            survivors = self._apply_pdels(
+                self._scan_adds(
+                    touched,
+                    self.schema_at(rv),
+                    with_meta=with_meta,
+                    mapping=self.column_mapping_at(rv),
+                ),
+                rv,
+            ).where(~F.col(col).between(F.lit(lo), F.lit(hi)))
+            adds = self._write_data(survivors, rv + 1)
         v = self._commit(
             "delete",
             adds,
@@ -1181,28 +1183,28 @@ class TxTable:
         names = [f.name for f in schema.fields]
         if set_col not in names:
             raise ValueError(f"update_where: no column {set_col!r}")
-        if not touched:
-            return {"version": rv, "files_rewritten": 0, "files_total": len(snap)}
-        dt = next(f.dataType for f in schema.fields if f.name == set_col)
-        wm = bool(self._pdel_dirs_at(rv))
-        current = self._apply_pdels(
-            self._scan_adds(
-                touched,
-                schema,
-                with_meta=wm,
-                mapping=self.column_mapping_at(rv),
-            ),
-            rv,
-        )
-        updated = current.withColumn(
-            set_col,
-            F.when(
-                F.col(col).between(F.lit(lo), F.lit(hi)),
-                F.expr(set_expr).cast(dt),
-            ).otherwise(F.col(set_col)),
-        )
-        self._enforce_constraints(updated)
-        adds = self._write_data(updated, rv + 1)
+        adds: list[AddFile] = []
+        if touched:
+            dt = next(f.dataType for f in schema.fields if f.name == set_col)
+            wm = bool(self._pdel_dirs_at(rv))
+            current = self._apply_pdels(
+                self._scan_adds(
+                    touched,
+                    schema,
+                    with_meta=wm,
+                    mapping=self.column_mapping_at(rv),
+                ),
+                rv,
+            )
+            updated = current.withColumn(
+                set_col,
+                F.when(
+                    F.col(col).between(F.lit(lo), F.lit(hi)),
+                    F.expr(set_expr).cast(dt),
+                ).otherwise(F.col(set_col)),
+            )
+            self._enforce_constraints(updated)
+            adds = self._write_data(updated, rv + 1)
         v = self._commit(
             "update",
             adds,
@@ -1253,12 +1255,31 @@ class TxTable:
             raise ValueError(f"when_matched must be update|delete, got {when_matched!r}")
         rv = self.latest_version()
         snap = self.snapshot(rv)
-        bounds = source.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
+        # One pass over the source, before anything commits: Delta's
+        # MERGE contract (a source row matches at most one target row
+        # AND carries a non-null key — a duplicate key would insert
+        # several rows through the left_anti + union plan below, a null
+        # key never matches and would duplicate instead of upserting)
+        # plus the key bounds that prune the target's files.
+        chk = source.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(key).alias("n_nonnull"),
+            F.countDistinct(key).alias("n_keys"),
+            F.min(key).alias("lo"),
+            F.max(key).alias("hi"),
         ).first()
-        lo, hi = bounds["lo"], bounds["hi"]
-        if lo is None:
-            return rv  # empty source: no-op
+        if chk["n"] != chk["n_nonnull"]:
+            raise ValueError(
+                f"merge source has {chk['n'] - chk['n_nonnull']} null "
+                f"{key!r} keys; upsert semantics require non-null keys"
+            )
+        if chk["n"] != chk["n_keys"]:
+            raise ValueError(
+                f"merge source has duplicate {key!r} keys "
+                f"({chk['n']} rows, {chk['n_keys']} distinct); "
+                "a source row must match at most one target row"
+            )
+        lo, hi = chk["lo"], chk["hi"]
         schema = self.schema_at(rv)
         if evolve_schema:
             have = {f.name for f in schema.fields}
@@ -1283,6 +1304,10 @@ class TxTable:
                     for f in schema.fields
                 ]
             )
+        if lo is None:
+            # empty source: no row changes, but the call still commits
+            # (every write call is one version, whatever the layout)
+            return self._commit("merge", [], [], rv, txn=txn)
         pkey = (self.column_mapping_at(rv) or {}).get(key, key)
         touched = [
             f
@@ -1304,28 +1329,6 @@ class TxTable:
             )
         else:
             current = self.spark.createDataFrame([], schema)
-        # Delta's MERGE contract: a source row must match at most one
-        # target row AND carry a non-null key. A duplicate-key source
-        # would insert multiple rows per key through the left_anti +
-        # union plan below; null keys never match the anti-join and
-        # would duplicate instead of upserting. Validate in ONE bounded
-        # aggregation (three counters, no extra shuffle of data rows).
-        chk = source.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count(key).alias("n_nonnull"),
-            F.countDistinct(key).alias("n_keys"),
-        ).first()
-        if chk["n"] != chk["n_nonnull"]:
-            raise ValueError(
-                f"merge source has {chk['n'] - chk['n_nonnull']} null "
-                f"{key!r} keys; upsert semantics require non-null keys"
-            )
-        if chk["n"] != chk["n_keys"]:
-            raise ValueError(
-                f"merge source has duplicate {key!r} keys "
-                f"({chk['n']} rows, {chk['n_keys']} distinct); "
-                "a source row must match at most one target row"
-            )
         cols = [f.name for f in schema.fields]
         if when_matched == "update" and matched_condition is None and insert_unmatched:
             # fast path: the classic upsert plan (one anti join)

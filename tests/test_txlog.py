@@ -585,6 +585,40 @@ def test_merge_rejects_duplicate_and_null_source_keys(spark, tmp_path):
         )
 
 
+def test_rejected_evolving_merge_commits_nothing(spark, tmp_path):
+    """MERGE with schema evolution validates its source before the
+    widening add_columns commit: a rejected source leaves the version
+    and the schema as they were."""
+    t = _mk(spark, tmp_path)
+    schema = t.schema_at()
+    for rows, match in (
+        ([(1, 10, "a"), (1, 20, "b")], "duplicate"),
+        ([(None, 10, "a"), (2, 20, "b")], "null"),
+    ):
+        src = spark.createDataFrame(rows, "k long, v long, grade string")
+        with pytest.raises(ValueError, match=match):
+            t.merge(src, "k", evolve_schema=True)
+        assert t.latest_version() == 0
+        assert t.schema_at() == schema
+
+
+def test_every_write_call_commits_one_version(spark, tmp_path):
+    """Version N is the N-th write call whatever the file layout: a
+    delete, update or position delete that overlaps no file, and a
+    merge of an empty source, still commit (with no adds or removes)."""
+    t = _mk(spark, tmp_path)  # k 0..99
+    files = set(t.snapshot())
+    assert t.delete_where("k", 500, 600)["version"] == 1
+    assert t.update_where("v", "v + 1", "k", 500, 600)["version"] == 2
+    assert t.delete_where_positional("k", 500, 600)["version"] == 3
+    assert t.merge(spark.createDataFrame([], "k long, v long"), "k") == 4
+    assert [e["operation"] for e in t.history()] == [
+        "create", "delete", "update", "pdelete", "merge",
+    ]
+    assert set(t.snapshot()) == files
+    assert t.read().count() == 100
+
+
 def test_refresh_rollup_on_shallow_clone(spark, tmp_path):
     """Clone v0 references files rooted at the SOURCE table; the first
     incremental refresh must resolve AddFile.base (ADVICE fix)."""

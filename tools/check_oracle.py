@@ -34,6 +34,10 @@ def main() -> int:
         return 1
 
     spark = get_spark("oracle-check")
+    # Janino compiles are JVM-wide; the delta over the sweep is the
+    # number of generated classes the codegen cache could not serve.
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -81,6 +85,11 @@ def main() -> int:
         else:
             print(f"ok    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
+    print(
+        f"codegen: {codegen.METRIC_COMPILATION_TIME().getCount() - compiles0} "
+        "Janino compiles over the sweep, cache maxEntries "
+        f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')}"
+    )
     return 1 if failed else 0
 
 

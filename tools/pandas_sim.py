@@ -21,7 +21,6 @@ Usage: python tools/pandas_sim.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import os
 import sys
 
 import pandas as pd
@@ -87,8 +86,10 @@ def main() -> int:
     # Vanilla session, not session.py's tuned one.
     from pyspark.sql import SparkSession
 
+    from sandbox_data_pipeline_spark.session import local_cpus
+
     spark = (
-        SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+        SparkSession.builder.master(f"local[{local_cpus()}]")
         .appName("pandas-sim")
         .getOrCreate()
     )
