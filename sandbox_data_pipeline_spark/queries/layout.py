@@ -12,6 +12,8 @@ into a measured, oracle-verified comparison between the natural
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -282,9 +284,6 @@ def q_csv_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reason the hostile column stops at commas/quotes); the
     writer/reader plumbing here is the per-partition production
     path."""
-    import shutil
-    import tempfile
-
     slice_df = table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -295,8 +294,9 @@ def q_csv_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             "d"
         ),
     )
-    tmp = tempfile.mkdtemp(prefix="csvx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="csvx_", ignore_cleanup_errors=True
+    ) as tmp:
         path = f"{tmp}/documents_csv"
         (
             slice_df.write.mode("overwrite")
@@ -328,11 +328,8 @@ def q_csv_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("d").cast("timestamp_ntz").alias("max_d"),
             F.max("doc_id").alias("max_id"),
         )
-        # localCheckpoint RETURNS the materialized frame — the temp
-        # CSV dir is gone once this function exits
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # the temp CSV dir is gone once this function exits
+        return out.localCheckpoint(eager=True)
 
 
 ORACLE["q_csv_interchange"] = """
@@ -370,9 +367,6 @@ def q_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule straight from parquet — a hash match proves the reader
     salvaged every valid line, nulled no good field, and captured
     every bad line in _corrupt_record."""
-    import shutil
-    import tempfile
-
     docs = table(spark, sf_dir, "documents")
     lines = docs.select(
         F.when(
@@ -392,8 +386,9 @@ def q_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    tmp = tempfile.mkdtemp(prefix="jsonq_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="jsonq_", ignore_cleanup_errors=True
+    ) as tmp:
         path = f"{tmp}/landing"
         lines.write.mode("overwrite").text(path)
         back = (
@@ -418,9 +413,7 @@ def q_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("_corrupt_record")).alias("quarantine_chars"),
             )
         )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 ORACLE["q_ingest_quarantine"] = """
@@ -456,9 +449,6 @@ def q_orc_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
     dyadic rationals (k/4 + k/8), so double addition is exact and
     association-independent on both engines; the decimal column pins
     exact fixed-point transport; binary length pins byte fidelity."""
-    import shutil
-    import tempfile
-
     docs = table(spark, sf_dir, "documents")
     slice_df = docs.select(
         "doc_id",
@@ -480,8 +470,9 @@ def q_orc_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             " + make_dt_interval(0, 0, 0, CAST(doc_id % 86400 AS INT))"
         ).alias("ts"),
     )
-    tmp = tempfile.mkdtemp(prefix="orcx_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orcx_", ignore_cleanup_errors=True
+    ) as tmp:
         path = f"{tmp}/documents_orc"
         slice_df.write.mode("overwrite").orc(path)
         schema = (
@@ -503,11 +494,8 @@ def q_orc_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ts").alias("min_ts"),
             F.max("ts").alias("max_ts"),
         )
-        # localCheckpoint RETURNS the materialized frame — the temp
-        # ORC dir is gone once this function exits
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        # the temp ORC dir is gone once this function exits
+        return out.localCheckpoint(eager=True)
 
 
 ORACLE["q_orc_interchange"] = """

@@ -13,18 +13,43 @@ pruning, or merge key resolution shows up as a hash mismatch.
 Determinism note: l_quantity in this corpus is integral doubles, so
 sums are exact in IEEE double regardless of partition order; the final
 cast to DECIMAL(18,2) pins the output type on both engines.
+
+Scratch-table shape: every query below builds its table inside one
+``tempfile.TemporaryDirectory`` scope, which is deleted when the query
+returns. Snapshots are read lazily by version number after the last
+commit (``TxTable.read`` resolves its file list when called, and no
+query here vacuums), and the returned frame is cut once with
+``localCheckpoint(eager=True)`` as the last statement inside the scope,
+so the result never reads the deleted files. The IVM queries pin each
+refreshed view with the same eager cut; the metadata-only queries build
+their rows from the commit log and need no cut.
 """
 
 from __future__ import annotations
 
-import shutil
 import tempfile
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.catalog import table
-from sandbox_data_pipeline_spark.sinks.txlog import TxTable, refresh_dd_sketch
+from sandbox_data_pipeline_spark.sinks.txlog import (
+    TxTable,
+    build_bloom_index,
+    create_branch,
+    create_tag,
+    files_skipped_bloom,
+    optimize,
+    publish_branch,
+    read_tag,
+    refresh_dd_sketch,
+    refresh_join_rollup,
+    refresh_rollup,
+    replace_where,
+    restore,
+    table_changes,
+)
 
 _K = 2000  # base slice: l_orderkey <= K (present at every SF)
 _D1, _D2 = 5_000, 9_999  # rid range deleted in commit v1
@@ -32,25 +57,47 @@ _U1, _U2 = 10_000, 14_999  # rid range upserted in commit v2
 _NEW_OFF = 900_000_000  # rid offset for merge-inserted rows
 
 
-def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Create → delete → merge on a TxTable, then aggregate EVERY
-    version via time-travel reads. The 3-row collect is the bounded
-    per-version summary (one row per commit), not a data read."""
-    li = table(spark, sf_dir, "lineitem")
-    # the synthetic corpus does NOT guarantee (orderkey, linenumber)
-    # uniqueness — dedupe to a keyed table (max qty per rid) so merge's
-    # Delta-parity contract (unique non-null source keys) holds
-    base = (
-        li.where(F.col("l_orderkey") <= _K)
+def keyed(li: DataFrame, lo: int | None, hi: int, agg=F.max) -> DataFrame:
+    """The keyed lineitem slice ``lo < l_orderkey <= hi`` (no lower
+    bound when ``lo`` is None). The synthetic corpus does NOT guarantee
+    (orderkey, linenumber) uniqueness, so the slice is deduped to one
+    ``agg(l_quantity)`` per rid — merge's Delta-parity contract (unique
+    non-null source keys) holds on every slice."""
+    cond = F.col("l_orderkey") <= hi
+    if lo is not None:
+        cond = (F.col("l_orderkey") > lo) & cond
+    return (
+        li.where(cond)
         .groupBy(
             (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
             .cast("long")
             .alias("rid")
         )
-        .agg(F.max("l_quantity").alias("qty"))
+        .agg(agg("l_quantity").alias("qty"))
     )
-    tmp = tempfile.mkdtemp(prefix="txdemo_")
-    try:
+
+
+def _totals(qcol: str = "qty") -> list[Column]:
+    """Row count and exact decimal sum of ``qcol``: the per-snapshot
+    summary most queries below emit."""
+    return [
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(qcol).cast("decimal(18,2)").alias("sum_qty"),
+    ]
+
+
+def _phase(df: DataFrame, phase: str, qcol: str = "qty") -> DataFrame:
+    """One summary row of ``df``, labelled ``phase``."""
+    return df.agg(F.lit(phase).alias("phase"), *_totals(qcol))
+
+
+def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Create → delete → merge on a TxTable, then aggregate EVERY
+    version via time-travel reads: one summary row per commit."""
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _K)
+    with tempfile.TemporaryDirectory(
+        prefix="txdemo_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(
             spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid")
         )
@@ -66,22 +113,13 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast(qty_t).alias("qty"),
         )
         t.merge(upd.unionByName(new), "rid")
-        rows = []
-        for v in range(3):
-            r = (
-                t.read(version=v)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-                )
-                .first()
-            )
-            rows.append((v, r["n_rows"], r["sum_qty"]))
-        return spark.createDataFrame(
-            rows, "version int, n_rows long, sum_qty decimal(18,2)"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return reduce(
+            DataFrame.unionAll,
+            [
+                t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
+                for v in range(3)
+            ],
+        ).localCheckpoint(eager=True)
 
 
 _TIME_TRAVEL_SQL = f"""
@@ -118,8 +156,6 @@ def q_txlog_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     sinks/txlog.refresh_rollup), and emit the final MV. The oracle
     aggregates the union of all three slices directly, so any error in
     delta composition or the full-outer merge is a hash mismatch."""
-    from sandbox_data_pipeline_spark.sinks.txlog import TxTable, refresh_dd_sketch, refresh_rollup
-
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -128,25 +164,23 @@ def q_txlog_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     s0 = o.where(F.col("o_orderkey") % 3 == 0)
     s1 = o.where(F.col("o_orderkey") % 3 == 1)
     s2 = o.where(F.col("o_orderkey") % 3 == 2)
-    tmp = tempfile.mkdtemp(prefix="txivm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txivm_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", s0)
         mv, ver = refresh_rollup(t, None, -1, "o_orderpriority", "price")
-        # pin the first materialization (bounded: one row per priority)
-        mv = spark.createDataFrame(mv.collect(), mv.schema)
+        # pin each materialization (bounded: one row per priority)
+        mv = mv.localCheckpoint(eager=True)
         t.append(s1)
         mv, ver = refresh_rollup(t, mv, ver, "o_orderpriority", "price")
-        mv = spark.createDataFrame(mv.collect(), mv.schema)
+        mv = mv.localCheckpoint(eager=True)
         t.append(s2)
         mv, ver = refresh_rollup(t, mv, ver, "o_orderpriority", "price")
-        out = mv.select(
+        return mv.select(
             "o_orderpriority",
             F.col("total").cast("decimal(18,2)").alias("total_price"),
             F.col("n").cast("long").alias("n_orders"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).localCheckpoint(eager=True)
 
 
 _TXLOG_IVM_SQL = """
@@ -166,42 +200,20 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
     restore-to-v0, then aggregate every version. v2 must equal v0
     exactly (metadata-only rollback) while v1 still shows the delete —
     the oracle states all three from the base table directly."""
-    from sandbox_data_pipeline_spark.sinks.txlog import TxTable, refresh_dd_sketch, restore
-
-    li = table(spark, sf_dir, "lineitem")
-    # the synthetic corpus does NOT guarantee (orderkey, linenumber)
-    # uniqueness — dedupe to a keyed table (max qty per rid) so merge's
-    # Delta-parity contract (unique non-null source keys) holds
-    base = (
-        li.where(F.col("l_orderkey") <= _K)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").alias("qty"))
-    )
-    tmp = tempfile.mkdtemp(prefix="txrestore_")
-    try:
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _K)
+    with tempfile.TemporaryDirectory(
+        prefix="txrestore_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.delete_where("rid", _D1, _D2)
         restore(t, 0)
-        rows = []
-        for v in range(3):
-            r = (
-                t.read(version=v)
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-                )
-                .first()
-            )
-            rows.append((v, r["n_rows"], r["sum_qty"]))
-        return spark.createDataFrame(
-            rows, "version int, n_rows long, sum_qty decimal(18,2)"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return reduce(
+            DataFrame.unionAll,
+            [
+                t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
+                for v in range(3)
+            ],
+        ).localCheckpoint(eager=True)
 
 
 _RESTORE_SQL = f"""
@@ -228,23 +240,10 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
     then summarize the row-level feed per (version, change_type). The
     merge's rewrite touches whole files, so the feed proves the
     exceptAll cancellation: only genuinely changed rows surface."""
-    from sandbox_data_pipeline_spark.sinks.txlog import TxTable, refresh_dd_sketch, table_changes
-
-    li = table(spark, sf_dir, "lineitem")
-    # the synthetic corpus does NOT guarantee (orderkey, linenumber)
-    # uniqueness — dedupe to a keyed table (max qty per rid) so merge's
-    # Delta-parity contract (unique non-null source keys) holds
-    base = (
-        li.where(F.col("l_orderkey") <= _K)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").alias("qty"))
-    )
-    tmp = tempfile.mkdtemp(prefix="txcdf_")
-    try:
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _K)
+    with tempfile.TemporaryDirectory(
+        prefix="txcdf_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         in_upd = F.col("rid").between(_U1, _U2)
         src = base.where(in_upd).select(
@@ -254,19 +253,15 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qty"),
         )
         t.merge(src, "rid")
-        cdf = table_changes(t, 0, 1)
-        out = cdf.groupBy("_commit_version", "_change_type").agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-        ).select(
-            F.col("_commit_version").alias("commit_version"),
-            F.col("_change_type").alias("change_type"),
-            "n_rows",
-            "sum_qty",
+        return (
+            table_changes(t, 0, 1)
+            .groupBy(
+                F.col("_commit_version").alias("commit_version"),
+                F.col("_change_type").alias("change_type"),
+            )
+            .agg(*_totals())
+            .localCheckpoint(eager=True)
         )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _TABLE_CHANGES_SQL = f"""
@@ -292,16 +287,15 @@ def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates. The oracle states both snapshots directly; the hash
     match proves untouched hours survive byte-exact while the replaced
     hour swaps completely."""
-    from sandbox_data_pipeline_spark.sinks.txlog import TxTable, refresh_dd_sketch, replace_where
-
     li = table(spark, sf_dir, "lineitem")
     base = li.where(F.col("l_orderkey") <= _K).select(
         (F.col("l_orderkey") % 3).alias("hr"),
         (F.col("l_orderkey") * 10 + F.col("l_linenumber")).cast("long").alias("rid"),
         F.col("l_quantity").alias("qty"),
     )
-    tmp = tempfile.mkdtemp(prefix="txrepl_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txrepl_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(3, "hr"))
         fresh = base.where(F.col("hr") == 1).select(
             "hr",
@@ -311,23 +305,15 @@ def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qty"),
         )
         replace_where(t, fresh, "hr", 1, 1)
-        rows = []
-        for v in range(2):
-            for r in (
+        return reduce(
+            DataFrame.unionAll,
+            [
                 t.read(version=v)
-                .groupBy("hr")
-                .agg(
-                    F.count(F.lit(1)).alias("n_rows"),
-                    F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-                )
-                .collect()
-            ):
-                rows.append((v, r["hr"], r["n_rows"], r["sum_qty"]))
-        return spark.createDataFrame(
-            rows, "version int, hr long, n_rows long, sum_qty decimal(18,2)"
-        )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+                .groupBy(F.lit(v).alias("version"), "hr")
+                .agg(*_totals())
+                for v in range(2)
+            ],
+        ).localCheckpoint(eager=True)
 
 
 _REPLACE_WHERE_SQL = f"""
@@ -366,43 +352,21 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     read fills exactly the old files' rows with NULL and none of the
     new ones."""
     li = table(spark, sf_dir, "lineitem")
-
-    def keyed(lo: int, hi: int) -> DataFrame:
-        return (
-            li.where((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi))
-            .groupBy(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-                .cast("long")
-                .alias("rid")
-            )
-            .agg(F.max("l_quantity").alias("qty"))
-        )
-
-    base = keyed(-1, _SE_B1)  # corpus has l_orderkey = 0 rows
-    extra = keyed(_SE_B1, _SE_B2).withColumn("src", F.lit("evolved"))
-    tmp = tempfile.mkdtemp(prefix="txevo_")
-    try:
+    base = keyed(li, None, _SE_B1)
+    extra = keyed(li, _SE_B1, _SE_B2).withColumn("src", F.lit("evolved"))
+    with tempfile.TemporaryDirectory(
+        prefix="txevo_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.add_columns([("src", "string")])
         t.append(extra.select("rid", "qty", "src"))
-        v0 = t.read(version=0)
-        final = t.read().localCheckpoint(eager=True)  # temp dir dies with fn
-
-        def summarize(df: DataFrame, phase: str) -> DataFrame:
-            return df.agg(
-                F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-            )
-
-        out = (
-            summarize(v0.localCheckpoint(eager=True), "v0")
-            .unionAll(summarize(final.where(F.col("src").isNull()), "final_backfilled"))
-            .unionAll(summarize(final.where(F.col("src").isNotNull()), "final_appended"))
+        final = t.read()
+        return (
+            _phase(t.read(version=0), "v0")
+            .unionAll(_phase(final.where(F.col("src").isNull()), "final_backfilled"))
+            .unionAll(_phase(final.where(F.col("src").isNotNull()), "final_appended"))
+            .localCheckpoint(eager=True)
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _SCHEMA_EVOLUTION_SQL = f"""
@@ -447,33 +411,21 @@ def q_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     renamed reads cover both old-name and new-name files, and dropped
     bytes stayed dead."""
     li = table(spark, sf_dir, "lineitem")
-
-    def keyed(lo: int, hi: int) -> DataFrame:
-        return (
-            li.where((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi))
-            .groupBy(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-                .cast("long")
-                .alias("rid")
-            )
-            .agg(F.max("l_quantity").alias("qty"))
-        )
-
-    s1 = keyed(-1, _CM_B1).withColumn("src", F.lit("base"))
-    s2 = keyed(_CM_B1, _CM_B2)
-    s3 = keyed(_CM_B2, _CM_B3)
-    tmp = tempfile.mkdtemp(prefix="txcolmap_")
-    try:
+    s1 = keyed(li, None, _CM_B1).withColumn("src", F.lit("base"))
+    s2 = keyed(li, _CM_B1, _CM_B2)
+    s3 = keyed(li, _CM_B2, _CM_B3)
+    with tempfile.TemporaryDirectory(
+        prefix="txcolmap_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", s1.repartitionByRange(4, "rid"))
         t.rename_column("qty", "quantity")
-        t.append(
+        v_renamed = t.append(
             s2.select(
                 "rid",
                 F.col("qty").alias("quantity"),
                 F.lit("extra").alias("src"),
             )
         )
-        post_rename = t.read().localCheckpoint(eager=True)
         t.drop_column("src")
         t.add_columns([("src", "string")])
         t.append(
@@ -483,37 +435,18 @@ def q_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit("readd").alias("src"),
             )
         )
-        v0 = t.read(version=0).localCheckpoint(eager=True)
-        final = t.read().localCheckpoint(eager=True)
-
-        def summarize(df: DataFrame, phase: str, qcol: str) -> DataFrame:
-            return df.agg(
-                F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum(qcol).cast("decimal(18,2)").alias("sum_qty"),
-            )
-
+        final = t.read()
         return (
-            summarize(v0, "v0", "qty")  # pre-rename name time-travels
-            .unionAll(summarize(post_rename, "post_rename", "quantity"))
+            _phase(t.read(version=0), "v0")  # pre-rename name time-travels
+            .unionAll(_phase(t.read(version=v_renamed), "post_rename", "quantity"))
             .unionAll(
-                summarize(
-                    final.where(F.col("src").isNull()),
-                    "final_src_null",
-                    "quantity",
-                )
+                _phase(final.where(F.col("src").isNull()), "final_src_null", "quantity")
             )
             .unionAll(
-                summarize(
-                    final.where(F.col("src") == "readd"),
-                    "final_src_readd",
-                    "quantity",
-                )
+                _phase(final.where(F.col("src") == "readd"), "final_src_readd", "quantity")
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _COLUMN_MAPPING_SQL = f"""
@@ -565,22 +498,14 @@ def q_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lineitem; equality proves exactly the in-range rows mutated,
     out-of-range rows copied byte-identically through the rewrite, and
     time travel still reads the pre-update values."""
-    li = table(spark, sf_dir, "lineitem")
-    base = (
-        li.where(F.col("l_orderkey") <= _UW_B1)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").cast("long").alias("qty"))
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _UW_B1).withColumn(
+        "qty", F.col("qty").cast("long")
     )
-    tmp = tempfile.mkdtemp(prefix="txupd_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txupd_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.update_where("qty", "qty * 2", "rid", _UW_LO, _UW_HI)
-        v0 = t.read(version=0).localCheckpoint(eager=True)
-        v1 = t.read().localCheckpoint(eager=True)
 
         def summarize(df: DataFrame, phase: str) -> DataFrame:
             inr = F.col("rid").between(_UW_LO, _UW_HI)
@@ -596,12 +521,10 @@ def q_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         return (
-            summarize(v0, "v0")
-            .unionAll(summarize(v1, "updated"))
+            summarize(t.read(version=0), "v0")
+            .unionAll(summarize(t.read(), "updated"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _UPDATE_WHERE_SQL = f"""
@@ -648,19 +571,14 @@ def q_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate; this row fails if any PAIR interacts wrongly (update after
     rename, evolution after drop, optimize over mapped+widened
     files). The oracle replays the whole lifecycle relationally."""
-    li = table(spark, sf_dir, "lineitem")
     base = (
-        li.where(F.col("l_orderkey") <= _LC_B1)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").cast("long").alias("qty"))
+        keyed(table(spark, sf_dir, "lineitem"), None, _LC_B1)
+        .withColumn("qty", F.col("qty").cast("long"))
         .withColumn("src", F.lit("base"))
     )
-    tmp = tempfile.mkdtemp(prefix="txlife_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txlife_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.rename_column("qty", "quantity")
         t.update_where("quantity", "quantity + 5", "rid", _LC_LO, _LC_HI)
@@ -683,40 +601,29 @@ def q_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.merge(msrc, "rid", evolve_schema=True)
         v_merged = t.latest_version()
-        from sandbox_data_pipeline_spark.sinks.txlog import optimize
-
         optimize(t, num_files=2)
+        vm = t.read(version=v_merged)
 
-        v0 = t.read(version=0).localCheckpoint(eager=True)
-        vu = t.read(version=v_upd).localCheckpoint(eager=True)
-        vm = t.read(version=v_merged).localCheckpoint(eager=True)
-        vf = t.read().localCheckpoint(eager=True)  # post-optimize
-
-        def tot(df: DataFrame, phase: str, qcol: str, extra=None) -> DataFrame:
-            g = df
-            if extra is not None:
-                g = df.where(extra)
-            return g.agg(
+        def tot(df: DataFrame, phase: str, qcol: str) -> DataFrame:
+            return df.agg(
                 F.lit(phase).alias("phase"),
                 F.count(F.lit(1)).alias("n_rows"),
                 F.sum(qcol).cast("long").alias("sum_q"),
             )
 
         return (
-            tot(v0, "v0", "qty")
-            .unionAll(tot(vu, "updated", "quantity"))
+            tot(t.read(version=0), "v0", "qty")
+            .unionAll(tot(t.read(version=v_upd), "updated", "quantity"))
             .unionAll(tot(vm, "merged_all", "quantity"))
             .unionAll(
-                tot(vm, "merged_gold", "quantity", F.col("grade") == "gold")
+                tot(vm.where(F.col("grade") == "gold"), "merged_gold", "quantity")
             )
             .unionAll(
-                tot(vm, "merged_nullgrade", "quantity", F.col("grade").isNull())
+                tot(vm.where(F.col("grade").isNull()), "merged_nullgrade", "quantity")
             )
-            .unionAll(tot(vf, "post_optimize", "quantity"))
+            .unionAll(tot(t.read(), "post_optimize", "quantity"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _LIFECYCLE_SQL = f"""
@@ -779,22 +686,11 @@ def q_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality proves the rejected batch left zero rows behind and the
     accepted one landed exactly once."""
     li = table(spark, sf_dir, "lineitem")
-
-    def keyed(lo: int, hi: int) -> DataFrame:
-        return (
-            li.where((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi))
-            .groupBy(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-                .cast("long")
-                .alias("rid")
-            )
-            .agg(F.min("l_quantity").alias("qty"))
-        )
-
-    base = keyed(-1, _CC_B1).where(F.col("qty") <= _CC_MAXQ)
-    incoming = keyed(_CC_B1, _CC_B2)
-    tmp = tempfile.mkdtemp(prefix="txcc_")
-    try:
+    base = keyed(li, None, _CC_B1, F.min).where(F.col("qty") <= _CC_MAXQ)
+    incoming = keyed(li, _CC_B1, _CC_B2, F.min)
+    with tempfile.TemporaryDirectory(
+        prefix="txcc_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.add_constraint("qty_cap", f"qty <= {_CC_MAXQ}")
         rejected = False
@@ -810,9 +706,7 @@ def q_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("qty").cast("decimal(18,2)").alias("max_qty"),
             F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
         )
-        return out.localCheckpoint(eager=True)  # temp dir dies with fn
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 _CHECK_CONSTRAINT_SQL = f"""
@@ -848,40 +742,27 @@ def q_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB: point deletes cost positions, not file rewrites). The
     rewrite-free property rides the output as the pdelete commit's
     added-file count, which the oracle pins to 0."""
-    li = table(spark, sf_dir, "lineitem")
-    base = (
-        li.where(F.col("l_orderkey") <= _PD_B1)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").alias("qty"))
-    )
-    tmp = tempfile.mkdtemp(prefix="txpd_")
-    try:
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _PD_B1)
+    with tempfile.TemporaryDirectory(
+        prefix="txpd_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         res = t.delete_where_positional("rid", _PD_D1, _PD_D2)
         rewrite_adds = t.history()[res["version"]]["n_add"]
-        v0 = t.read(version=0).localCheckpoint(eager=True)
-        final = t.read().localCheckpoint(eager=True)
 
         def summarize(df: DataFrame, phase: str) -> DataFrame:
             return df.agg(
                 F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
+                *_totals(),
                 F.lit(int(res["n_deleted"])).alias("n_deleted"),
                 F.lit(int(rewrite_adds)).alias("rewrite_adds"),
             )
 
         return (
-            summarize(v0, "v0")
-            .unionAll(summarize(final, "final"))
+            summarize(t.read(version=0), "v0")
+            .unionAll(summarize(t.read(), "final"))
             .localCheckpoint(eager=True)
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _POSITION_DELETE_SQL = f"""
@@ -923,54 +804,25 @@ def q_table_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
     disjoint-file OCC rule). The oracle states all three reads
     directly from lineitem: tag = slice A frozen forever, branch =
     A+B (never sees the parent's C), published main = A+C+B."""
-    from sandbox_data_pipeline_spark.sinks.txlog import (
-        TxTable,
-        create_branch,
-        create_tag,
-        publish_branch,
-        read_tag,
-    )
-
     li = table(spark, sf_dir, "lineitem")
-
-    def keyed(lo: int, hi: int) -> DataFrame:
-        return (
-            li.where((F.col("l_orderkey") > lo) & (F.col("l_orderkey") <= hi))
-            .groupBy(
-                (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-                .cast("long")
-                .alias("rid")
-            )
-            .agg(F.max("l_quantity").alias("qty"))
-        )
-
-    a = keyed(-1, _BR_A)
-    b = keyed(_BR_A, _BR_B)
-    c = keyed(_BR_B, _BR_C)
-    tmp = tempfile.mkdtemp(prefix="txbr_")
-    try:
+    a = keyed(li, None, _BR_A)
+    b = keyed(li, _BR_A, _BR_B)
+    c = keyed(li, _BR_B, _BR_C)
+    with tempfile.TemporaryDirectory(
+        prefix="txbr_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", a.repartitionByRange(4, "rid"))
         create_tag(t, "initial")
         br = create_branch(t, "wap")
         br.append(b)
         t.append(c)  # parent advances independently (append-only)
         publish_branch(t, "wap")
-
-        def summarize(df: DataFrame, phase: str) -> DataFrame:
-            return df.agg(
-                F.lit(phase).alias("phase"),
-                F.count(F.lit(1)).alias("n_rows"),
-                F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
-            )
-
-        out = (
-            summarize(read_tag(t, "initial"), "tag_initial")
-            .unionAll(summarize(br.read(), "branch"))
-            .unionAll(summarize(t.read(), "main_published"))
+        return (
+            _phase(read_tag(t, "initial"), "tag_initial")
+            .unionAll(_phase(br.read(), "branch"))
+            .unionAll(_phase(t.read(), "main_published"))
+            .localCheckpoint(eager=True)
         )
-        return out.localCheckpoint(eager=True)  # temp dir dies with fn
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _TABLE_BRANCH_SQL = f"""
@@ -1008,11 +860,6 @@ def q_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     refresh reads only the commits since the last one; the pinned MV
     between steps proves the final frame came from delta folding, not
     recompute. The oracle joins the surviving fact rows directly."""
-    from sandbox_data_pipeline_spark.sinks.txlog import (
-        TxTable,
-        refresh_join_rollup,
-    )
-
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -1021,27 +868,25 @@ def q_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     dim = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     s0 = o.where(F.col("o_orderkey") % 3 == 0)
     s1 = o.where(F.col("o_orderkey") % 3 == 1)
-    tmp = tempfile.mkdtemp(prefix="txjivm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="txjivm_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(
             spark, f"{tmp}/tbl", s0.repartitionByRange(4, "o_orderkey")
         )
         args = ("o_custkey", "c_custkey", "c_mktsegment", "price")
         mv, ver = refresh_join_rollup(t, dim, *args, mv=None, last_version=-1)
-        mv = spark.createDataFrame(mv.collect(), mv.schema)
+        mv = mv.localCheckpoint(eager=True)
         t.append(s1)
         mv, ver = refresh_join_rollup(t, dim, *args, mv=mv, last_version=ver)
-        mv = spark.createDataFrame(mv.collect(), mv.schema)
+        mv = mv.localCheckpoint(eager=True)
         t.delete_where("o_orderkey", _JI_D1, _JI_D2)
         mv, ver = refresh_join_rollup(t, dim, *args, mv=mv, last_version=ver)
-        out = mv.select(
+        return mv.select(
             "c_mktsegment",
             F.col("total").cast("decimal(18,2)").alias("total_price"),
             F.col("n").cast("long").alias("n_orders"),
-        )
-        return spark.createDataFrame(out.collect(), out.schema)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).localCheckpoint(eager=True)
 
 
 _JOIN_IVM_SQL = f"""
@@ -1091,8 +936,9 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     old = docs.where("doc_id % 2 = 0")
     new = docs.where("doc_id % 2 = 1")
-    tmp = tempfile.mkdtemp(prefix="pevo_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="pevo_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/t", old.repartitionByRange(2, "doc_id"))
         t.set_partition_spec(["plang"])
         t.append(new)
@@ -1118,8 +964,6 @@ def q_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             "spec_id INT, n_files INT, n_rows BIGINT,"
             " files_read_en INT, rows_scanned_en BIGINT",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _PARTITION_EVOLUTION_SQL = """
@@ -1166,16 +1010,17 @@ def q_sketch_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(l_quantity * 100 AS BIGINT)").alias("cents"),
         F.col("l_orderkey"),
     )
-    tmp = tempfile.mkdtemp(prefix="skivm_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="skivm_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(
             spark, f"{tmp}/t", li.where("l_orderkey % 3 = 0").drop("l_orderkey")
         )
         sk, ver = refresh_dd_sketch(t, None, -1, "grp", "cents")
-        sk = sk.localCheckpoint()
+        sk = sk.localCheckpoint(eager=True)
         t.append(li.where("l_orderkey % 3 = 1").drop("l_orderkey"))
         sk, ver = refresh_dd_sketch(t, sk, ver, "grp", "cents")
-        sk = sk.localCheckpoint()
+        sk = sk.localCheckpoint(eager=True)
         t.append(li.where("l_orderkey % 3 = 2").drop("l_orderkey"))
         sk, ver = refresh_dd_sketch(t, sk, ver, "grp", "cents")
         out = dd_quantiles(sk, [(1, 2), (9, 10), (99, 100)])
@@ -1186,9 +1031,7 @@ def q_sketch_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("q_1_2").alias("p50_cents"),
             F.col("q_9_10").alias("p90_cents"),
             F.col("q_99_100").alias("p99_cents"),
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).localCheckpoint(eager=True)
 
 
 _SKETCH_IVM_SQL = """
@@ -1247,8 +1090,9 @@ def q_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").select("event_id", "ts", "user_id")
     a = ev.where("ts < TIMESTAMP '2024-01-16'")
     b = ev.where("ts >= TIMESTAMP '2024-01-16'")
-    tmp = tempfile.mkdtemp(prefix="hpart_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="hpart_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/t", a.repartitionByRange(2, "event_id"))
         t.set_partition_spec(
             [{"name": "pday", "expr": "CAST(date_trunc('day', ts) AS DATE)"}]
@@ -1275,8 +1119,6 @@ def q_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_files_pre INT, n_files_post INT, n_schema_cols INT,"
             " n_rows BIGINT, files_read_day INT, rows_scanned_day BIGINT",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _HIDDEN_PARTITIONING_SQL = """
@@ -1307,19 +1149,15 @@ def q_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hash match proves the index construction, the pruning rule, and
     the false-positive arithmetic all at once. u values are all even;
     absent probes are odd — structurally absent at every SF."""
-    from sandbox_data_pipeline_spark.sinks.txlog import (
-        build_bloom_index,
-        files_skipped_bloom,
-    )
-
     src = table(spark, sf_dir, "documents").select(
         (F.col("doc_id") % 8).alias("fb"),
         (F.lit(2) * ((F.col("doc_id") * 2654435761) % 1073741824))
         .cast("long")
         .alias("u"),
     )
-    tmp = tempfile.mkdtemp(prefix="bloom_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="bloom_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/t", src)
         t.set_partition_spec(["fb"])
         t.overwrite_all(src)
@@ -1334,8 +1172,6 @@ def q_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             rows,
             "probe_doc INT, kind STRING, files_total INT, files_read INT",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _BLOOM_INDEX_SQL = """
@@ -1390,18 +1226,10 @@ def q_merge_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
     is applied per-pair (source AND target columns in scope), not
     per-side. File-level pruning still bounds every rewrite to the
     key-overlapping files."""
-    li = table(spark, sf_dir, "lineitem")
-    base = (
-        li.where(F.col("l_orderkey") <= _K)
-        .groupBy(
-            (F.col("l_orderkey") * 10 + F.col("l_linenumber"))
-            .cast("long")
-            .alias("rid")
-        )
-        .agg(F.max("l_quantity").alias("qty"))
-    )
-    tmp = tempfile.mkdtemp(prefix="mc_")
-    try:
+    base = keyed(table(spark, sf_dir, "lineitem"), None, _K)
+    with tempfile.TemporaryDirectory(
+        prefix="mc_", ignore_cleanup_errors=True
+    ) as tmp:
         t = TxTable.create(spark, f"{tmp}/t", base.repartitionByRange(4, "rid"))
         qty_t = base.schema["qty"].dataType.simpleString()
         src1 = base.where("rid % 4 = 0").select(
@@ -1428,9 +1256,7 @@ def q_merge_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("rid").alias("min_rid"),
             F.max("rid").alias("max_rid"),
         )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return out.localCheckpoint(eager=True)
 
 
 _MERGE_CONDITIONAL_SQL = f"""

@@ -238,10 +238,6 @@ def test_collect_sites_are_allowlisted():
         ("queries/similarity.py", "q_pca_power"): 1,  # d x d Gram
         ("queries/text.py", "q_coverage_greedy"): 1,  # 1-row argmax per round
         ("queries/text.py", "q_wordpiece_encode"): 1,  # WP_MAX_TYPES-guarded vocab
-        ("queries/txlog.py", "q_join_ivm"): 3,  # txlog metadata frames
-        ("queries/txlog.py", "q_replace_where"): 1,  # txlog metadata
-        ("queries/txlog.py", "q_table_changes"): 1,  # txlog metadata
-        ("queries/txlog.py", "q_txlog_ivm"): 3,  # txlog metadata frames
         ("sinks/txlog.py", "build_bloom_index"): 1,  # per-file bloom rows
         ("sinks/writers.py", "notify_query_result"): 1,  # bounded limit() collect
         ("streaming/cdc.py", "_apply"): 1,  # touched key-buckets per batch
@@ -409,8 +405,8 @@ def test_other_materialization_sites_are_allowlisted():
     narrower than advertised. Close the gap: EVERY driver-side
     materialization spelling is now audited. Product code currently
     has zero toPandas/take/head/show sites (a new one fails here until
-    reviewed) and four DataFrame.first() sites, each a bounded
-    metadata probe (1-row dimension lookup, txlog snapshot metadata).
+    reviewed) and two DataFrame.first() sites, each a bounded 1-row
+    probe (embedding dimension, merge's source check).
     ``F.first`` is the SQL aggregate, executor-side, excluded by
     receiver."""
     empty_attrs = ["toPandas", "take", "head", "collectAsList", "show"]
@@ -421,9 +417,6 @@ def test_other_materialization_sites_are_allowlisted():
     first_allow = {
         # 1-row probe of the embedding dimensionality before planning
         ("operators/similarity.py", "near_dup_pairs"): 1,
-        # txlog snapshot/version metadata — bounded by commit count
-        ("queries/txlog.py", "q_time_travel"): 1,
-        ("queries/txlog.py", "q_restore"): 1,
         # merge: one 1-row aggregate (key check + bounds) over the source
         ("sinks/txlog.py", "merge"): 1,
     }
@@ -459,6 +452,33 @@ def test_other_materialization_sites_are_allowlisted():
     assert dict(got_args) == {}, (
         f"unreviewed collect(*args) sites: {dict(got_args)}"
     )
+
+
+def test_scratch_table_queries_cut_only_their_result():
+    """The scratch-table queries (queries/txlog.py, queries/layout.py)
+    scope their table with ``tempfile.TemporaryDirectory`` and cut only
+    the frame they return: no mkdtemp/rmtree pair to keep in step, and
+    no eager cut of a snapshot read (``t.read(...).localCheckpoint()``)
+    that the result's own cut reads again. Snapshots are read lazily
+    by version instead."""
+    bad = []
+    for rel in ("queries/txlog.py", "queries/layout.py"):
+        tree = ast.parse((QUERY_DIR.parent / rel).read_text())
+        for n in ast.walk(tree):
+            if not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            if name in ("mkdtemp", "rmtree"):
+                bad.append(f"{rel}:{n.lineno} {name}()")
+            elif (
+                name == "localCheckpoint"
+                and isinstance(f.value, ast.Call)
+                and isinstance(f.value.func, ast.Attribute)
+                and f.value.func.attr == "read"
+            ):
+                bad.append(f"{rel}:{n.lineno} .read(...).localCheckpoint()")
+    assert bad == [], f"scratch-table queries off their one shape: {bad}"
 
 
 def test_local_solve_policy_is_the_only_cap_gate():

@@ -1104,3 +1104,30 @@ def test_update_where_prunes_and_mutates(spark, tmp_path):
     # unknown column refused
     with _pytest.raises(ValueError, match="no column"):
         t.update_where("nope", "1", "k", 0, 1)
+
+
+def test_lakehouse_lifecycle_cuts_only_its_result(spark, sf_dir, monkeypatch):
+    """The scratch-table shape (queries/txlog.py): q_lakehouse_lifecycle
+    reads its four snapshots lazily by version and cuts once, so the
+    frame it returns is the only locally checkpointed one it makes;
+    its temp dir is gone when it returns, and the result still reads."""
+    import glob
+    import tempfile
+
+    from sandbox_data_pipeline_spark.queries.txlog import q_lakehouse_lifecycle
+
+    frame_cls = type(spark.range(1))
+    real_cut = frame_cls.localCheckpoint
+    cuts = []
+
+    def counted_cut(self, *args, **kwargs):
+        cuts.append(real_cut(self, *args, **kwargs))
+        return cuts[-1]
+
+    monkeypatch.setattr(frame_cls, "localCheckpoint", counted_cut)
+    scratch = os.path.join(tempfile.gettempdir(), "txlife_*")
+    before = set(glob.glob(scratch))
+    out = q_lakehouse_lifecycle(spark, sf_dir)
+    assert len(cuts) == 1 and cuts[0] is out
+    assert set(glob.glob(scratch)) - before == set()
+    assert out.count() == 6

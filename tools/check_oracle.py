@@ -34,10 +34,12 @@ def main() -> int:
         return 1
 
     spark = get_spark("oracle-check")
-    # Janino compiles are JVM-wide; the delta over the sweep is the
-    # number of generated classes the codegen cache could not serve.
+    # Janino compiles are JVM-wide; the delta over a query (or the
+    # sweep) is the number of generated classes the codegen cache
+    # could not serve.
     codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-    compiles0 = codegen.METRIC_COMPILATION_TIME().getCount()
+    compiles = codegen.METRIC_COMPILATION_TIME().getCount
+    compiles0 = compiles()
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
@@ -46,17 +48,21 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        t0 = time.time()
+        t0, c0 = time.time(), compiles()
         try:
             sdf = fn(get_spark(), sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             failed.append(name)
-            print(f"FAIL  {name}: spark error: {type(e).__name__}: {str(e)[:400]}")
+            print(
+                f"FAIL  {name}: spark error ({compiles() - c0} compiles): "
+                f"{type(e).__name__}: {str(e)[:400]}"
+            )
             continue
+        cg = f"{compiles() - c0} compiles"
         if name not in oracle:
-            print(f"ok*   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            print(f"ok*   {name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s, {cg})")
             continue
         try:
             res = con.execute(oracle[name])
@@ -64,7 +70,7 @@ def main() -> int:
             drows = res.fetchall()
         except Exception as e:
             failed.append(name)
-            print(f"FAIL  {name}: duckdb error: {type(e).__name__}: {str(e)[:400]}")
+            print(f"FAIL  {name}: duckdb error ({cg}): {type(e).__name__}: {str(e)[:400]}")
             continue
         problems = []
         if len(srows) != len(drows):
@@ -75,7 +81,7 @@ def main() -> int:
             problems.append("value-hash mismatch")
         if problems:
             failed.append(name)
-            print(f"FAIL  {name}: {'; '.join(problems)}")
+            print(f"FAIL  {name}: {'; '.join(problems)} ({cg})")
             if "value-hash mismatch" in problems:
                 sonly, donly = diff_sample(scols, srows, dcols, drows)
                 for x in sonly:
@@ -83,10 +89,10 @@ def main() -> int:
                 for x in donly:
                     print(f"        duck-only:  {x[:200]}")
         else:
-            print(f"ok    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
+            print(f"ok    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s, {cg})")
     print(f"\n{len(failed)} failures" + (f": {failed}" if failed else ""))
     print(
-        f"codegen: {codegen.METRIC_COMPILATION_TIME().getCount() - compiles0} "
+        f"codegen: {compiles() - compiles0} "
         "Janino compiles over the sweep, cache maxEntries "
         f"{spark.conf.get('spark.sql.codegen.cache.maxEntries')}"
     )
