@@ -16,7 +16,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+# A run's records go under the git-ignored .benchmarks/, so a bench
+# run never rewrites tracked files; the committed BENCH_LOCAL.json and
+# BENCH_CUMULATIVE.json are records of earlier runs.
+OUT_DIR = ".benchmarks"
+sys.path.insert(0, HERE)
 
 # Fixed set, so two bench.py records compare like for like. Names must exist in queries().
 HEADLINE = [
@@ -211,29 +216,29 @@ def ledger_label(root: str) -> str:
 
 
 def update_cumulative_ledger(timings: dict[str, float], sf: float) -> None:
-    """Merge this run's timings into BENCH_CUMULATIVE.json — the
-    on-disk proof that every registry query has been benched at least
-    once (BENCH_r* final lines are budgeted slowest-first, so fast
-    queries fall off the surviving per-round artifacts; the ledger is
-    the complete record). Latest measurement wins; the `at` label
-    records which run produced it."""
-    here = os.path.dirname(os.path.abspath(__file__))
-    path = os.path.join(here, "BENCH_CUMULATIVE.json")
-    try:
-        with open(path, encoding="utf-8") as f:
-            ledger = json.load(f)
-    except (OSError, ValueError):
-        ledger = {}
-    label = ledger_label(here)
+    """Merge this run's timings into .benchmarks/BENCH_CUMULATIVE.json,
+    the complete query -> latest seconds ledger (BENCH_r* final lines
+    are budgeted slowest-first, so fast queries fall off them). The
+    first run starts from the committed BENCH_CUMULATIVE.json. Latest
+    measurement wins; the `at` label records which run produced it."""
+    path = os.path.join(HERE, OUT_DIR, "BENCH_CUMULATIVE.json")
+    ledger = {}
+    for src in (path, os.path.join(HERE, "BENCH_CUMULATIVE.json")):
+        try:
+            with open(src, encoding="utf-8") as f:
+                ledger = json.load(f)
+            break
+        except (OSError, ValueError):
+            continue
+    label = ledger_label(HERE)
     for k, v in timings.items():
         ledger[k] = {"sec": round(v, 3), "at": label, "sf": sf}
     try:
         with open(path, "w", encoding="utf-8") as f:
             json.dump(ledger, f, indent=1, sort_keys=True)
     except OSError as e:
-        # The ledger is pitched as the on-disk completeness proof —
-        # a silent write failure would quietly stale it.
-        print(f"WARNING: BENCH_CUMULATIVE.json write failed: {e}", file=sys.stderr)
+        # a silent write failure would quietly stale the ledger
+        print(f"WARNING: {path} write failed: {e}", file=sys.stderr)
 
 
 def main() -> None:
@@ -306,7 +311,7 @@ def main() -> None:
     # FIRST (for humans reading the raw run), (2) the final line is
     # budgeted to ≤1900 chars — headline fields always present, then
     # as many per-query entries as fit (overflow names live in
-    # BENCH_LOCAL.json, pointed to by "full").
+    # .benchmarks/BENCH_LOCAL.json, pointed to by "full").
     verbose = {
         "metric": "headline_queries_total",
         "value": total,
@@ -314,14 +319,15 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
         "cpus": len(os.sched_getaffinity(0)),
-        "git_sha": git_sha(os.path.dirname(os.path.abspath(__file__))),
+        "git_sha": git_sha(HERE),
     }
     if errors:
         verbose["errors"] = errors
+    os.makedirs(os.path.join(HERE, OUT_DIR), exist_ok=True)
     update_cumulative_ledger(timings, sf)
+    local = os.path.join(OUT_DIR, "BENCH_LOCAL.json")
     try:
-        here = os.path.dirname(os.path.abspath(__file__))
-        with open(os.path.join(here, "BENCH_LOCAL.json"), "w") as f:
+        with open(os.path.join(HERE, local), "w") as f:
             json.dump(verbose, f, indent=1)
     except OSError:
         pass
@@ -344,7 +350,7 @@ def main() -> None:
         "sf": sf,
         "n_queries": len(timings),
         "n_errors": len(errors),
-        "full": "BENCH_LOCAL.json",
+        "full": local,
         "queries": {},
     }
     line = json.dumps(base, separators=(",", ":"))

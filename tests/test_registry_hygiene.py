@@ -112,6 +112,28 @@ def test_bench_ledger_label_is_the_checkout_sha(tmp_path):
     assert bench.ledger_label(str(tmp_path)) == sha
 
 
+def test_bench_ledger_is_written_under_dot_benchmarks(tmp_path, monkeypatch):
+    """A bench run leaves tracked files alone: the ledger is merged into
+    .benchmarks/BENCH_CUMULATIVE.json, seeded from the committed
+    ledger on the first run."""
+    import json
+    import sys
+
+    sys.path.insert(0, str(QUERY_DIR.parent.parent))
+    import bench
+
+    committed = tmp_path / "BENCH_CUMULATIVE.json"
+    committed.write_text(json.dumps({"q_a": {"sec": 1.0, "at": "old", "sf": 0.1}}))
+    (tmp_path / bench.OUT_DIR).mkdir()
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    bench.update_cumulative_ledger({"q_b": 2.0}, 0.1)
+    bench.update_cumulative_ledger({"q_c": 3.0}, 0.1)
+    ledger = json.loads((tmp_path / bench.OUT_DIR / "BENCH_CUMULATIVE.json").read_text())
+    assert sorted(ledger) == ["q_a", "q_b", "q_c"]
+    assert ledger["q_c"] == {"sec": 3.0, "at": "local", "sf": 0.1}
+    assert json.loads(committed.read_text()) == {"q_a": {"sec": 1.0, "at": "old", "sf": 0.1}}
+
+
 def test_bench_compare_reads_envelopes_and_refuses_cpu_mismatch(tmp_path, monkeypatch):
     """tools/bench_compare.py loads every record shape on disk: an
     envelope whose ``parsed`` is null (only the stdout tail survived),

@@ -1131,3 +1131,156 @@ def test_lakehouse_lifecycle_cuts_only_its_result(spark, sf_dir, monkeypatch):
     assert len(cuts) == 1 and cuts[0] is out
     assert set(glob.glob(scratch)) - before == set()
     assert out.count() == 6
+
+
+# --- one fold, one pruned read through position deletes -------------------
+
+
+def _four_files(spark, tmp_path, **cols):
+    """k 0..399 in four range files, plus ``cols`` (name -> expression
+    over ``id``)."""
+    base = spark.range(0, 400).select(
+        F.col("id").alias("k"),
+        *[F.expr(e).alias(name) for name, e in cols.items()],
+    )
+    return TxTable.create(spark, str(tmp_path / "tbl"), base.repartitionByRange(4, "k"))
+
+
+def test_replace_where_keeps_position_deletes(spark, tmp_path):
+    """replace_where keeps the out-of-range rows of the files it
+    touches by reading them through the DV layer, so rows deleted
+    positionally before stay deleted."""
+    from sandbox_data_pipeline_spark.sinks.txlog import replace_where
+
+    t = _four_files(spark, tmp_path, v="id * 10")
+    t.delete_where_positional("k", 10, 19)
+    fresh = spark.range(0, 5).select(F.col("id").alias("k"), F.col("id").alias("v"))
+    replace_where(t, fresh, "k", 0, 9)
+    got = t.read()
+    assert got.where(F.col("k").between(10, 19)).count() == 0
+    assert got.count() == 400 - 10 - 10 + 5
+
+
+def test_replace_where_prunes_by_physical_column(spark, tmp_path):
+    """After a rename the footer stats still carry the PHYSICAL name:
+    replace_where removes exactly the files files_skipped counts, not
+    every file."""
+    from sandbox_data_pipeline_spark.sinks.txlog import files_skipped, replace_where
+
+    t = _four_files(spark, tmp_path, hr="id div 100")
+    t.rename_column("hr", "hour")
+    overlap = files_skipped(t, "hour", 1, 1)
+    assert overlap["files_read"] < overlap["files_total"]
+    fresh = spark.range(0, 3).select(
+        F.col("id").alias("k"), F.lit(1).cast("long").alias("hour")
+    )
+    v = replace_where(t, fresh, "hour", 1, 1)
+    assert t.history()[v]["n_remove"] == overlap["files_read"]
+    got = t.read()
+    assert got.where(F.col("hour") == 1).count() == 3
+    assert got.count() == 303
+
+
+def test_ivm_refreshers_refuse_position_deletes(spark, tmp_path):
+    """A position-delete commit is not an append (the stream source's
+    rule): every log-driven refresher raises on it, incrementally and
+    as a full recompute, instead of counting the deleted rows."""
+    from sandbox_data_pipeline_spark.sinks.txlog import (
+        refresh_dd_sketch,
+        refresh_media_fingerprints,
+        refresh_rollup,
+    )
+
+    t = _four_files(spark, tmp_path, g="id % 4", v="id")
+    mv, ver = refresh_rollup(t, None, -1, "g", "v")
+    assert sorted(r["n"] for r in mv.collect()) == [100] * 4
+    t.delete_where_positional("k", 0, 99)
+    assert sorted(r["count"] for r in t.read().groupBy("g").count().collect()) == [75] * 4
+    for refresh in (
+        lambda: refresh_rollup(t, mv, ver, "g", "v"),
+        lambda: refresh_rollup(t, None, -1, "g", "v"),
+        lambda: refresh_dd_sketch(t, mv, ver, "g", "v"),
+        lambda: refresh_dd_sketch(t, None, -1, "g", "v"),
+        lambda: refresh_media_fingerprints(t, mv, ver),
+    ):
+        with pytest.raises(ValueError, match="full recompute"):
+            refresh()
+
+
+def test_files_skipped_maps_the_columns_of_its_version(spark, tmp_path):
+    """files_skipped(version=0) prunes with the column mapping of v0,
+    not the latest one (where logical ``x`` names another column)."""
+    from sandbox_data_pipeline_spark.sinks.txlog import files_skipped
+
+    t = _four_files(spark, tmp_path, x="id div 100", y="id % 4")
+    t.rename_column("x", "tmp")
+    t.rename_column("y", "x")
+    at_v0 = files_skipped(t, "x", 1, 1, version=0)
+    assert at_v0 == files_skipped(t, "tmp", 1, 1)  # the same physical column
+    assert at_v0["files_read"] < at_v0["files_total"]
+    assert files_skipped(t, "x", 1, 1)["files_read"] == at_v0["files_total"]
+
+
+def test_state_reads_replay_from_the_checkpoint(spark, tmp_path, monkeypatch):
+    """A checkpoint holds the whole folded state, so schema, CHECK
+    constraints and column mapping at the tail replay only the entries
+    after it, not the log back to v0."""
+    t = _mk(spark, tmp_path, n=10)
+    t.add_constraint("v_nonneg", "v >= 0")
+    t.rename_column("k", "key")
+    row = spark.createDataFrame([(1000, 1)], "key long, v long")
+    while t.latest_version() <= CHECKPOINT_EVERY:
+        t.append(row)
+    reads = []
+    real = TxTable._read_entry
+    monkeypatch.setattr(
+        TxTable, "_read_entry", lambda self, v: reads.append(v) or real(self, v)
+    )
+    assert [f.name for f in t.schema_at().fields] == ["key", "v"]
+    assert t.constraints_at() == {"v_nonneg": "v >= 0"}
+    assert t.column_mapping_at() == {"key": "k", "v": "v"}
+    assert 0 < len(reads) <= CHECKPOINT_EVERY
+    assert t.read().count() == 10 + t.latest_version() - 2
+
+
+def test_txlog_reads_state_one_way():
+    """Tripwire: in sinks/txlog.py the file-pruning rule (a ``.stats[``
+    subscript) lives only in ``_prune``, and loops over ``_read_entry``
+    only in the fold and in the readers of events, not state."""
+    import ast
+    import inspect
+
+    from sandbox_data_pipeline_spark.sinks import txlog
+
+    event_readers = {
+        "_state",
+        "history",
+        "version_at_timestamp",
+        "_commit",
+        "table_changes",
+        "_appended_since",
+    }
+    loops = (ast.For, ast.While, ast.ListComp, ast.SetComp, ast.DictComp, ast.GeneratorExp)
+    stats, entry_loops = set(), set()
+
+    def walk(node, fn):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            fn = node.name
+        if (
+            isinstance(node, ast.Subscript)
+            and isinstance(node.value, ast.Attribute)
+            and node.value.attr == "stats"
+        ):
+            stats.add(fn)
+        if isinstance(node, loops) and any(
+            isinstance(n, ast.Attribute) and n.attr == "_read_entry"
+            for n in ast.walk(node)
+        ):
+            entry_loops.add(fn)
+        for child in ast.iter_child_nodes(node):
+            walk(child, fn)
+
+    walk(ast.parse(inspect.getsource(txlog)), None)
+    assert stats == {"_prune"}
+    assert entry_loops <= event_readers
+    assert "_state" in entry_loops
