@@ -247,7 +247,7 @@ def main() -> None:
 
     from sandbox_data_pipeline_spark.plans.flagship import flagship_query
     from sandbox_data_pipeline_spark.queries import registry
-    from sandbox_data_pipeline_spark.session import get_spark
+    from sandbox_data_pipeline_spark.session import get_spark, release_storage
 
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
@@ -258,20 +258,6 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-
-    def release_storage() -> None:
-        """Unpersist every cached/localCheckpointed RDD between
-        queries: iterative operators (PageRank/LPA/k-core/suffix
-        array/PPR) cut lineage with localCheckpoint, whose storage
-        blocks otherwise ACCUMULATE across the ~140-query run and OOM
-        the shared local JVM near the end (observed at 142 queries).
-        Storage is per-query scratch here, not a cross-query cache —
-        and a query's timing must not depend on its position in the
-        run."""
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
 
     def run(name: str, build) -> None:
         print(f"[bench] {name}", file=sys.stderr, flush=True)
@@ -294,7 +280,11 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — one bad query must
             # not sink the whole run; the error is the measurement
             errors[name] = f"{type(e).__name__}: {e}"[:200]
-        release_storage()
+        # iterative operators' local cut blocks otherwise ACCUMULATE
+        # across the run and OOM the shared local JVM near the end
+        # (observed at 142 queries); a query's timing must not depend
+        # on its position in the run
+        release_storage(spark)
 
     run("flagship", lambda: flagship_query(spark, sf_dir))
     for name in HEADLINE:

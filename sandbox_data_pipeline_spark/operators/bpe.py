@@ -14,8 +14,8 @@ is the distinct-word count, not the corpus size. Per round:
    fold over each word's symbol array — non-overlapping, so a run of
    k identical candidates merges at positions 0, 2, 4, … (this run
    parity is what the SQL oracle reproduces with gaps-and-islands);
-4. localCheckpoint to keep the iterative lineage flat (the
-   duplicate_clusters discipline).
+4. a lineage cut per round (session.cut) to keep the iterative
+   lineage flat (the duplicate_clusters discipline).
 
 At 100 TB the vocab frame is millions of rows — every step above
 stays distributed; only the 1-row argmax touches the driver.
@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS, fits_local
+from sandbox_data_pipeline_spark.session import cut
 
 
 def word_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -162,7 +163,7 @@ def bpe_merges(
     learning), and ~6x faster here than scheduling 2 Spark jobs per
     merge round on a tiny vocab frame. Vocabularies over the bound
     fall back to the fully distributed per-round loop (argmax is a
-    1-row collect; eager checkpoints keep each round's lineage flat),
+    1-row collect; eager cuts keep each round's lineage flat),
     whose results are identical (tests pin the equivalence)."""
     spark = docs.sparkSession
     wc = word_counts(docs, text_col=text_col)
@@ -177,14 +178,10 @@ def bpe_merges(
             learned,
             "merge_rank int, sym_a string, sym_b string, pair_count long",
         )
-    words = (
-        wc.select("word", "cnt", _initial_symbols().alias("sym"))
-        # EAGER: each merge round collects a 1-row argmax; a lazy
-        # checkpoint materializes nothing, so round k would re-execute
-        # the full _apply_merge chain of rounds 1..k-1 first (the same
-        # compounding-recompute mechanism the round-4 simhash flag had)
-        .localCheckpoint(eager=True)
-    )
+    # EAGER: each merge round collects a 1-row argmax; a lazy cut
+    # materializes nothing, so round k would re-execute the full
+    # _apply_merge chain of rounds 1..k-1 first
+    words = cut(wc.select("word", "cnt", _initial_symbols().alias("sym")))
     learned = []
     for rank in range(1, n_merges + 1):
         best = (
@@ -198,9 +195,9 @@ def bpe_merges(
             break
         a, b, c = best[0].a, best[0].b, best[0].c
         learned.append((rank, a, b, c))
-        words = words.select(
-            "word", "cnt", _apply_merge(F.col("sym"), a, b).alias("sym")
-        ).localCheckpoint(eager=True)
+        words = cut(
+            words.select("word", "cnt", _apply_merge(F.col("sym"), a, b).alias("sym"))
+        )
     return spark.createDataFrame(
         learned, "merge_rank int, sym_a string, sym_b string, pair_count long"
     )

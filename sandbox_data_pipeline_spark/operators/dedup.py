@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 
 from sandbox_data_pipeline_spark.operators.local_solve import fits_local
 from sandbox_data_pipeline_spark.queries._envproof import stable_round
+from sandbox_data_pipeline_spark.session import cut
 from pyspark.sql import functions as F
 
 
@@ -139,13 +140,10 @@ def ngram_jaccard_pairs(
     (they match everything). Pass ``df_cap=None`` only on corpora known
     to have no hot shingles.
 
-    localCheckpoint (not persist) for the triple-consumed shingle
-    frame: blocks release with the lineage instead of pinning executor
-    storage for the session lifetime — see containment_pairs.
+    The shingle frame is cut once: sizes and both self-join sides
+    read it.
     """
-    sh = word_shingles(
-        docs, n=n, id_col=id_col, text_col=text_col, df_cap=df_cap
-    ).localCheckpoint(eager=True)
+    sh = cut(word_shingles(docs, n=n, id_col=id_col, text_col=text_col, df_cap=df_cap))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -187,19 +185,9 @@ def containment_pairs(
     containment, filtered on the max of the two.
 
     The shingle frame is consumed three times (sizes + both self-join
-    sides); ``localCheckpoint(eager=True)`` materializes it ONCE, up
-    front — a lazy checkpoint only lands after the first job finishes,
-    so all three consumers inside one action would recompute the
-    lineage (measured on simhash_pairs in round 4). Blocks are released
-    when the result's lineage is garbage collected — unlike
-    ``persist()``, which (returned
-    lazily, so never safely unpersistable here) pinned executor
-    storage for the session
-    lifetime. Measured: recomputing instead costs 1.6x on the sf0.1
-    bench."""
-    sh = word_shingles(
-        docs, n=n, id_col=id_col, text_col=text_col, df_cap=df_cap
-    ).localCheckpoint(eager=True)
+    sides), so it is cut eagerly, once, up front: recomputing instead
+    measured 1.6x on the sf0.1 bench."""
+    sh = cut(word_shingles(docs, n=n, id_col=id_col, text_col=text_col, df_cap=df_cap))
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     common = (
@@ -268,8 +256,15 @@ def minhash_bands(sig: DataFrame, k: int = 16, bands: int = 4, id_col: str = "do
     Built as ONE explode over an inline array (not a union of selects):
     a union would re-evaluate the whole signature subplan per band —
     Catalyst does not share common subplans across union branches."""
+    return sig.select(
+        F.col(id_col), F.explode(F.array(*_band_structs(k, bands))).alias("b")
+    ).select(id_col, "b.band_idx", "b.band_sig")
+
+
+def _band_structs(k: int, bands: int) -> list[Column]:
+    """One (band_idx, band_sig) struct per band over h0..h{k-1}."""
     r = k // bands
-    band_structs = [
+    return [
         F.struct(
             F.lit(bi).alias("band_idx"),
             F.md5(
@@ -278,9 +273,30 @@ def minhash_bands(sig: DataFrame, k: int = 16, bands: int = 4, id_col: str = "do
         )
         for bi in range(bands)
     ]
-    return sig.select(F.col(id_col), F.explode(F.array(*band_structs)).alias("b")).select(
-        id_col, "b.band_idx", "b.band_sig"
-    )
+
+
+def _banded_with_sig(
+    docs: DataFrame,
+    k: int,
+    bands: int,
+    n: int,
+    id_col: str,
+    text_col: str,
+) -> DataFrame:
+    """(id, sig array<long>, band_idx, band_sig) — the band-join frame
+    with the full signature riding along for inline verification."""
+    sig = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
+    return sig.select(
+        F.col(id_col),
+        F.array(*[F.col(f"h{j}") for j in range(k)]).alias("sig"),
+        F.explode(F.array(*_band_structs(k, bands))).alias("b"),
+    ).select(id_col, "sig", "b.band_idx", "b.band_sig")
+
+
+_EST_MATCHES = (
+    "aggregate(zip_with(a.sig, b.sig, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
+    " 0, (acc, v) -> acc + v)"
+)
 
 
 def minhash_candidate_pairs(
@@ -303,27 +319,9 @@ def minhash_candidate_pairs(
     is still ~1e-4 of corpus bytes, and it removes two shuffles and a
     cached intermediate. Measured 4× faster end-to-end at sf0.1 than
     the join-back formulation."""
-    sig = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
-    r = k // bands
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band_idx"),
-            F.md5(
-                F.concat_ws("|", *[F.col(f"h{j}") for j in range(bi * r, (bi + 1) * r)])
-            ).alias("band_sig"),
-        )
-        for bi in range(bands)
-    ]
-    banded = sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{j}") for j in range(k)]).alias("sig"),
-        F.explode(F.array(*band_structs)).alias("b"),
-    ).select(id_col, "sig", "b.band_idx", "b.band_sig")
+    banded = _banded_with_sig(docs, k, bands, n, id_col, text_col)
     a, b = banded.alias("a"), banded.alias("b")
-    est = F.expr(
-        "aggregate(zip_with(a.sig, b.sig, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-        " 0, (acc, v) -> acc + v)"
-    )
+    est = F.expr(_EST_MATCHES)
     return (
         a.join(
             b,
@@ -492,10 +490,9 @@ def duplicate_clusters(
         labels, rounds = _cc_propagation_loop(edges, max_iter)
         edges.unpersist()
     else:
-        labels = (
+        labels = cut(
             edges.repartition(1)
             .mapInPandas(_cc_solve, f"doc_id {id_type}, cluster_id {id_type}")
-            .localCheckpoint(eager=True)
         )
         rounds = 1
         edges.unpersist()
@@ -512,7 +509,7 @@ def _cc_propagation_loop(
     pre-r12 implementation, kept as the exact fallback for graphs the
     contraction passes cannot shrink under the local-solve cap. Each
     round every node takes the min of its own, its neighbors', and its
-    label's label; O(log diameter) rounds; one localCheckpoint per
+    label's label; O(log diameter) rounds; one lineage cut per
     round keeps lineage flat. Raises RuntimeError when max_iter rounds
     were insufficient."""
     # Undirect the edges with ONE explode, not a union of two selects:
@@ -561,17 +558,17 @@ def _cc_propagation_loop(
         hop = propagated.select(
             F.col("node").alias("_ln"), F.col("label").alias("_ll")
         )
-        new_labels = (
+        # lazy: the changed-count below is the action that
+        # materializes the cut — one pass per round, not two
+        new_labels = cut(
             propagated.join(hop, propagated.label == hop._ln, "left")
             .select(
                 F.col("node"),
                 F.least(F.col("label"), F.coalesce(F.col("_ll"), F.col("label"))).alias(
                     "label"
                 ),
-            )
-            # lazy: the changed-count below is the action that
-            # materializes the checkpoint — one pass per round, not two
-            .localCheckpoint(eager=True)
+            ),
+            eager=False,
         )
         changed = (
             new_labels.alias("n")
@@ -658,16 +655,11 @@ def simhash_pairs(
     48 bits (not 32) because shared-vocabulary corpora cluster tightly
     in simhash space — fewer bits produce quadratic candidate blowup.
 
-    localCheckpoint (not persist) on the fingerprint frame consumed by
-    both self-join sides: blocks release with the lineage instead of
-    pinning executor storage for the session — see containment_pairs.
-    EAGER: a lazy checkpoint materializes only after the first job
-    finishes, so within the single pair-join action BOTH self-join
-    branches recompute the fingerprints (measured 2× regression in
-    round 4); eager pays one small extra job and computes them once."""
-    fps = simhash_fingerprints(
-        docs, bits=bits, id_col=id_col, text_col=text_col
-    ).localCheckpoint(eager=True)
+    The fingerprint frame feeds both self-join sides, so it is cut
+    EAGERLY: with a lazy cut both branches of the one pair-join action
+    recomputed the fingerprints (measured 2x regression in round 4);
+    eager pays one small extra job and computes them once."""
+    fps = cut(simhash_fingerprints(docs, bits=bits, id_col=id_col, text_col=text_col))
     nbytes = bits // 8
     # single-pass banding (explode, not union — see minhash_bands)
     bands = fps.select(
@@ -840,41 +832,6 @@ def passage_dup_ratio(
             4,
         ).alias("dup_ratio"),
     )
-
-
-def _banded_with_sig(
-    docs: DataFrame,
-    k: int,
-    bands: int,
-    n: int,
-    id_col: str,
-    text_col: str,
-) -> DataFrame:
-    """(id, sig array<long>, band_idx, band_sig) — the band-join frame
-    with the full signature riding along for inline verification (the
-    same one-pass shape minhash_candidate_pairs uses)."""
-    sig = minhash_signatures(docs, k=k, n=n, id_col=id_col, text_col=text_col)
-    r = k // bands
-    band_structs = [
-        F.struct(
-            F.lit(bi).alias("band_idx"),
-            F.md5(
-                F.concat_ws("|", *[F.col(f"h{j}") for j in range(bi * r, (bi + 1) * r)])
-            ).alias("band_sig"),
-        )
-        for bi in range(bands)
-    ]
-    return sig.select(
-        F.col(id_col),
-        F.array(*[F.col(f"h{j}") for j in range(k)]).alias("sig"),
-        F.explode(F.array(*band_structs)).alias("b"),
-    ).select(id_col, "sig", "b.band_idx", "b.band_sig")
-
-
-_EST_MATCHES = (
-    "aggregate(zip_with(a.sig, b.sig, (x, y) -> CASE WHEN x = y THEN 1 ELSE 0 END),"
-    " 0, (acc, v) -> acc + v)"
-)
 
 
 def incremental_dedup(
@@ -1110,11 +1067,11 @@ def prefix_filtered_jaccard(
     """
     sh = word_shingles(docs, n=n, id_col=id_col, text_col=text_col, distinct=True)
     dfreq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-    # localCheckpoint: consumed by the prefix self-join (both sides)
-    # AND both verification array joins — without it the shingle + df
-    # + sort pipeline re-runs up to 5x (same measured trade as
-    # containment_pairs; blocks release with the lineage).
-    per_doc = (
+    # cut: consumed by the prefix self-join (both sides) AND both
+    # verification array joins — without it the shingle + df + sort
+    # pipeline re-runs up to 5x (same measured trade as
+    # containment_pairs).
+    per_doc = cut(
         sh.join(dfreq, "shingle")
         .groupBy(id_col)
         .agg(
@@ -1133,7 +1090,6 @@ def prefix_filtered_jaccard(
                 f"slice(_sorted, 1, size(_sorted) - ceil({threshold} * size(_sorted)) + 1)"
             ),
         )
-        .localCheckpoint(eager=True)
     )
     pref = per_doc.select(
         id_col, "n_sh", F.explode("_prefix").alias("shingle")

@@ -12,7 +12,7 @@ partitioned on the same key, so AQE reuses the layout) and one
 groupBy(dst) with map-side partial sums. Iterations are a fixed,
 small constant; every node in an undirected pair graph has out-
 degree ≥ 1 so there is no dangling-mass correction term. Lineage is
-cut with localCheckpoint every ``checkpoint_every`` rounds, the same
+cut (session.cut) every ``checkpoint_every`` rounds, the same
 discipline as duplicate_clusters' pointer jumping.
 """
 
@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+from sandbox_data_pipeline_spark.session import cut
 
 # Capped local solve (r12; the cap is local_solve's "graph_edges"): the
 # per-round Spark overhead of the BSP loops dominates bench-scale
@@ -56,10 +57,9 @@ def _solve_local(
         marked = edges.select(*ab, F.lit(0).alias("m")).unionByName(
             seeds.select(s.alias("a"), s.alias("b"), F.lit(1).alias("m"))
         )
-    return (
+    return cut(
         marked.repartition(1)
         .mapInPandas(solver, schema.format(id=id_t))
-        .localCheckpoint(eager=True)
     )
 
 
@@ -339,7 +339,7 @@ def pagerank(
     # upstream pair-generation pipeline (MinHash banding, etc.) would
     # replay iterations+1 times. Same discipline as
     # duplicate_clusters: materialize once, iterate over the blocks.
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges, eager=False)
     if fits_local("graph_edges", edges.count()):
         state = _solve_local(
             edges,
@@ -368,7 +368,7 @@ def pagerank(
         .join(deg.select(F.col(src).alias("node"), "deg"), "node", "left")
         .select("node", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
     )
-    nodes = nodes.localCheckpoint(eager=False)  # reused every round
+    nodes = cut(nodes, eager=False)  # reused every round
     n = nodes.agg(F.count("*").alias("n_nodes"))
     base = nodes.crossJoin(F.broadcast(n))
     ranks = base.select(
@@ -410,7 +410,7 @@ def pagerank(
             and (i + 1) % checkpoint_every == 0
             and i + 1 < iterations
         ):
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = cut(ranks, eager=False)
     return ranks.select(
         "node",
         "deg",
@@ -444,18 +444,18 @@ def label_propagation(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges, eager=False)
     if fits_local("graph_edges", edges.count()):
         return _solve_local(
             edges, src, dst, _lpa_local(iterations), "node {id}, label {id}"
         )
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("node"))
-    labels = (
+    labels = cut(
         edges.select(F.col(src).alias("node"))
         .unionByName(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .select("node", F.col("node").alias("label"))
-        .localCheckpoint(eager=False)
+        .select("node", F.col("node").alias("label")),
+        eager=False,
     )
     for _ in range(iterations):
         votes = (
@@ -469,15 +469,15 @@ def label_propagation(
         )
         # argmax label per node, ties -> smallest label: min over the
         # lexicographic struct (-count, label); exact integers only
-        labels = (
+        labels = cut(
             votes.groupBy("node")
             .agg(
                 F.min(
                     F.struct((-F.col("c")).alias("nc"), F.col("label"))
                 ).alias("w")
             )
-            .select("node", F.col("w.label").alias("label"))
-            .localCheckpoint(eager=False)
+            .select("node", F.col("w.label").alias("label")),
+            eager=False,
         )
     return labels
 
@@ -502,25 +502,28 @@ def bfs_distances(
     """
     if max_hops < 1:
         raise ValueError("max_hops must be >= 1")
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges, eager=False)
     if fits_local("graph_edges", edges.count()):
         return _solve_local(
             edges, src, dst, _bfs_local(max_hops), "node {id}, dist int", seeds
         )
     e = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("node"))
-    dist = seeds.select(
-        F.col(seeds.columns[0]).alias("node"),
-        F.lit(0).cast("int").alias("dist"),
-    ).localCheckpoint(eager=False)
+    dist = cut(
+        seeds.select(
+            F.col(seeds.columns[0]).alias("node"),
+            F.lit(0).cast("int").alias("dist"),
+        ),
+        eager=False,
+    )
     for _ in range(max_hops):
         relaxed = e.join(
             dist.select(F.col("node").alias("e_src"), "dist"), "e_src"
         ).select("node", (F.col("dist") + F.lit(1)).alias("dist"))
-        dist = (
+        dist = cut(
             dist.unionByName(relaxed)
             .groupBy("node")
-            .agg(F.min("dist").cast("int").alias("dist"))
-            .localCheckpoint(eager=False)
+            .agg(F.min("dist").cast("int").alias("dist")),
+            eager=False,
         )
     return dist
 
@@ -546,7 +549,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges, eager=False)
     if fits_local("graph_edges", edges.count()):
         state = _solve_local(
             edges, src, dst, _hits_local(iterations), "node {id}, a long, h long"
@@ -585,14 +588,14 @@ def hits(
                 .groupBy("node")
                 .agg(F.sum("a").alias("h_new"))
             )
-            state = (
+            state = cut(
                 state.join(h_new, "node", "left")
                 .select(
                     "node",
                     "a",
                     F.coalesce(F.col("h_new"), F.lit(0)).cast("long").alias("h"),
-                )
-                .localCheckpoint(eager=False)
+                ),
+                eager=False,
             )
     maxes = state.agg(
         F.max("a").alias("max_a"), F.max("h").alias("max_h")
@@ -676,7 +679,7 @@ def personalized_pagerank(
     map-side partials; the seed vector is a broadcast-sized column."""
     if iterations < 1:
         raise ValueError("iterations must be >= 1")
-    edges = edges.localCheckpoint(eager=False)
+    edges = cut(edges, eager=False)
     if fits_local("graph_edges", edges.count()):
         state = _solve_local(
             edges,
@@ -698,14 +701,14 @@ def personalized_pagerank(
         .select("node", F.coalesce(F.col("deg"), F.lit(0)).alias("deg"))
     )
     seed_nodes = seeds.select("node").distinct()
-    base = (
+    base = cut(
         nodes.join(
             seed_nodes.withColumn("_s", F.lit(1)), "node", "left"
         )
         .select(
             "node", "deg", F.coalesce(F.col("_s"), F.lit(0)).alias("is_seed")
-        )
-        .localCheckpoint(eager=False)
+        ),
+        eager=False,
     )
     n_seeds = base.agg(F.sum("is_seed").alias("n_seeds"))
     base = base.crossJoin(F.broadcast(n_seeds))
@@ -717,7 +720,7 @@ def personalized_pagerank(
             ranks.select(F.col("node").alias("e_src"), "deg", "rank"), "e_src"
         ).select("node", (F.col("rank") / F.col("deg")).alias("c"))
         summed = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
+        ranks = cut(
             base.join(summed, "node", "left")
             .select(
                 "node",
@@ -729,8 +732,8 @@ def personalized_pagerank(
                     + F.lit(damping)
                     * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            eager=False,
         )
     return ranks.select(
         "node",

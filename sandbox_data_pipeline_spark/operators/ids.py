@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.session import cut
+
 
 def stable_global_ids_with_count(
     df: DataFrame,
@@ -45,15 +47,13 @@ def stable_global_ids_with_count(
         if num_partitions is not None
         else df.repartitionByRange(*cols)
     ).sortWithinPartitions(*cols)
-    # localCheckpoint pins ONE materialized partitioning: the range
-    # boundaries come from sampling, so the counts job and the final
-    # projection must read the SAME shuffle output, not two
-    # independently-sampled ones (ids would silently skew otherwise).
-    # At warehouse scale this is the sorted staging write a pipeline
-    # does anyway before assigning ids.
-    with_pid = parted.withColumn("_pid", F.spark_partition_id()).localCheckpoint(
-        eager=False
-    )
+    # the cut pins ONE materialized partitioning: the range boundaries
+    # come from sampling, so the counts job and the final projection
+    # must read the SAME shuffle output, not two independently-sampled
+    # ones (ids would silently skew otherwise). At warehouse scale this
+    # is the sorted staging write a pipeline does anyway before
+    # assigning ids.
+    with_pid = cut(parted.withColumn("_pid", F.spark_partition_id()), eager=False)
     # one row per partition — metadata scale, the ONLY collect
     counts = sorted(
         with_pid.groupBy("_pid").count().collect(), key=lambda r: r["_pid"]

@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+from sandbox_data_pipeline_spark.session import cut
 
 
 def _dot(a: str, b: str) -> Column:
@@ -344,9 +345,7 @@ def ivf_centroids_kmeans_exact(
     # the literal-expression / higher-order-function formulations
     # measured ~20 s per iteration at sf0.1 (interpreted lambdas per
     # element); this shape runs the same arithmetic in ~1 s.
-    qe = qv.select(
-        "vid", F.posexplode("q").alias("pos", "val")
-    ).localCheckpoint(eager=True)
+    qe = cut(qv.select("vid", F.posexplode("q").alias("pos", "val")))
 
     def _half_away(num: int, den: int) -> int:
         if num >= 0:
@@ -596,7 +595,13 @@ def semantic_dedup(
     vector: (id, list_id, is_dropped).
     """
     cents = centroids or ivf_centroids(embeddings, n_centroids, id_col, vec_col)
-    v = (
+    # r12: v feeds BOTH self-join sides and the final verdict join
+    # under distinct aliases, so the scan + the k x dim literal
+    # centroid-assignment expression ran 3x (exchange reuse cannot
+    # dedupe renamed branches); one eager cut of the bounded
+    # (id, vec, norm, list_id) frame runs it once — interleaved A/B
+    # at sf0.1: 3.07 -> 2.31 s
+    v = cut(
         embeddings.withColumn("_v0", as_double_array(vec_col))
         .withColumn("_vn0", _norm("_v0"))
         .select(
@@ -605,13 +610,6 @@ def semantic_dedup(
             F.col("_vn0").alias("_vn"),
             _assign_expr("_v0", "_vn0", cents).alias("list_id"),
         )
-        # r12: v feeds BOTH self-join sides and the final verdict join
-        # under distinct aliases, so the scan + the k x dim literal
-        # centroid-assignment expression ran 3x (exchange reuse cannot
-        # dedupe renamed branches); one eager checkpoint of the bounded
-        # (id, vec, norm, list_id) frame runs it once — interleaved A/B
-        # at sf0.1: 3.07 -> 2.31 s
-        .localCheckpoint(eager=True)
     )
     a = v.select(
         F.col(id_col).alias("id_a"), "list_id", F.col("_v").alias("va"), F.col("_vn").alias("na")
@@ -1163,7 +1161,7 @@ def mmr_rerank(
     )
     if impl == "pandas":
         return _mmr_greedy_pandas(pool, select_k, lam)
-    pool = pool.localCheckpoint(eager=True)  # reused select_k times below
+    pool = cut(pool)  # reused select_k times below
     first = pool.withColumn("_r", F.row_number().over(w)).where(F.col("_r") == 1)
     selected = first.select(
         "query_id",
@@ -1353,10 +1351,10 @@ def grid_dbscan(
     )
     # Materialize, then RELEASE the scratch caches (unpersist-on-
     # return hygiene): the operator is already eager (duplicate_
-    # clusters runs counts during build), so the localCheckpoint adds
+    # clusters runs counts during build), so the cut adds
     # no extra pass, and composed callers no longer accumulate the
     # pair/role frames in executor storage.
-    out = out.localCheckpoint(eager=True)
+    out = cut(out)
     pairs.unpersist()
     roles.unpersist()
     return out

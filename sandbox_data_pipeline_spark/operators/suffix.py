@@ -38,6 +38,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.operators.local_solve import fits_local
+from sandbox_data_pipeline_spark.session import cut
 
 
 def global_row_number(
@@ -188,10 +189,8 @@ def suffix_array(
     else:
         pack = F.ascii("ch").cast("long")
         h = 1
-    cur = base.select("doc_id", "pos", pack.alias("rank")).localCheckpoint(
-        eager=True
-    )
-    n_rows = cur.count()  # checkpointed: a metadata-cheap action
+    cur = cut(base.select("doc_id", "pos", pack.alias("rank")))
+    n_rows = cur.count()  # cut: a metadata-cheap action
     # size the range exchanges to the data — ~50k rows per task floor;
     # at corpus scale this recovers the session's shuffle parallelism
     parts = max(4, min(int(n_rows // 50_000) + 1, 2048))
@@ -214,14 +213,13 @@ def suffix_array(
                 "doc_id", "pos", F.col("_grn").alias("sa_rank")
             )
         wk = Window.partitionBy("rank", "r2")
-        cur = (
+        # EAGER: flatten the 3-shuffle round's lineage so round k+1
+        # never replays rounds 1..k (the iterative-operator
+        # discipline every loop here follows)
+        cur = cut(
             numbered.repartition(parts, "rank", "r2")
             .withColumn("_kr", F.min("_grn").over(wk))
             .select("doc_id", "pos", F.col("_kr").alias("rank"))
-            # EAGER: flatten the 3-shuffle round's lineage so round k+1
-            # never replays rounds 1..k (the iterative-operator
-            # discipline every loop here follows)
-            .localCheckpoint(eager=True)
         )
         h *= 2
     # max_len <= h already at entry (tiny horizons): rank by the packed
@@ -354,17 +352,17 @@ def _adjacent_lcp_pairs(
         F.col("pos").alias("next_pos"),
         F.col("suf").alias("next_suf"),
     )
-    return (
+    # both consumers fan this table out into several branches
+    # (duplicate_spans unions it twice; canonical_duplicate_spans'
+    # run grouping reads it 5+ ways) — without the lineage cut the
+    # whole log-L suffix-array construction re-executes per branch
+    # (measured 8x wall on the keep-first apply at sf0.1)
+    return cut(
         with_suf.join(nxt, "sa_rank")
         .withColumn("lcp", lcp_expr("suf", "next_suf"))
         .where(F.col("lcp") >= min_len)
-        .select("sa_rank", "doc_id", "pos", "next_doc", "next_pos", "lcp")
-        # both consumers fan this table out into several branches
-        # (duplicate_spans unions it twice; canonical_duplicate_spans'
-        # run grouping reads it 5+ ways) — without the lineage cut the
-        # whole log-L suffix-array construction re-executes per branch
-        # (measured 8x wall on the keep-first apply at sf0.1)
-        .localCheckpoint(eager=False)
+        .select("sa_rank", "doc_id", "pos", "next_doc", "next_pos", "lcp"),
+        eager=False,
     )
 
 
@@ -752,12 +750,12 @@ def canonical_duplicate_spans(
         )
         .drop("_hp")
     )
-    runs = (
+    # members / run_meta / run_min / pairwise all read this frame —
+    # cut lineage once so the range prefix sum runs once
+    runs = cut(
         global_cumsum(flagged, order_cols=["sa_rank"], sum_cols=["_start"])
-        .withColumnRenamed("cum__start", "run_id")
-        # members / run_meta / run_min / pairwise all read this frame —
-        # cut lineage once so the range prefix sum runs once
-        .localCheckpoint(eager=False)
+        .withColumnRenamed("cum__start", "run_id"),
+        eager=False,
     )
     members = (
         runs.select("run_id", "doc_id", "pos")

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from sandbox_data_pipeline_spark.queries._envproof import dec_ratio, dec_ratio_sql, stable_round, stable_round_sql
 from sandbox_data_pipeline_spark.operators.sketch import kmv_estimate_sql
 from sandbox_data_pipeline_spark.catalog import table
+from sandbox_data_pipeline_spark.session import cut
 
 QUERIES: dict = {}
 ORACLE: dict = {}
@@ -842,7 +843,7 @@ def q_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy("hour_ts")
     # NOTE (r12): the duplicated series subtree below is NOT a double
     # corpus pass at runtime — AQE's exchange reuse dedupes the
-    # identical agg exchanges in the adaptive plan (a localCheckpoint
+    # identical agg exchanges in the adaptive plan (a lineage cut
     # here measured SLOWER: 4.5s -> 5.7s, pure materialization tax).
     series = hourly.withColumn("rn", F.row_number().over(w))
     a = series.select(
@@ -1042,9 +1043,9 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey",
         "o_orderdate",
     )
-    cut = F.lit("1998-01-01").cast("timestamp")
-    base = o.where(F.col("o_orderdate") < cut)
-    cur = o.where(F.col("o_orderdate") >= cut)
+    cutoff = F.lit("1998-01-01").cast("timestamp")
+    base = o.where(F.col("o_orderdate") < cutoff)
+    cur = o.where(F.col("o_orderdate") >= cutoff)
     ranked, n1 = stable_global_ids_with_count(
         base, ["amt", "o_orderkey"], out="r", num_partitions=8
     )
@@ -1708,16 +1709,15 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate pass at very low minsup, but at minsup where the
     output is human-sized the pair join IS the cheap plan."""
     li = table(spark, sf_dir, "lineitem")
-    bi = (
+    # r12: bi feeds the item counts, BOTH pair-join sides (via fb),
+    # and the basket total — 4+ instantiations of the scan+distinct
+    # under different downstream aliases; one eager cut of the
+    # deduped basket list runs it once (interleaved A/B at
+    # sf0.1: 2.90 -> 2.15 s; also cutting `item` added
+    # nothing — it is broadcast-bounded already)
+    bi = cut(
         li.select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
         .distinct()
-        # r12: bi feeds the item counts, BOTH pair-join sides (via fb),
-        # and the basket total — 4+ instantiations of the scan+distinct
-        # under different downstream aliases; one eager checkpoint of
-        # the deduped basket list runs it once (interleaved A/B at
-        # sf0.1: 2.90 -> 2.15 s; also checkpointing `item` added
-        # nothing — it is broadcast-bounded already)
-        .localCheckpoint(eager=True)
     )
     item = bi.groupBy("p").agg(F.count(F.lit(1)).alias("n_i"))
     frequent = item.where(F.col("n_i") >= 20)
@@ -2326,19 +2326,21 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = table(spark, sf_dir, "events").select(F.to_date("ts").alias("d"))
     days = ev.groupBy("d").agg(F.count(F.lit(1)).alias("x"))
-    days = days.select(
-        F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")).alias("dn"),
-        "x",
     # r12: days (calendar-bounded) is referenced by both pair-join
     # sides, the residual pass, and the n_days count action — without
-    # the checkpoint every reference replays the full events scan +
-    # daily agg; pairs (days², also calendar-bounded) is likewise read
-    # by its count action AND the ranking pipeline. Checkpointing both
-    # runs the scan once and the pair join once (interleaved A/B at
-    # sf0.1: 1.95 -> 1.32 s; plan 20 parquet scans -> 2).
-    ).localCheckpoint(eager=True)
+    # the cut every reference replays the full events scan + daily
+    # agg; pairs (days², also calendar-bounded) is likewise read by
+    # its count action AND the ranking pipeline. Cutting both runs the
+    # scan once and the pair join once (interleaved A/B at sf0.1:
+    # 1.95 -> 1.32 s; plan 20 parquet scans -> 2).
+    days = cut(
+        days.select(
+            F.datediff(F.col("d"), F.lit("1970-01-01").cast("date")).alias("dn"),
+            "x",
+        )
+    )
     b = days.select(F.col("dn").alias("dn2"), F.col("x").alias("x2"))
-    pairs = (
+    pairs = cut(
         days.join(b, F.col("dn2") > F.col("dn"))
         .select(
             "dn",
@@ -2348,7 +2350,6 @@ def q_theilsen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("dn2") - F.col("dn"))
             ).alias("slope"),
         )
-        .localCheckpoint(eager=True)
     )
     n_pairs = pairs.count()
     mid = (n_pairs + 1) // 2

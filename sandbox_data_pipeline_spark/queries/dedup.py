@@ -20,6 +20,7 @@ from sandbox_data_pipeline_spark.operators.dedup import (
     simhash_fingerprints,
     simhash_pairs,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 K = 16
 BANDS = 4
@@ -834,11 +835,8 @@ def q_minhash_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = q_dedup_minhash_pairs(spark, sf_dir)
-    # localCheckpoint, not persist: materialized once for the three
-    # consumers, released with the lineage instead of pinning executor
-    # storage for the session lifetime (the lazily-returned result
-    # could never safely unpersist).
-    sh = word_shingles(docs, n=MINHASH_N).localCheckpoint(eager=True)
+    # cut once for the three consumers
+    sh = cut(word_shingles(docs, n=MINHASH_N))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     bsh = sh.select(
         F.col("doc_id").alias("_db"), F.col("shingle").alias("_shb")
@@ -1119,7 +1117,7 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     credited to its three corners via one explode — no new join shape,
     and the same per-node-degree fan-out bound."""
     pairs = q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    pairs = pairs.localCheckpoint(eager=True)  # feeds 3 join sides + degrees
+    pairs = cut(pairs)  # feeds 3 join sides + degrees
     e1, e2, e3 = pairs.alias("e1"), pairs.alias("e2"), pairs.alias("e3")
     tri = (
         e1.join(e2, F.col("e1.doc_b") == F.col("e2.doc_a"))
@@ -1270,7 +1268,7 @@ def q_simhash_quality_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = table(spark, sf_dir, "documents")
     pairs = simhash_pairs(docs, bits=SIMHASH_BITS, max_hamming=SIMHASH_MAXH)
-    sh = word_shingles(docs, n=MINHASH_N).localCheckpoint(eager=True)
+    sh = cut(word_shingles(docs, n=MINHASH_N))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     bsh = sh.select(F.col("doc_id").alias("_db"), F.col("shingle").alias("_shb"))
     common = (
@@ -1922,24 +1920,12 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12: the banded minhash pair subtree fans out 4x (src/dst union
     x seed-derivation union) before the solver's own references; an
-    eager localCheckpoint on the bounded pair list runs it once
-    (interleaved A/B: 2.71 -> 1.65 s; same rationale as
-    q_assortativity — distinct aliases defeat exchange reuse).
-
-    Deployment caveat (r12 ADVICE, applies to every eager
-    localCheckpoint in this repo): the blocks are executor-local and
-    non-replicated, so on a real cluster an executor loss makes the
-    frame unrecoverable (job failure, not recompute), and the
-    materialization runs at query-BUILD time. Fine for local[n]; a
-    cluster deployment should swap these sites to reliable
-    checkpoint/persist+count via a session-level policy."""
+    eager cut of the bounded pair list runs it once (interleaved A/B:
+    2.71 -> 1.65 s; same rationale as q_assortativity — distinct
+    aliases defeat exchange reuse)."""
     from sandbox_data_pipeline_spark.operators.graph import bfs_distances
 
-    pairs = (
-        q_dedup_minhash_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = cut(q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
@@ -2009,10 +1995,10 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out, never catalog all-pairs); each round is a degree
     aggregate (shuffle on node id, partial-combined) plus two
     semi-joins on the shrinking survivor set. Each round ends in an
-    eager localCheckpoint: the round's plan references the previous
-    edge set THREE times (both union branches of the degree count +
-    the join input), so an unchecked lineage grows 3^rounds plan
-    copies — the checkpoint pins each round to its materialized
+    eager cut: the round's plan references the previous edge set
+    THREE times (both union branches of the degree count + the join
+    input), so an uncut lineage grows 3^rounds plan copies — the
+    cut pins each round to its materialized
     RDD, keeping plan size (and at 100 TB, recompute) linear in the
     round count. Same lineage-control pattern as q_pagerank_dups."""
     li = table(spark, sf_dir, "lineitem")
@@ -2021,16 +2007,16 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
     a = bi.select("o", F.col("p").alias("pa"))
     b = bi.select("o", F.col("p").alias("pb"))
-    e = (
+    # materialized ONCE: both the cap probe and (above cap) round
+    # 1's three subtree references read the blocks, not the join
+    e = cut(
         a.join(b, "o")
         .where(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
-        .select("pa", "pb")
-        # materialized ONCE: both the cap probe and (above cap) round
-        # 1's three subtree references read the blocks, not the join
-        .localCheckpoint(eager=False)
+        .select("pa", "pb"),
+        eager=False,
     )
     from sandbox_data_pipeline_spark.operators.graph import (
         _kcore_local,
@@ -2055,10 +2041,9 @@ def q_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
             .where(F.col("c") >= 3)
             .select("n")
         )
-        e = (
+        e = cut(
             e.join(keep.withColumnRenamed("n", "pa"), "pa", "semi")
             .join(keep.withColumnRenamed("n", "pb"), "pb", "semi")
-            .localCheckpoint(eager=True)
         )
     final_nodes = e.select(F.col("pa").alias("part")).unionAll(
         e.select(F.col("pb").alias("part"))
@@ -2072,7 +2057,7 @@ def _oracle_kcore() -> str:
     # un-materialized plan replays the basket self-join 3^rounds
     # times (~175 s at sf0.01; 1.5 s materialized) — the DuckDB twin
     # of the lineage blowup the Spark side solves with eager
-    # localCheckpoints.
+    # cuts.
     sql = """
 WITH bi AS MATERIALIZED (
   SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
@@ -2138,20 +2123,19 @@ def q_link_prediction(
     ).distinct()
     a = bi.select("o", F.col("p").alias("pa"))
     b = bi.select("o", F.col("p").alias("pb"))
-    e = (
+    # r12: this co-purchase edge list is referenced ~6x downstream
+    # (adj union doubles it, the wedge self-join doubles adj, the
+    # anti-join and degree joins read it again — 36 scans / 86
+    # Exchanges in the plan); an eager cut of the
+    # bounded w>=2 edge list runs the lineitem self-join ONCE
+    # (interleaved A/B under load: 4.35 -> 3.33 s)
+    e = cut(
         a.join(b, "o")
         .where(F.col("pa") < F.col("pb"))
         .groupBy("pa", "pb")
         .agg(F.count(F.lit(1)).alias("w"))
         .where(F.col("w") >= 2)
         .select("pa", "pb")
-        # r12: this co-purchase edge list is referenced ~6x downstream
-        # (adj union doubles it, the wedge self-join doubles adj, the
-        # anti-join and degree joins read it again — 36 scans / 86
-        # Exchanges in the plan); an eager localCheckpoint on the
-        # bounded w>=2 edge list runs the lineitem self-join ONCE
-        # (interleaved A/B under load: 4.35 -> 3.33 s)
-        .localCheckpoint(eager=True)
     )
     adj = e.select(F.col("pa").alias("u"), F.col("pb").alias("w")).unionAll(
         e.select(F.col("pb").alias("u"), F.col("pa").alias("w"))
@@ -2230,17 +2214,13 @@ def q_ppr_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id % 10 == 0 (the BFS seed rule); 4 iterations, d = 0.85.
     operators/graph.py: personalized_pagerank.
 
-    r12: eager localCheckpoint on the pair list — same 4x fan-out and
+    r12: eager cut of the pair list — same 4x fan-out and
     rationale as q_graph_bfs (interleaved A/B: 2.32 -> 1.55 s)."""
     from sandbox_data_pipeline_spark.operators.graph import (
         personalized_pagerank,
     )
 
-    pairs = (
-        q_dedup_minhash_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = cut(q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
@@ -2327,17 +2307,13 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r12: the banded minhash pair subtree is referenced ~6x here (the
     src/dst union doubles it, the two broadcast degree builds double
-    the union again) — 24 scans in the plan; an eager localCheckpoint
-    on the bounded candidate-pair list runs it ONCE (interleaved A/B
+    the union again) — 24 scans in the plan; an eager cut of the
+    bounded candidate-pair list runs it ONCE (interleaved A/B
     under load: 3.09 -> 2.01 s). The LOF precedent, not the
     sweep/precision one — here the duplicated branches are NOT
     identical exchanges, so runtime exchange reuse cannot dedupe
     them."""
-    pairs = (
-        q_dedup_minhash_pairs(spark, sf_dir)
-        .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
-    )
+    pairs = cut(q_dedup_minhash_pairs(spark, sf_dir).select("doc_a", "doc_b"))
     edges = pairs.select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
@@ -2630,17 +2606,17 @@ def q_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
         .alias("a3"),
     )
-    # localCheckpoint the <=8-row pattern frame: every EM iteration
-    # references pat, so the lazily-built 5-step chain would otherwise
-    # nest the corpus-sized blocked self-join once per reference
-    # (measured: 130 Scan/Exchange nodes in the final plan, no
-    # ReusedExchange). The checkpoint runs the pair pass ONCE at build
-    # and the EM chain becomes arithmetic over 8 materialized rows.
-    pat = pairs.groupBy("a1", "a2", "a3").agg(
-        F.count(F.lit(1)).alias("n")
-    ).withColumn(
-        "pid", F.col("a1") * 4 + F.col("a2") * 2 + F.col("a3")
-    ).localCheckpoint()
+    # cut the <=8-row pattern frame: every EM iteration references pat,
+    # so the lazily-built 5-step chain would otherwise nest the
+    # corpus-sized blocked self-join once per reference (measured: 130
+    # Scan/Exchange nodes in the final plan, no ReusedExchange). The
+    # cut runs the pair pass ONCE at build and the EM chain becomes
+    # arithmetic over 8 materialized rows.
+    pat = cut(
+        pairs.groupBy("a1", "a2", "a3")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .withColumn("pid", F.col("a1") * 4 + F.col("a2") * 2 + F.col("a3"))
+    )
     consts = pat.agg(
         F.sum("n").alias("nn"),
         F.sum(F.col("n") * F.col("a1")).alias("ag1"),

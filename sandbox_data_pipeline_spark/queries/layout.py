@@ -27,6 +27,7 @@ from sandbox_data_pipeline_spark.operators.layout import (
     skipping_stats,
     zvalue,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 BITS = 8  # 256 buckets per dimension; 16-bit Morton key
 COMPACT_TARGET = 2_000  # rows per merge group in the plan demo
@@ -329,7 +330,7 @@ def q_csv_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("doc_id").alias("max_id"),
         )
         # the temp CSV dir is gone once this function exits
-        return out.localCheckpoint(eager=True)
+        return cut(out)
 
 
 ORACLE["q_csv_interchange"] = """
@@ -413,7 +414,7 @@ def q_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.length("_corrupt_record")).alias("quarantine_chars"),
             )
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
 
 
 ORACLE["q_ingest_quarantine"] = """
@@ -495,7 +496,7 @@ def q_orc_interchange(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("ts").alias("max_ts"),
         )
         # the temp ORC dir is gone once this function exits
-        return out.localCheckpoint(eager=True)
+        return cut(out)
 
 
 ORACLE["q_orc_interchange"] = """

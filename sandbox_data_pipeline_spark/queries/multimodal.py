@@ -21,6 +21,7 @@ from sandbox_data_pipeline_spark.operators.multimodal import (
     media_from_documents,
     sample_frames,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -824,9 +825,7 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         jpeg_media,
     )
 
-    hashes = jpeg_dhash(
-        jpeg_media(table(spark, sf_dir, "documents"))
-    ).localCheckpoint(eager=False)
+    hashes = cut(jpeg_dhash(jpeg_media(table(spark, sf_dir, "documents"))), eager=False)
     return _dhash_pair_hist(hashes)
 
 
@@ -983,9 +982,9 @@ def q_video_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_frame_dhash,
     )
 
-    hashes = video_frame_dhash(
-        avi_media(table(spark, sf_dir, "documents"))
-    ).localCheckpoint(eager=False)
+    hashes = cut(
+        video_frame_dhash(avi_media(table(spark, sf_dir, "documents"))), eager=False
+    )
     return _frame_pair_hist(hashes)
 
 
@@ -1123,9 +1122,10 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_with_headers,
     )
 
-    fps = audio_fingerprint(
-        media_with_headers(table(spark, sf_dir, "documents"))
-    ).localCheckpoint(eager=False)
+    fps = cut(
+        audio_fingerprint(media_with_headers(table(spark, sf_dir, "documents"))),
+        eager=False,
+    )
     bands = fps.selectExpr(
         "media_id",
         "fp",
@@ -1367,17 +1367,13 @@ def q_media_manifest_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-rebuild equivalence of the incremental composition. At
     100 TB this is the path that makes media dedup affordable: decode
     dominates everything, and an ingest batch pays exactly its own
-    decode, never a rescan. Refreshes are localCheckpoint-pinned
-    between commits, mirroring a real MV materialization (the
-    q_txlog_ivm / q_sketch_ivm discipline).
+    decode, never a rescan. Each refresh reads the previous view once
+    (a union), so nothing is cut: the returned plan decodes each
+    commit's files once, in the job that consumes it.
 
     The temp TxTable is removed at process exit (the
     _cleanup_manifests discipline), NOT in a ``finally``: the returned
-    DataFrame is pinned only by localCheckpoint blocks, and a
-    post-return lineage recomputation (executor loss on a cluster,
-    checkpoint-block eviction) re-reads the table files — an eager
-    rmtree would turn that recovery into missing-input errors
-    (round-11 ADVICE item)."""
+    DataFrame reads the table files when it runs."""
     import atexit
     import functools
     import shutil
@@ -1395,15 +1391,11 @@ def q_media_manifest_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, f"{tmp}/docs", docs.where(F.col("doc_id") % 3 == 0)
     )
     mv, ver = refresh_media_fingerprints(t, None, -1)
-    mv = mv.localCheckpoint()
     t.append(docs.where(F.col("doc_id") % 3 == 1))
     mv, ver = refresh_media_fingerprints(t, mv, ver)
-    mv = mv.localCheckpoint()
     t.append(docs.where(F.col("doc_id") % 3 == 2))
     mv, ver = refresh_media_fingerprints(t, mv, ver)
-    return mv.select(
-        "kind", "media_id", "frame_idx", "h1", "h2"
-    ).localCheckpoint()
+    return mv.select("kind", "media_id", "frame_idx", "h1", "h2")
 
 
 ORACLE["q_media_fingerprint_manifest"] = """

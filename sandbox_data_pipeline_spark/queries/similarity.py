@@ -20,6 +20,7 @@ from sandbox_data_pipeline_spark.operators.similarity import (
     lsh_topk,
     near_dup_pairs,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 DIM = 64
 PLANES = 8
@@ -1630,7 +1631,11 @@ def q_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sandbox_data_pipeline_spark.queries._envproof import dec_ratio
 
     emb = table(spark, sf_dir, "embeddings")
-    edges = (
+    # eager cut (r12): the kNN graph feeds kd, reach AND terms —
+    # exchange reuse does not cover all three references, so the
+    # bucketed join pipeline executed repeatedly (measured interleaved
+    # min-of-3: 3.2–3.8 s → 2.6–2.9 s). k·N-bounded rows.
+    edges = cut(
         knn_join(emb, emb, dim=DIM, planes=PLANES, k=TOPK, multiprobe=1)
         .select(
             F.col("query_id").alias("p"),
@@ -1643,12 +1648,6 @@ def q_lof_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("d"),
         )
-        # eager checkpoint (r12): the kNN graph feeds kd, reach AND
-        # terms — exchange reuse does not cover all three references,
-        # so the bucketed join pipeline executed repeatedly (measured
-        # interleaved min-of-3: 3.2–3.8 s → 2.6–2.9 s). k·N-bounded
-        # rows, released with the lineage.
-        .localCheckpoint(eager=True)
     )
     kd = edges.groupBy("p").agg(
         F.max("d").alias("kdist"), F.count(F.lit(1)).alias("n_nb")

@@ -28,6 +28,7 @@ from sandbox_data_pipeline_spark.operators.text import (
     quality_features,
     token_count,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -511,14 +512,11 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the only guard needed is the df cap already applied here
     (hot tokens are exactly the ones you drop as stopwords)."""
     d = table(spark, sf_dir, "documents")
-    # localCheckpoint, not persist: consumed twice (top-k + join), and
-    # a lazily-returned query can never safely unpersist — blocks
-    # release with the lineage instead of pinning the session
-    pairs = (
+    # cut: consumed twice (top-k + join)
+    pairs = cut(
         d.select("doc_id", F.explode(F.split("text", " ")).alias("token"))
         .where(F.col("token") != "")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     # select WHICH tokens first (tiny top-k over counts), and only then
     # build posting lists for those — collecting a posting list per
@@ -3991,13 +3989,12 @@ def q_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         # one mapInPandas job (same argmax, same min-doc_id
         # tie-break); result rows come back as the frame. Above the
         # cap the distributed per-round loop below runs unchanged.
-        out = (
+        out = cut(
             tok.repartition(1)
             .mapInPandas(
                 _coverage_greedy_local(COVERAGE_K),
                 "sel_order long, doc_id long, gain long, cum_coverage long",
             )
-            .localCheckpoint(eager=True)
         )
         tok.unpersist()
         return out

@@ -18,11 +18,12 @@ Scratch-table shape: every query below builds its table inside one
 ``tempfile.TemporaryDirectory`` scope, which is deleted when the query
 returns. Snapshots are read lazily by version number after the last
 commit (``TxTable.read`` resolves its file list when called, and no
-query here vacuums), and the returned frame is cut once with
-``localCheckpoint(eager=True)`` as the last statement inside the scope,
-so the result never reads the deleted files. The IVM queries pin each
-refreshed view with the same eager cut; the metadata-only queries build
-their rows from the commit log and need no cut.
+query here vacuums), and the returned frame is cut once (an eager
+``session.cut``) as the last statement inside the scope, so the result
+never reads the deleted files. The IVM queries fold each refresh into
+the previous view's plan, which every refresh reads once, so the one
+result cut runs the whole chain; the metadata-only queries build their
+rows from the commit log and need no cut.
 """
 
 from __future__ import annotations
@@ -50,6 +51,7 @@ from sandbox_data_pipeline_spark.sinks.txlog import (
     restore,
     table_changes,
 )
+from sandbox_data_pipeline_spark.session import cut
 
 _K = 2000  # base slice: l_orderkey <= K (present at every SF)
 _D1, _D2 = 5_000, 9_999  # rid range deleted in commit v1
@@ -113,13 +115,15 @@ def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1).cast(qty_t).alias("qty"),
         )
         t.merge(upd.unionByName(new), "rid")
-        return reduce(
-            DataFrame.unionAll,
-            [
-                t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
-                for v in range(3)
-            ],
-        ).localCheckpoint(eager=True)
+        return cut(
+            reduce(
+                DataFrame.unionAll,
+                [
+                    t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
+                    for v in range(3)
+                ],
+            )
+        )
 
 
 _TIME_TRAVEL_SQL = f"""
@@ -169,18 +173,17 @@ def q_txlog_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) as tmp:
         t = TxTable.create(spark, f"{tmp}/tbl", s0)
         mv, ver = refresh_rollup(t, None, -1, "o_orderpriority", "price")
-        # pin each materialization (bounded: one row per priority)
-        mv = mv.localCheckpoint(eager=True)
         t.append(s1)
         mv, ver = refresh_rollup(t, mv, ver, "o_orderpriority", "price")
-        mv = mv.localCheckpoint(eager=True)
         t.append(s2)
         mv, ver = refresh_rollup(t, mv, ver, "o_orderpriority", "price")
-        return mv.select(
-            "o_orderpriority",
-            F.col("total").cast("decimal(18,2)").alias("total_price"),
-            F.col("n").cast("long").alias("n_orders"),
-        ).localCheckpoint(eager=True)
+        return cut(
+            mv.select(
+                "o_orderpriority",
+                F.col("total").cast("decimal(18,2)").alias("total_price"),
+                F.col("n").cast("long").alias("n_orders"),
+            )
+        )
 
 
 _TXLOG_IVM_SQL = """
@@ -207,13 +210,15 @@ def q_restore(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = TxTable.create(spark, f"{tmp}/tbl", base.repartitionByRange(4, "rid"))
         t.delete_where("rid", _D1, _D2)
         restore(t, 0)
-        return reduce(
-            DataFrame.unionAll,
-            [
-                t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
-                for v in range(3)
-            ],
-        ).localCheckpoint(eager=True)
+        return cut(
+            reduce(
+                DataFrame.unionAll,
+                [
+                    t.read(version=v).agg(F.lit(v).alias("version"), *_totals())
+                    for v in range(3)
+                ],
+            )
+        )
 
 
 _RESTORE_SQL = f"""
@@ -253,14 +258,13 @@ def q_table_changes(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qty"),
         )
         t.merge(src, "rid")
-        return (
+        return cut(
             table_changes(t, 0, 1)
             .groupBy(
                 F.col("_commit_version").alias("commit_version"),
                 F.col("_change_type").alias("change_type"),
             )
             .agg(*_totals())
-            .localCheckpoint(eager=True)
         )
 
 
@@ -305,15 +309,17 @@ def q_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("qty"),
         )
         replace_where(t, fresh, "hr", 1, 1)
-        return reduce(
-            DataFrame.unionAll,
-            [
-                t.read(version=v)
-                .groupBy(F.lit(v).alias("version"), "hr")
-                .agg(*_totals())
-                for v in range(2)
-            ],
-        ).localCheckpoint(eager=True)
+        return cut(
+            reduce(
+                DataFrame.unionAll,
+                [
+                    t.read(version=v)
+                    .groupBy(F.lit(v).alias("version"), "hr")
+                    .agg(*_totals())
+                    for v in range(2)
+                ],
+            )
+        )
 
 
 _REPLACE_WHERE_SQL = f"""
@@ -361,11 +367,10 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.add_columns([("src", "string")])
         t.append(extra.select("rid", "qty", "src"))
         final = t.read()
-        return (
+        return cut(
             _phase(t.read(version=0), "v0")
             .unionAll(_phase(final.where(F.col("src").isNull()), "final_backfilled"))
             .unionAll(_phase(final.where(F.col("src").isNotNull()), "final_appended"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -436,7 +441,7 @@ def q_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         final = t.read()
-        return (
+        return cut(
             _phase(t.read(version=0), "v0")  # pre-rename name time-travels
             .unionAll(_phase(t.read(version=v_renamed), "post_rename", "quantity"))
             .unionAll(
@@ -445,7 +450,6 @@ def q_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(
                 _phase(final.where(F.col("src") == "readd"), "final_src_readd", "quantity")
             )
-            .localCheckpoint(eager=True)
         )
 
 
@@ -520,10 +524,9 @@ def q_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
 
-        return (
+        return cut(
             summarize(t.read(version=0), "v0")
             .unionAll(summarize(t.read(), "updated"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -611,7 +614,7 @@ def q_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(qcol).cast("long").alias("sum_q"),
             )
 
-        return (
+        return cut(
             tot(t.read(version=0), "v0", "qty")
             .unionAll(tot(t.read(version=v_upd), "updated", "quantity"))
             .unionAll(tot(vm, "merged_all", "quantity"))
@@ -622,7 +625,6 @@ def q_lakehouse_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
                 tot(vm.where(F.col("grade").isNull()), "merged_nullgrade", "quantity")
             )
             .unionAll(tot(t.read(), "post_optimize", "quantity"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -706,7 +708,7 @@ def q_check_constraint(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("qty").cast("decimal(18,2)").alias("max_qty"),
             F.sum("qty").cast("decimal(18,2)").alias("sum_qty"),
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
 
 
 _CHECK_CONSTRAINT_SQL = f"""
@@ -758,10 +760,9 @@ def q_position_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(int(rewrite_adds)).alias("rewrite_adds"),
             )
 
-        return (
+        return cut(
             summarize(t.read(version=0), "v0")
             .unionAll(summarize(t.read(), "final"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -817,11 +818,10 @@ def q_table_branch(spark: SparkSession, sf_dir: str) -> DataFrame:
         br.append(b)
         t.append(c)  # parent advances independently (append-only)
         publish_branch(t, "wap")
-        return (
+        return cut(
             _phase(read_tag(t, "initial"), "tag_initial")
             .unionAll(_phase(br.read(), "branch"))
             .unionAll(_phase(t.read(), "main_published"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -857,9 +857,9 @@ def q_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     mart over fact ⋈ customer is refreshed from the fact table's
     row-level change feed — an append (+delta) AND a ranged delete
     (−delta), which the append-only rollup IVM cannot compose. Each
-    refresh reads only the commits since the last one; the pinned MV
-    between steps proves the final frame came from delta folding, not
-    recompute. The oracle joins the surviving fact rows directly."""
+    refresh reads only the commits since the last one, and the final
+    frame's plan is that chain of delta folds. The oracle joins the
+    surviving fact rows directly."""
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -876,17 +876,17 @@ def q_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         args = ("o_custkey", "c_custkey", "c_mktsegment", "price")
         mv, ver = refresh_join_rollup(t, dim, *args, mv=None, last_version=-1)
-        mv = mv.localCheckpoint(eager=True)
         t.append(s1)
         mv, ver = refresh_join_rollup(t, dim, *args, mv=mv, last_version=ver)
-        mv = mv.localCheckpoint(eager=True)
         t.delete_where("o_orderkey", _JI_D1, _JI_D2)
         mv, ver = refresh_join_rollup(t, dim, *args, mv=mv, last_version=ver)
-        return mv.select(
-            "c_mktsegment",
-            F.col("total").cast("decimal(18,2)").alias("total_price"),
-            F.col("n").cast("long").alias("n_orders"),
-        ).localCheckpoint(eager=True)
+        return cut(
+            mv.select(
+                "c_mktsegment",
+                F.col("total").cast("decimal(18,2)").alias("total_price"),
+                F.col("n").cast("long").alias("n_orders"),
+            )
+        )
 
 
 _JOIN_IVM_SQL = f"""
@@ -1001,8 +1001,7 @@ def q_sketch_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle re-sketches the WHOLE data in one pass — a hash match proves
     the sketch algebra is exactly associative end-to-end (the
     percentile-dashboard pattern: a day of appends costs a day's
-    sketch, never a rescan). Sketches are localCheckpoint-pinned
-    between refreshes, mirroring a real MV materialization."""
+    sketch, never a rescan)."""
     from sandbox_data_pipeline_spark.operators.sketch import dd_quantiles
 
     li = table(spark, sf_dir, "lineitem").select(
@@ -1017,21 +1016,21 @@ def q_sketch_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, f"{tmp}/t", li.where("l_orderkey % 3 = 0").drop("l_orderkey")
         )
         sk, ver = refresh_dd_sketch(t, None, -1, "grp", "cents")
-        sk = sk.localCheckpoint(eager=True)
         t.append(li.where("l_orderkey % 3 = 1").drop("l_orderkey"))
         sk, ver = refresh_dd_sketch(t, sk, ver, "grp", "cents")
-        sk = sk.localCheckpoint(eager=True)
         t.append(li.where("l_orderkey % 3 = 2").drop("l_orderkey"))
         sk, ver = refresh_dd_sketch(t, sk, ver, "grp", "cents")
         out = dd_quantiles(sk, [(1, 2), (9, 10), (99, 100)])
-        return out.select(
-            F.col("grp").alias("l_linestatus"),
-            "n_rows",
-            F.col("n_buckets").cast("int").alias("n_buckets"),
-            F.col("q_1_2").alias("p50_cents"),
-            F.col("q_9_10").alias("p90_cents"),
-            F.col("q_99_100").alias("p99_cents"),
-        ).localCheckpoint(eager=True)
+        return cut(
+            out.select(
+                F.col("grp").alias("l_linestatus"),
+                "n_rows",
+                F.col("n_buckets").cast("int").alias("n_buckets"),
+                F.col("q_1_2").alias("p50_cents"),
+                F.col("q_9_10").alias("p90_cents"),
+                F.col("q_99_100").alias("p99_cents"),
+            )
+        )
 
 
 _SKETCH_IVM_SQL = """
@@ -1256,7 +1255,7 @@ def q_merge_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("rid").alias("min_rid"),
             F.max("rid").alias("max_rid"),
         )
-        return out.localCheckpoint(eager=True)
+        return cut(out)
 
 
 _MERGE_CONDITIONAL_SQL = f"""

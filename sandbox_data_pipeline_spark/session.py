@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Confs that matter at 100 TB and are harmless at sf0.001:
 #  - AQE re-plans post-shuffle: coalesces tiny partitions, splits skewed
@@ -83,6 +83,43 @@ def local_cpus() -> int:
     ``taskset`` narrows below the host's core count)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+def cut(df: DataFrame, eager: bool = True) -> DataFrame:
+    """The engine's one lineage cut: materialize ``df`` and return a
+    frame whose plan starts from those rows.
+
+    Cut only a frame that is read more than once, that a loop re-reads
+    (each round builds on the last, so an uncut lineage recomputes every
+    earlier round), or that a read-modify-write is about to overwrite
+    (the rows must be read before their source files are replaced). A
+    frame its consumer reads once needs no cut: the consumer's plan
+    computes it in the same job. ``eager`` runs the job now; a lazy cut
+    is materialized by the first action that reads it, and other reads
+    inside that same action may compute it again.
+
+    Durability follows Spark's own setting. With a checkpoint directory
+    (``spark.checkpoint.dir`` or ``SparkContext.setCheckpointDir``, on a
+    cluster a shared HDFS/S3 path) the cut is ``checkpoint``: files that
+    survive losing an executor, cleaned when the frame is garbage
+    collected if ``spark.cleaner.referenceTracking.cleanCheckpoints`` is
+    true. Without one (every local[n] run) it is ``localCheckpoint``:
+    blocks on the executor that computed them, released with the
+    lineage rather than pinned like ``persist()``, and lost with that
+    executor."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager)
+    return df.localCheckpoint(eager)
+
+
+def release_storage(spark: SparkSession) -> None:
+    """Drop cached tables and every persistent RDD (local cut blocks
+    included), so that what runs next does not depend on what ran
+    before it."""
+    spark.catalog.clearCache()
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+    while it.hasNext():
+        it.next()._2().unpersist(False)
 
 
 def get_spark(

@@ -132,8 +132,11 @@ class AddFile:
 class _State:
     """The table at one version: the fold of its log entries (see
     ``TxTable._state``). Latest entry wins for schema, mapping and
-    spec; constraints, position deletes, txn marks, physical names
-    and bloom indexes accumulate."""
+    spec; constraints, txn marks, physical names and bloom indexes
+    accumulate. A position-delete dir retires when a commit removes the
+    last file it touches, so a file that comes back returns without its
+    markers unless the commit re-adds them (``restore`` does, for the
+    version it restores)."""
 
     version: int = -1
     files: dict[str, AddFile] = field(default_factory=dict)
@@ -141,8 +144,8 @@ class _State:
     mapping: dict | None = None  # logical -> physical (None = off)
     spec: dict | None = None
     constraints: dict[str, str] = field(default_factory=dict)
-    pdel: list[str] = field(default_factory=list)  # position-delete dirs
-    pdel_files: set[str] = field(default_factory=set)  # files they touch
+    # position-delete dir -> the live files its markers touch
+    pdel: dict[str, set[str]] = field(default_factory=dict)
     txns: dict[str, int] = field(default_factory=dict)  # app -> max txn
     # every physical name any file may carry: each recorded schema
     # through the mapping in force at its commit
@@ -153,6 +156,11 @@ class _State:
         self.version = e["version"]
         for rem in e.get("remove", []):
             self.files.pop(rem, None)
+            for touched in self.pdel.values():
+                touched.discard(rem)
+        self.pdel = {d: fs for d, fs in self.pdel.items() if fs}
+        for d in e.get("pdel", []):
+            self.pdel[d] = set(e.get("pdel_files", []))
         for a in e.get("add", []):
             af = AddFile.from_json(a)
             self.files[af.path] = af
@@ -171,9 +179,6 @@ class _State:
             self.constraints.pop(c["name"], None)
         elif c:
             self.constraints[c["name"]] = c["sql"]
-        if e.get("pdel"):
-            self.pdel.extend(e["pdel"])
-            self.pdel_files.update(e.get("pdel_files", []))
         t = e.get("txn")
         if t:
             seen = self.txns.get(t["app_id"], t["txn_version"])
@@ -195,8 +200,7 @@ class _State:
             "column_mapping": self.mapping,
             "spec": self.spec,
             "constraints": self.constraints,
-            "pdel": self.pdel,
-            "pdel_files": sorted(self.pdel_files),
+            "pdel": {d: sorted(fs) for d, fs in self.pdel.items()},
             "txns": self.txns,
             "physical_names": sorted(self.physical_names),
             "blooms": self.blooms,
@@ -211,8 +215,7 @@ class _State:
             d["column_mapping"],
             d["spec"],
             d["constraints"],
-            d["pdel"],
-            set(d["pdel_files"]),
+            {k: set(fs) for k, fs in d["pdel"].items()},
             d["txns"],
             set(d["physical_names"]),
             d["blooms"],
@@ -334,8 +337,8 @@ class TxTable:
         """The table at ``version`` (default: latest): the one fold of
         the log, from the newest checkpoint ≤ version, so replay cost
         is bounded by CHECKPOINT_EVERY regardless of table age. A
-        checkpoint written before checkpoints held the whole state
-        (adds only) is skipped."""
+        checkpoint in an earlier format (adds only, or position deletes
+        not keyed by dir) is skipped."""
         if version is None:
             version = self.latest_version()
         st = _State()
@@ -343,7 +346,7 @@ class TxTable:
         if ckpt is not None:
             with open(self._checkpoint_path(ckpt), encoding="utf-8") as f:
                 snap = json.load(f)
-            if "schema" in snap:
+            if isinstance(snap.get("pdel"), dict):
                 st = _State.from_json(snap)
         for v in range(st.version + 1, version + 1):
             st.apply(self._read_entry(v))
@@ -559,10 +562,11 @@ class TxTable:
 
     # --------------------------------------------------------- commits
 
-    def _write_data(self, df: DataFrame, version_hint: int) -> list[AddFile]:
+    def _write_data(self, df: DataFrame, st: _State) -> list[AddFile]:
         """Write ``df`` as immutable parquet under a unique subdir and
         return AddFiles with footer stats, laid out by the column
-        mapping and partition spec at the log's tail. Executors write
+        mapping and partition spec of ``st``, the caller's state of the
+        version this write commits after. Executors write
         the data; the driver touches only footers. When a partition
         spec is active (Iceberg-style; see set_partition_spec), the
         write is hive-partitioned on the spec columns — a repartition
@@ -574,7 +578,6 @@ class TxTable:
         zero extra machinery."""
         from urllib.parse import unquote
 
-        st = self._state() if self._versions() else _State()
         mapping = st.mapping
         if mapping:
             # column-mapping active: files carry PHYSICAL names (the
@@ -587,7 +590,7 @@ class TxTable:
                     for f in df.schema.fields
                 ]
             )
-        sub = f"data/v{version_hint}-{uuid.uuid4().hex[:8]}"
+        sub = f"data/v{st.version + 1}-{uuid.uuid4().hex[:8]}"
         abs_dir = os.path.join(self.path, sub)
         spec = st.spec
         entries = spec["cols"] if spec else []
@@ -950,7 +953,7 @@ class TxTable:
         t = TxTable(spark, path)
         if os.path.isdir(t.log_path) and t._versions():
             raise FileExistsError(f"table already exists at {path}")
-        adds = t._write_data(df, 0)
+        adds = t._write_data(df, _State())
         t._commit("create", adds, [], None, schema_json=df.schema.json(), txn=txn)
         return t
 
@@ -972,13 +975,13 @@ class TxTable:
                 f"append schema mismatch: table has {exp_sig}, got {got_sig}"
             )
         self._enforce_constraints(st, df)
-        adds = self._write_data(df, st.version + 1)
+        adds = self._write_data(df, st)
         return self._commit("append", adds, [], st.version, txn=txn)
 
     def overwrite_all(self, df: DataFrame, txn: tuple[str, int] | None = None) -> int:
         st = self._state()
         self._enforce_constraints(st, df)
-        adds = self._write_data(df, st.version + 1)
+        adds = self._write_data(df, st)
         return self._commit(
             "overwrite",
             adds,
@@ -1140,7 +1143,7 @@ class TxTable:
             survivors = self._scan(st, touched).where(
                 ~F.col(col).between(F.lit(lo), F.lit(hi))
             )
-            adds = self._write_data(survivors, st.version + 1)
+            adds = self._write_data(survivors, st)
         v = self._commit(
             "delete",
             adds,
@@ -1189,7 +1192,7 @@ class TxTable:
                 ).otherwise(F.col(set_col)),
             )
             self._enforce_constraints(st, updated)
-            adds = self._write_data(updated, st.version + 1)
+            adds = self._write_data(updated, st)
         v = self._commit(
             "update",
             adds,
@@ -1342,7 +1345,7 @@ class TxTable:
         # violation. One bounded aggregate over the rewritten frame
         # (scoped to touched files + source, not the table).
         self._enforce_constraints(st, merged)
-        adds = self._write_data(merged, st.version + 1)
+        adds = self._write_data(merged, st)
         return self._commit(
             "merge",
             adds,
@@ -1577,10 +1580,9 @@ def _refuse_active_pdels(t: "TxTable", op: str) -> None:
     """A position-delete commit is ACTIVE while any data file it
     touched is still in the current snapshot (metadata-only check —
     the touched paths are recorded in the commit); once a rewrite
-    (optimize) supersedes those files the markers are inert and every
+    (optimize) supersedes those files the markers retire and every
     operation composes again."""
-    st = t._state()
-    if st.pdel_files & st.files.keys():
+    if t._state().pdel:
         raise ValueError(
             f"{op} with active position deletes would silently drop or "
             "resurrect rows; run optimize(t) first (it reads through the "
@@ -1638,7 +1640,7 @@ def optimize(
     else:
         first = df.columns[0]
         df = df.repartitionByRange(num_files, first).sortWithinPartitions(first)
-    adds = t._write_data(df, st.version + 1)
+    adds = t._write_data(df, st)
     v = t._commit("optimize", adds, sorted(f.path for f in files), st.version)
     return {"version": v, "files_before": len(files), "files_after": len(adds)}
 
@@ -1808,7 +1810,8 @@ def restore(t: TxTable, version: int) -> int:
     tail = t.latest_version()
     if not 0 <= version <= tail:
         raise ValueError(f"version {version} outside 0..{tail}")
-    target = t.snapshot(version)
+    st = t._state(version)
+    target = st.files
     current = t.snapshot(tail)
     missing = [f.path for f in target.values() if not os.path.exists(t._abs(f))]
     if missing:
@@ -1818,7 +1821,12 @@ def restore(t: TxTable, version: int) -> int:
         )
     adds = [target[p] for p in sorted(target.keys() - current.keys())]
     removes = sorted(current.keys() - target.keys())
-    return t._commit("restore", adds, removes, tail)
+    # the target's position deletes come back with the files they touch
+    # (the current snapshot has none active, or the refusal above fired)
+    return t._commit(
+        "restore", adds, removes, tail,
+        pdel=sorted(st.pdel), pdel_files=sorted(set().union(*st.pdel.values())),
+    )
 
 
 def _rebased(f: AddFile, owner: TxTable) -> AddFile:
@@ -1967,7 +1975,7 @@ def replace_where(
     touched = t._prune(st, col, lo, hi)
     keep = t._scan(st, touched).where(~F.col(col).between(F.lit(lo), F.lit(hi)))
     incoming = df.select(*[f.name for f in st.struct().fields])
-    adds = t._write_data(keep.unionByName(incoming), st.version + 1)
+    adds = t._write_data(keep.unionByName(incoming), st)
     return t._commit(
         "replace_where",
         adds,

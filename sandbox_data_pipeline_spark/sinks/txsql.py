@@ -245,22 +245,19 @@ class TxSql:
         )
 
     def _do_detail(self, name: str) -> DataFrame:
-        t = self._t(name)
-        v = t.latest_version()
-        snap = t.snapshot(v)
-        spec = t.partition_spec_at(v)
-        mapping = t.column_mapping_at(v)
+        st = self._t(name)._state()
+        snap = st.files
         return self.spark.createDataFrame(
             [
                 (
-                    v,
+                    st.version,
                     len(snap),
                     int(sum(f.bytes for f in snap.values())),
                     int(sum(f.rows for f in snap.values())),
-                    ",".join(f.name for f in t.schema_at(v).fields),
-                    str(spec["cols"]) if spec else None,
-                    ",".join(sorted(t.constraints_at(v))) or None,
-                    str(mapping) if mapping else None,
+                    ",".join(f.name for f in st.struct().fields),
+                    str(st.spec["cols"]) if st.spec else None,
+                    ",".join(sorted(st.constraints)) or None,
+                    str(st.mapping) if st.mapping else None,
                 )
             ],
             "version int, n_files int, size_bytes long, n_rows long, "

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sandbox_data_pipeline_spark.session import cut
+
 RUN_HR_COL = "run_hr"
 
 
@@ -114,7 +116,7 @@ def compact_partitions(
     rows of each partition spread over that many output files via a
     deterministic salt. Returns total output file count.
 
-    In-place (dst_path=None) materializes through localCheckpoint to
+    In-place (dst_path=None) materializes through a lineage cut to
     break lineage from the files being overwritten — fine for per-hour
     compaction; for whole-table rewrites at 100 TB prefer dst_path +
     atomic rename so the job stays restartable."""
@@ -142,7 +144,7 @@ def compact_partitions(
     }
     df = spark.read.format(fmt).load(base_path)
     if dst_path is None:
-        df = df.localCheckpoint()
+        df = cut(df)
         dst_path = base_path
     salt_map = F.create_map(
         *[x for v, n in n_files.items() for x in (F.lit(v), F.lit(n))]

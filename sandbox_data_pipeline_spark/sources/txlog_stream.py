@@ -116,6 +116,8 @@ class TxLogStreamReader(DataSourceStreamReader):
         t = self._table()
         self._seen = max(self._seen, start["version"], end["version"])
         parts = []
+        # one fold: the state before the batch, then each entry applied
+        st = t._state(start["version"] - 1)
         for v in range(start["version"], end["version"]):
             e = t._read_entry(v)
             if e.get("remove") and not self.ignore_changes:
@@ -135,7 +137,8 @@ class TxLogStreamReader(DataSourceStreamReader):
                     "append-only stream cannot represent; run "
                     "optimize() to compact them first"
                 )
-            schema_v = t.schema_at(v)
+            st.apply(e)
+            schema_v = st.struct()
             for a in e.get("add", []):
                 # shallow-clone entries reference files by absolute base
                 parts.append(

@@ -27,7 +27,7 @@ A replayed micro-batch therefore rewrites byte-identical partitions:
 exactly-once publication on top of at-least-once delivery, the same
 discipline as streaming/hourly.py. On an engine with ACID table
 formats the read-modify-write would be a MERGE INTO; plain parquet
-needs the localCheckpoint lineage break before overwriting a path
+needs the lineage cut (session.cut) before overwriting a path
 that was just read.
 
 Reference parity: the reference has no changelog sources (its loads
@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from sandbox_data_pipeline_spark.operators.cdc import scd2_history
+from sandbox_data_pipeline_spark.session import cut
 
 __all__ = ["read_changelog_stream", "start_scd2_pipeline"]
 
@@ -106,17 +107,17 @@ def start_scd2_pipeline(
                 )
                 # bystander keys share a bucket but are not in this
                 # batch; their versions are rewritten verbatim
-                bystanders = cur.join(
-                    batch_keys, key_cols, "left_anti"
-                ).localCheckpoint(eager=True)
+                bystanders = cut(cur.join(batch_keys, key_cols, "left_anti"))
                 # affected keys: back to changelog form (one row per
                 # version; collapse-of-runs makes this lossless)
                 affected = cur.join(batch_keys, key_cols, "left_semi")
-                hist_rows = affected.select(
-                    *key_cols,
-                    *[F.col(f"valid_from_{c}").alias(c) for c in order_cols],
-                    *track_cols,
-                ).localCheckpoint(eager=True)
+                hist_rows = cut(
+                    affected.select(
+                        *key_cols,
+                        *[F.col(f"valid_from_{c}").alias(c) for c in order_cols],
+                        *track_cols,
+                    )
+                )
                 new_rows = batch_df.unionByName(hist_rows)
             except AnalysisException:
                 pass  # first batch: target does not exist yet

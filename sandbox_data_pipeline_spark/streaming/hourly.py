@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from sandbox_data_pipeline_spark.session import cut
+
 EVENT_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -122,7 +124,11 @@ def start_hourly_pipeline(
             merged = batch_df
             hours = [r[0] for r in batch_df.select("run_hr").distinct().collect()]
             try:
-                kept = (
+                # break lineage from sink_dir: the overwrite below
+                # must not be a read of the path it rewrites. The
+                # cut rows are aggregate rows for a handful
+                # of (hour, type) groups — tiny by construction.
+                kept = cut(
                     session.read.parquet(sink_dir)
                     # touched partitions only — prunes at the scan
                     .where(F.col("run_hr").isin(hours))
@@ -133,11 +139,6 @@ def start_hourly_pipeline(
                         "left_anti",
                     )
                     .select(*batch_df.columns)
-                    # break lineage from sink_dir: the overwrite below
-                    # must not be a read of the path it rewrites. The
-                    # checkpointed rows are aggregate rows for a handful
-                    # of (hour, type) groups — tiny by construction.
-                    .localCheckpoint(eager=True)
                 )
                 merged = batch_df.unionByName(kept)
             except AnalysisException:

@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 from sandbox_data_pipeline_spark.operators.text import quality_score
 from sandbox_data_pipeline_spark.streaming.hourly import first_seen_stream
+from sandbox_data_pipeline_spark.session import cut
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -335,9 +336,9 @@ def start_media_admission(
             mv0, ver0 = refresh_media_fingerprints(
                 t, state["mv"], state["ver"]
             )
-            state["mv"] = mv0.localCheckpoint()
+            state["mv"] = cut(mv0)
             state["ver"] = ver0
-        fps = fingerprint_frame(docs).localCheckpoint()  # one batch decode
+        fps = cut(fingerprint_frame(docs))  # one batch decode
         bh = _halves(fps)
         rejected = s.createDataFrame([], "media_id long")
         if state["mv"] is not None:
@@ -374,11 +375,11 @@ def start_media_admission(
         else:
             t.append(admitted)
         mv, ver = refresh_media_fingerprints(t, state["mv"], state["ver"])
-        state["mv"] = mv.localCheckpoint()
+        state["mv"] = cut(mv)
         state["ver"] = ver
         if manifest_dir is not None:
             # the queryable manifest artifact (small fingerprint rows);
-            # safe to overwrite from the localCheckpoint-pinned frame
+            # safe to overwrite from the cut frame
             state["mv"].write.mode("overwrite").parquet(manifest_dir)
 
     stream = spark.readStream.schema(DOC_STREAM_SCHEMA).json(source_dir)

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sandbox_data_pipeline_spark.streaming.ingest import DOC_STREAM_SCHEMA
+from sandbox_data_pipeline_spark.session import cut
 
 
 def token_counts_stream(
@@ -83,7 +84,7 @@ def start_trending_pipeline(
             merged = batch_df
             hours = [r[0] for r in batch_df.select("run_hr").distinct().collect()]
             try:
-                kept = (
+                kept = cut(
                     session.read.parquet(sink_dir)
                     .where(F.col("run_hr").isin(hours))
                     .join(
@@ -92,7 +93,6 @@ def start_trending_pipeline(
                         "left_anti",
                     )
                     .select(*batch_df.columns)
-                    .localCheckpoint(eager=True)
                 )
                 merged = batch_df.unionByName(kept)
             except AnalysisException:

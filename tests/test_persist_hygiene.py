@@ -8,12 +8,12 @@ Two gates:
 1. STATIC balance: every function in the package that calls
    ``.persist(`` must also call ``unpersist`` (AST-walked, no
    allowlist — the package's pattern for lazily-returned
-   materializations is localCheckpoint, which releases with lineage,
+   materializations is ``session.cut``, which releases with lineage,
    never a bare persist).
 2. RUNTIME: after building AND collecting each persist-using registry
-   query at sf0.001, no persistent RDD remains except localCheckpoint
-   blocks (which are pinned by the returned frame's lineage and
-   released with it — the documented q_inverted_index discipline).
+   query at sf0.001, no persistent RDD remains except local cut blocks
+   (which are pinned by the returned frame's lineage and released with
+   it).
 """
 
 from __future__ import annotations
@@ -51,7 +51,7 @@ def test_every_persist_has_an_unpersist():
                 bad.append(f"{path.name}:{node.lineno} {node.name}")
     assert bad == [], (
         "functions persist() without a matching unpersist (use "
-        "localCheckpoint for lazily-returned materializations): "
+        "session.cut for lazily-returned materializations): "
         + ", ".join(bad)
     )
 
@@ -67,18 +67,12 @@ def _lingering_non_checkpoint_rdds(spark) -> list[str]:
     return out
 
 
-def _release_all(spark) -> None:
-    spark.catalog.clearCache()
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-    while it.hasNext():
-        it.next()._2().unpersist(False)
-
-
 @pytest.mark.parametrize("name", PERSIST_QUERIES)
 def test_no_lingering_cache_after_query(name, spark, sf_dir):
     from sandbox_data_pipeline_spark.queries import registry
+    from sandbox_data_pipeline_spark.session import release_storage
 
-    _release_all(spark)  # leftovers from earlier tests in the session
+    release_storage(spark)  # leftovers from earlier tests in the session
     qs, _ = registry()
     qs[name](spark, sf_dir).collect()
     assert _lingering_non_checkpoint_rdds(spark) == []

@@ -476,30 +476,71 @@ def test_other_materialization_sites_are_allowlisted():
     )
 
 
+def test_every_lineage_cut_goes_through_session_cut():
+    """One lineage cut: no ``localCheckpoint`` or ``checkpoint`` call in
+    the package, tools/ or bench.py outside ``session.cut``, so the
+    durability choice (Spark's checkpoint dir, else executor-local) is
+    made in one place."""
+    pkg = QUERY_DIR.parent
+    root = pkg.parent
+    paths = [*pkg.rglob("*.py"), *(root / "tools").rglob("*.py"), root / "bench.py"]
+    bad = []
+    for path in sorted(paths):
+        tree = ast.parse(path.read_text())
+        inside_cut = set()
+        if path == pkg / "session.py":
+            for fn in tree.body:
+                if isinstance(fn, ast.FunctionDef) and fn.name == "cut":
+                    inside_cut = {id(n) for n in ast.walk(fn)}
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr in ("localCheckpoint", "checkpoint")
+                and id(n) not in inside_cut
+            ):
+                bad.append(f"{path.relative_to(root)}:{n.lineno} .{n.func.attr}()")
+    assert bad == [], f"lineage cuts that bypass session.cut: {bad}"
+
+
 def test_scratch_table_queries_cut_only_their_result():
     """The scratch-table queries (queries/txlog.py, queries/layout.py)
     scope their table with ``tempfile.TemporaryDirectory`` and cut only
-    the frame they return: no mkdtemp/rmtree pair to keep in step, and
-    no eager cut of a snapshot read (``t.read(...).localCheckpoint()``)
-    that the result's own cut reads again. Snapshots are read lazily
-    by version instead."""
+    the frame they return: no mkdtemp/rmtree pair to keep in step, at
+    most one cut per function, and no cut of a snapshot read
+    (``cut(t.read(...))`` or ``t.read(...).localCheckpoint()``) that the
+    result's own cut reads again. Snapshots are read lazily by version
+    instead."""
+
+    def is_read(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "read"
+        )
+
     bad = []
     for rel in ("queries/txlog.py", "queries/layout.py"):
         tree = ast.parse((QUERY_DIR.parent / rel).read_text())
         for n in ast.walk(tree):
+            if isinstance(n, ast.FunctionDef):
+                cuts = [
+                    c.lineno
+                    for c in ast.walk(n)
+                    if isinstance(c, ast.Call) and getattr(c.func, "id", "") == "cut"
+                ]
+                if len(cuts) > 1:
+                    bad.append(f"{rel}:{n.lineno} {n.name} cuts {len(cuts)} times")
             if not isinstance(n, ast.Call):
                 continue
             f = n.func
             name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
             if name in ("mkdtemp", "rmtree"):
                 bad.append(f"{rel}:{n.lineno} {name}()")
-            elif (
-                name == "localCheckpoint"
-                and isinstance(f.value, ast.Call)
-                and isinstance(f.value.func, ast.Attribute)
-                and f.value.func.attr == "read"
-            ):
+            elif name == "localCheckpoint" and is_read(f.value):
                 bad.append(f"{rel}:{n.lineno} .read(...).localCheckpoint()")
+            elif name == "cut" and n.args and is_read(n.args[0]):
+                bad.append(f"{rel}:{n.lineno} cut(.read(...))")
     assert bad == [], f"scratch-table queries off their one shape: {bad}"
 
 

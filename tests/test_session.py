@@ -39,3 +39,53 @@ def test_repeat_pass_is_served_from_codegen_cache(spark, sf_dir):
 
     pass_compiles()
     assert pass_compiles() <= REPEAT_COMPILES_MAX
+
+
+RELIABLE_RUN = """
+import json, sys
+from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS
+from sandbox_data_pipeline_spark.queries.dedup import q_pagerank_dups
+from sandbox_data_pipeline_spark.session import get_spark
+from tools._normalize import value_hash
+
+LOCAL_CAPS.update(dict.fromkeys(LOCAL_CAPS, 0))
+spark = get_spark("reliable-cut", extra_conf={"spark.checkpoint.dir": sys.argv[1]})
+df = q_pagerank_dups(spark, sys.argv[2])
+rows = df.collect()
+it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
+local = 0
+while it.hasNext():
+    local += bool(it.next()._2().isLocallyCheckpointed())
+print(json.dumps({"hash": value_hash(df.columns, rows), "local": local}))
+"""
+
+
+def test_cut_is_reliable_under_a_checkpoint_dir(spark, sf_dir, local_caps, tmp_path):
+    """With ``spark.checkpoint.dir`` set, every cut writes checkpoint
+    files there and none is executor-local, and the distributed graph
+    loop gives the same values as in local mode. A fresh process: a
+    checkpoint dir outlives ``stop()`` within one Python process."""
+    import json
+    import subprocess
+    import sys
+
+    from sandbox_data_pipeline_spark.operators.local_solve import LOCAL_CAPS
+    from sandbox_data_pipeline_spark.queries.dedup import q_pagerank_dups
+    from tools._normalize import value_hash
+
+    local_caps(**dict.fromkeys(LOCAL_CAPS, 0))
+    df = q_pagerank_dups(spark, sf_dir)
+    local_hash = value_hash(df.columns, df.collect())
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYSPARK_SUBMIT_ARGS"}
+    env.update(PYTHONPATH=repo, SPARK_GRAFT_CPUS="2")
+    ckpt = tmp_path / "ckpt"
+    out = subprocess.run(
+        [sys.executable, "-c", RELIABLE_RUN, str(ckpt), sf_dir],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    assert got == {"hash": local_hash, "local": 0}
+    assert any(files for _, _, files in os.walk(ckpt))

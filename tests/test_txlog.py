@@ -299,7 +299,7 @@ def test_optimize_concurrent_append_survives(spark, tmp_path):
     snap = sorted(t.snapshot(rv).keys())
     # an append lands between optimize's read and its commit
     t.append(spark.createDataFrame([(1000, 1)], "k long, v long"))
-    adds = t._write_data(t.spark.createDataFrame([], t.schema_at(rv)), 99)
+    adds = t._write_data(t.spark.createDataFrame([], t.schema_at(rv)), t._state(rv))
     v = t._commit("optimize", adds, snap, read_version=rv)
     assert v == 2  # retargeted past the append, no conflict
     # appended row still visible (its file was not superseded)
@@ -383,6 +383,22 @@ def test_restore_refuses_vacuumed_target(spark, tmp_path):
 
     with _pt.raises(FileNotFoundError, match="vacuumed"):
         restore(t, 0)
+
+
+def test_restore_around_a_compacted_position_delete(spark, tmp_path):
+    """optimize retires the position deletes it compacts away, so a
+    restore to before them brings every row back, and a restore to the
+    delete's own version brings its markers back with its files."""
+    from sandbox_data_pipeline_spark.sinks.txlog import optimize, restore
+
+    t = _mk(spark, tmp_path)  # v0: 100 rows
+    v_del = t.delete_where_positional("k", 10, 19)["version"]
+    optimize(t)
+    restore(t, 0)
+    assert t.read().count() == t.read(version=0).count() == 100
+    restore(t, v_del)
+    assert t.read().count() == t.read(version=v_del).count() == 90
+    assert t.read().where(F.col("k").between(10, 19)).count() == 0
 
 
 def test_stream_reader_throttles_versions(spark, tmp_path):

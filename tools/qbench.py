@@ -31,19 +31,13 @@ def main() -> int:
 
     from sandbox_data_pipeline_spark.plans.flagship import flagship_query
     from sandbox_data_pipeline_spark.queries import registry
-    from sandbox_data_pipeline_spark.session import get_spark
+    from sandbox_data_pipeline_spark.session import get_spark, release_storage
 
     spark = get_spark("qbench")
     spark.sparkContext.setLogLevel("ERROR")
     queries, _ = registry()
 
     flagship_query(spark, args.sf).write.format("noop").mode("overwrite").save()
-
-    def release_storage() -> None:
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
 
     for name in args.names:
         if name == "flagship":
@@ -60,7 +54,7 @@ def main() -> int:
                 df = build()
                 df.write.format("noop").mode("overwrite").save()
                 reps.append(time.time() - t0)
-                release_storage()
+                release_storage(spark)
             if args.plan:
                 os.makedirs(args.plan, exist_ok=True)
                 df = build()
@@ -69,7 +63,7 @@ def main() -> int:
                     df.explain("formatted")
                 with open(os.path.join(args.plan, f"{name}_plan.txt"), "w") as f:
                     f.write(buf.getvalue())
-                release_storage()
+                release_storage(spark)
             print(
                 f"{name}: min={min(reps):.3f}s reps="
                 + ",".join(f"{r:.3f}" for r in reps),
@@ -77,7 +71,7 @@ def main() -> int:
             )
         except Exception as e:  # noqa: BLE001
             print(f"{name}: ERROR {type(e).__name__}: {e}", flush=True)
-            release_storage()
+            release_storage(spark)
     spark.stop()
     return 0
 

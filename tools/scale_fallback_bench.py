@@ -76,7 +76,7 @@ def main() -> None:
     ap.add_argument("--queries", nargs="*", default=None)
     args = ap.parse_args()
 
-    from sandbox_data_pipeline_spark.session import get_spark
+    from sandbox_data_pipeline_spark.session import get_spark, release_storage
     from tools.blowup_stress import build_blowup
 
     spark = get_spark(f"scale-fallback-{args.mode}")
@@ -101,12 +101,6 @@ def main() -> None:
     results = {}
     names = args.queries or QUERIES
 
-    def release():
-        spark.catalog.clearCache()
-        it = spark.sparkContext._jsc.sc().getPersistentRDDs().iterator()
-        while it.hasNext():
-            it.next()._2().unpersist(False)
-
     for name in names:
         spark.sparkContext.setJobDescription(f"{args.mode}:{name}")
         t0 = time.time()
@@ -121,7 +115,7 @@ def main() -> None:
             print(json.dumps({"query": name, "mode": args.mode,
                               "error": f"{type(e).__name__}: {e}"[:300]}),
                   flush=True)
-        release()
+        release_storage(spark)
 
     if not args.queries or "q_dedup_clusters" in names:
         stats: dict = {}

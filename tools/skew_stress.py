@@ -136,7 +136,7 @@ def run_variant(spark, fact, dim, variant: str) -> tuple[float, bool]:
 
 
 def main() -> int:
-    from sandbox_data_pipeline_spark.session import get_spark
+    from sandbox_data_pipeline_spark.session import cut, get_spark
 
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     reps = 2
@@ -145,13 +145,13 @@ def main() -> int:
     sf_dir = args[0] if args else "/root/testdata/sf0.1"
     spark = get_spark()
     fact, dim = skewed_frames(spark, sf_dir)
-    # 16 map partitions BEFORE the checkpoint: AQE's skew split can
+    # 16 map partitions BEFORE the cut: AQE's skew split can
     # only cut a skewed reduce partition along MAP-block boundaries
     # (measured: a single-mapper shuffle is unsplittable — the rule
     # logs the partition as skewed-eligible but creates no split spec;
     # at 100 TB mappers are plentiful, on a one-file test rig they are
-    # not). The checkpoint then isolates join cost from the scan.
-    fact = fact.repartition(16).localCheckpoint(eager=True)
+    # not). The cut then isolates join cost from the scan.
+    fact = cut(fact.repartition(16))
     n = fact.count()
     hot = fact.where(F.col("k") == 0).count()
     result = {"sf_dir": sf_dir, "rows": n, "hot_share": round(hot / n, 4)}
